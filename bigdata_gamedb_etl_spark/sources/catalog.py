@@ -1,10 +1,17 @@
 """Table catalog: explicit schemas + readers for the driver testdata.
 
 The reference relies on ``inferSchema=True`` and then patches types with
-casts (reference: spark_eda.py:42-46).  The engine declares explicit
-``StructType`` schemas instead — deterministic, oracle-friendly, and the
-precondition for real scan-level column pruning and predicate pushdown
-on Parquet (SURVEY.md §4).
+casts (reference: spark_eda.py:42-46).  The engine declares one explicit
+``StructType`` per table in ``TABLE_SCHEMAS`` and reads every table with
+it (``spark.read.schema(...)``), so building a table's DataFrame starts
+no Spark job: Spark would otherwise run a schema-inference job over the
+parquet footers on every read.  The declared schema is also what the
+DuckDB oracles assume, and the scan keeps column pruning and predicate
+pushdown (SURVEY.md §4).  A declared column missing from the files
+would read as all-null, so ``table`` checks the first file's footer on
+the driver (pyarrow, no Spark job) and fails with a ``ValueError``.
+The one read that still infers is the legacy TIMESTAMP(NANOS) events
+generation, whose ``ts`` must surface as a long to be decoded.
 
 Parquet is the primary format (the reference's own data had a parquet
 twin — reference: .MISSING_LARGE_BLOBS:2); CSV/JSON readers are provided
@@ -139,6 +146,28 @@ def _first_parquet_file(path: str) -> str:
     return os.path.join(path, names[0])
 
 
+def _footer_schema(path: str):
+    """Driver-side pyarrow read of the parquet footer of `path` (first
+    file of a directory): no Spark job, no data pages touched, safe to
+    call at plan-build time at any scale."""
+    import pyarrow.parquet as pq
+
+    return pq.read_schema(_first_parquet_file(path))
+
+
+def _check_declared_columns(name: str, path: str) -> None:
+    """Fail fast when the files at `path` lack a column `TABLE_SCHEMAS`
+    declares for `name` — a declared-schema read would return it as
+    silent nulls."""
+    present = set(_footer_schema(path).names)
+    missing = [f.name for f in TABLE_SCHEMAS[name].fields if f.name not in present]
+    if missing:
+        raise ValueError(
+            f"table {name!r} at {path} lacks declared column(s) {missing} "
+            "(sources.catalog.TABLE_SCHEMAS)"
+        )
+
+
 def events_ts_unit(path: str) -> str:
     """Parquet-footer probe: the physical unit of the `events.ts`
     column ('ns', 'us', 'ms', 's').
@@ -148,12 +177,9 @@ def events_ts_unit(path: str) -> str:
     and streaming MUST decode identically, so both go through this one
     probe instead of each hard-coding generation knowledge (r4 broke
     exactly that way: the batch path was fixed for the regeneration and
-    the stream kept the nanos decode).  Footer-only read: no data pages
-    touched, safe to call at plan-build time at any scale.
+    the stream kept the nanos decode).  Footer-only read (`_footer_schema`).
     """
-    import pyarrow.parquet as pq
-
-    t = pq.read_schema(_first_parquet_file(path)).field("ts").type
+    t = _footer_schema(path).field("ts").type
     unit = getattr(t, "unit", None)
     # Plain int64 with no logical type: the legacy generation's
     # nanos-as-long encoding.
@@ -164,12 +190,13 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
     """Batch events reader — the ONE decode path (streaming mirrors it
     via the same `events_ts_unit` probe, streaming/windowed.py).
 
-    - MICROS/MILLIS files read natively as session-tz TIMESTAMP
-      (`inferTimestampNTZ.enabled=false`; no cast wrapper, so
-      scan-level predicate pushdown on `ts` is preserved).
-    - legacy NANOS (or unannotated int64) files read as nano-longs and
-      truncate to microseconds (identical to DuckDB/Arrow ns → µs
-      downcasting).
+    - MICROS/MILLIS files read with the declared events schema
+      (`TABLE_SCHEMAS["events"]`, session-tz TIMESTAMP `ts`; no Spark
+      job, no cast wrapper, so scan-level predicate pushdown on `ts` is
+      preserved).
+    - legacy NANOS (or unannotated int64) files read by inference as
+      nano-longs and truncate to microseconds (identical to DuckDB/Arrow
+      ns → µs downcasting).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
@@ -179,30 +206,38 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
-    return spark.read.parquet(path)
+    return spark.read.schema(TABLE_SCHEMAS["events"]).parquet(path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame (Parquet scan).
 
-    Parquet carries its own schema; Catalyst prunes columns and pushes
+    The scan is built with the declared `TABLE_SCHEMAS[name]`, so no
+    Spark job runs until an action; Catalyst prunes columns and pushes
     predicates into the scan for anything expressed declaratively on
-    top of this.
+    top of this.  Columns the files carry beyond the declared ones are
+    not read.  A declared column missing from the files raises
+    `ValueError` (footer check of the first file, on the driver); a
+    missing path raises Spark's `PATH_NOT_FOUND` as before.
 
     Timestamp normalization: the engine (and all driver evidence) is
     built on session-tz TIMESTAMP — `unix_micros`, `session_window`,
     and the DuckDB oracles all assume it.  Naive parquet timestamps
-    read natively as TIMESTAMP via `inferTimestampNTZ.enabled=false`;
-    `events.ts` additionally goes through the unit-probed
-    `read_events` (encodings vary across testdata generations).
+    read as the declared TIMESTAMP; `events.ts` additionally goes
+    through the unit-probed `read_events` (encodings vary across
+    testdata generations).
     """
     # Pin the session timezone: naive parquet timestamps must yield the
     # same date parts here as in DuckDB regardless of the host JVM's TZ.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        return read_events(spark, os.path.join(sf_dir, "events.parquet"))
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_events(spark, path)
+    else:
+        df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+    _check_declared_columns(name, path)
+    return df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

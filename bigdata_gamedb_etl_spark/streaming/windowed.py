@@ -26,13 +26,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-from ..sources.catalog import events_ts_unit, read_events
+from ..sources.catalog import TABLE_SCHEMAS, events_ts_unit, read_events
 
 # _running_totals (applyInPandasWithState fn) is module-level, so
 # cloudpickle would serialize it by REFERENCE and executor workers
@@ -41,26 +39,19 @@ from ..sources.catalog import events_ts_unit, read_events
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
-def _events_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
-
-
-#: Decoded schema every stream/batch consumer sees: ts is session-tz
-#: TIMESTAMP (current testdata generation writes TIMESTAMP(MICROS)).
-EVENTS_STREAM_SCHEMA = _events_schema(TimestampType())
+#: Decoded schema every stream/batch consumer sees: the catalog's
+#: declared events schema (ts is session-tz TIMESTAMP; the current
+#: testdata generation writes TIMESTAMP(MICROS)).
+EVENTS_STREAM_SCHEMA = TABLE_SCHEMAS["events"]
 #: Read-side schema for the legacy TIMESTAMP(NANOS) generation, which
-#: Spark only reads as long (catalog.py note); decoded to the schema
-#: above by `read_events_stream`.
-EVENTS_STREAM_SCHEMA_NANOS = _events_schema(LongType())
+#: Spark only reads as long (catalog.py note): the same schema with ts
+#: as LongType, decoded to the schema above by `read_events_stream`.
+EVENTS_STREAM_SCHEMA_NANOS = StructType(
+    [
+        StructField(f.name, LongType(), f.nullable) if f.name == "ts" else f
+        for f in EVENTS_STREAM_SCHEMA.fields
+    ]
+)
 
 #: Sanity bounds for decoded event time: the testdata era plus slack.
 #: A decode with the wrong unit lands 1000× off — epoch 1970 (too
@@ -122,15 +113,7 @@ def read_events_stream(
     )
 
 
-DOCUMENTS_STREAM_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
+DOCUMENTS_STREAM_SCHEMA = TABLE_SCHEMAS["documents"]
 
 
 def read_documents_stream(
@@ -694,7 +677,7 @@ def upsert_stream_to_parquet(
     def _merge_batch(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
         try:
-            current = s.read.parquet(target_path)
+            current = s.read.schema(schema).parquet(target_path)
         except Exception:
             current = s.createDataFrame([], schema)
         merged = upsert_latest(current, batch, keys=keys, order_col=order_col)

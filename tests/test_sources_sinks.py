@@ -1,6 +1,8 @@
 """Source/sink round-trips: CSV with embedded quotes (the reference's
 escape='\"' case — spark_eda.py:42), JSON, partitioned parquet with
-partition pruning, and the stage-3 mart pipeline end-to-end.
+partition pruning, and the stage-3 mart pipeline end-to-end; plus the
+catalog's declared-schema reads (no inference job, no schema drift,
+fail fast on a missing column).
 """
 
 from __future__ import annotations
@@ -13,7 +15,56 @@ from pyspark.sql import functions as F
 from bigdata_gamedb_etl_spark import plans
 from bigdata_gamedb_etl_spark.functions.cleaning import GAMES_SCHEMA
 from bigdata_gamedb_etl_spark.operators.marts import build_marts
-from bigdata_gamedb_etl_spark.sources.catalog import read_csv, read_json, table, write_parquet
+from bigdata_gamedb_etl_spark.sources.catalog import (
+    TABLE_NAMES,
+    TABLE_SCHEMAS,
+    read_csv,
+    read_events,
+    read_json,
+    table,
+    write_parquet,
+)
+
+
+def test_catalog_reads_start_no_spark_job(spark, sf_dir):
+    # Every table is read with its declared schema, so building the
+    # DataFrames runs no schema-inference job.
+    sc = spark.sparkContext
+    group = "catalog-declared-schema-reads"
+    sc.setJobGroup(group, group)
+    try:
+        dfs = [table(spark, sf_dir, n) for n in TABLE_NAMES]
+        dfs.append(read_events(spark, os.path.join(sf_dir, "events.parquet")))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # control: an action under the same group is counted
+        dfs[0].count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_declared_schemas_match_inferred(spark, sf_dir):
+    # Schema-drift guard: the declared schema is exactly what Spark would
+    # infer from the files (names, types, nullability, column order).
+    def fields(schema):
+        return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for name in TABLE_NAMES:
+        inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        assert fields(table(spark, sf_dir, name).schema) == fields(inferred), name
+        assert fields(TABLE_SCHEMAS[name]) == fields(inferred), name
+
+
+def test_table_missing_declared_column_fails_fast(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}), path)
+    with pytest.raises(ValueError, match=r"'region'.*region\.parquet.*\['r_name'\]"):
+        table(spark, str(tmp_path), "region")
 
 
 def test_csv_roundtrip_with_quotes(spark, tmp_path):
