@@ -1,24 +1,34 @@
 #!/usr/bin/env python
-"""Benchmark harness: times the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line:
+"""Benchmark harness for the engine's headline queries.
+
+  python bench.py          time every HEADLINE query (best of 3) at
+                           $SPARK_GRAFT_SF_DIR (default: the sf0.1
+                           testdata), write BENCH_DETAIL.json and
+                           print ONE summary line
+  python bench.py probe    time every SCALE_PROBE_QUERIES family (best
+                           of 2) at $SPARK_GRAFT_SF_DIR and on a 10x
+                           replica slice, write BENCH_PROBE.json
+
+The summary line is one compact JSON object:
 
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {"<SHARED12 name>": sec, ...}, "sf": ...,
-   "testdata": {...}, "detail_file": "BENCH_DETAIL.json"}
+   "queries": {"<SHARED12 + scaling cohort name>": sec, ...},
+   "sf": ..., "testdata": {...}, "env": {...},
+   "detail_file": "BENCH_DETAIL.json"}
 
-The driver captures only the last ~2000 characters of stdout, so the
-stdout line carries the headline totals, the pinned SHARED12 series,
-and the testdata fingerprint ONLY (round-6 lesson: the full per-query
-dump outgrew the capture and BENCH_r06.parsed came back null).  The
-complete per-query EXTRAS timings, round-over-round deltas, and the
-10x scale probe are written to BENCH_DETAIL.json in the repo root,
-which is committed each round.  tests/test_harness_compat.py asserts
-a worst-case summary line stays under the capture budget.
+The harness that runs the bench captures only the last ~2000
+characters of stdout, so the line carries the headline totals, the
+pinned SHARED12 series plus the scaling cohort, and the testdata
+fingerprint ONLY; every query's three runs, CPU seconds and same-data
+deltas go to BENCH_DETAIL.json.
+tests/test_harness_compat.py pins the line's keys and asserts a
+worst-case line stays under the capture budget.
 
 Execution is forced with a `noop` sink (full computation, no
-driver-side result transfer), so timings measure scan+shuffle+agg —
-the things that matter at 100 TB — not Py4J serialization.
+driver-side result transfer), so timings measure scan+shuffle+agg, not
+Py4J serialization.  Every run also records process-tree CPU seconds:
+a wall delta with flat CPU is machine contention, matching CPU growth
+is a real plan or volume change.
 """
 
 from __future__ import annotations
@@ -28,7 +38,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from bigdata_gamedb_etl_spark.operators import multimodal
 from bigdata_gamedb_etl_spark.registry import all_queries
@@ -39,14 +50,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: the driver's stdout tail capture is 2000 chars; the summary line
 #: must stay comfortably inside it even with worst-case timing widths.
 SUMMARY_LINE_BUDGET = 1800
-DETAIL_FILE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-)
+DETAIL_FILE = os.path.join(_HERE, "BENCH_DETAIL.json")
+PROBE_FILE = os.path.join(_HERE, "BENCH_PROBE.json")
 
-#: SHARED12 is the round-1 headline set, pinned forever as the
-#: round-over-round comparable — its sum must never regress and stays
-#: attributable because the membership is frozen.  New rounds add hard
-#: shapes to EXTRAS instead of growing the comparable set.
+#: SHARED12 is the original headline set, pinned as the comparable
+#: series: its membership is frozen so its sum stays attributable.
+#: Hard shapes go to EXTRAS instead of growing the comparable set.
 SHARED12 = [
     "tpch_q1_pricing_summary",
     "a1_word_revenue",
@@ -62,126 +71,111 @@ SHARED12 = [
     "mm_feature_extract",
 ]
 
-#: the hard shapes added after round 1: aggregate-then-join (q18), the
-#: hardest TPC-H subquery shape (q21), iterative connected components,
-#: as-of and banded interval joins, sequence packing.  Round 5 adds the
-#: registry-served JSON twin of mm_feature_extract under its own series
-#: name so a perf regression in the SHIPPED implementation is visible
-#: (the SHARED12 "mm_feature_extract" series stays pinned to the typed
-#: variant it has always measured).
+#: The hard shapes.  "mm_feature_extract_json" times the registry's
+#: shipped mm_feature_extract; the SHARED12 series of that name stays
+#: pinned to the typed-array variant (see _bench_queries).
 EXTRAS = [
+    # aggregate-then-join and the hardest TPC-H subquery shape
     "tpch_q18_large_volume",
     "tpch_q21_sole_returned",
+    # iterative connected components, as-of and banded interval joins,
+    # sequence packing, the shipped multimodal twin
     "dedup_cluster_assign",
     "asof_purchase_click",
     "interval_error_click_burst",
     "pipeline_pack_sequences",
     "mm_feature_extract_json",
-    # round-5 heavies: corpus-wide shingle df join, one-pass moment
-    # matrix, four-key skew audit, OHLC downsampling, last-touch window
+    # corpus-wide shingle df join, one-pass moment matrix, four-key
+    # skew audit, OHLC downsampling, last-touch window
     "dedup_repeated_ngram_share",
     "stat_corr_matrix",
     "dq_key_skew_profile",
     "ts_ohlc_hourly",
     "attribution_last_touch",
-    # round-6 heavies: two-signal pair fusion (jaccard + GEMM), the
-    # source-grain contamination join, the 3-signal DQ union, the
-    # materialize-once wedge join, and fixed-point PageRank
+    # jaccard + GEMM pair fusion, source-grain contamination join, the
+    # 3-signal DQ union, the wedge join, fixed-point PageRank
     "dedup_semantic_fused_pairs",
     "dq_contamination_scorecard",
     "dq_quarantine_mart",
     "graph_2hop_reach",
     "graph_pagerank",
-    # round-6 late additions: per-user SCD2 windows, order-2 LM
-    # shuffle-join, posting-list containment, per-char entropy aggs
+    # per-user SCD2 windows, order-2 LM shuffle-join, posting-list
+    # containment, per-char entropy aggregates
     "mart_scd2_user_state",
     "text_bigram_logprob",
     "dedup_containment_pairs",
     "text_char_entropy",
-    # round-7 heavies: the keeper-aware emit mart (CC + quality +
-    # curriculum composition), SimHash Hamming-band LSH, SemDeDup
-    # within-cluster prune, the per-edge wedge+degree join, the bloom
-    # sketch audit, and the cluster-aware split
+    # keeper-aware emit mart, SimHash Hamming-band LSH, SemDeDup
+    # within-cluster prune, per-edge wedge+degree join, bloom sketch
+    # audit, cluster-aware split
     "pipeline_corpus_emit",
     "dedup_simhash_band_pairs",
     "sim_semdedup_prune",
     "graph_neighbor_jaccard",
     "dedup_bloom_prefilter",
     "pipeline_leakage_safe_split",
-    # round-8 heavies: the cross-split shingle-containment audit (CC +
-    # split hash + posting-list join) and the large-star/small-star CC
-    # (the O(log² n)-round variant of dedup_cluster_assign)
+    # cross-split shingle-containment audit, large-star/small-star CC
     "pipeline_split_contamination",
     "dedup_cluster_assign_star",
-    # round-8 late additions: the corpus-wide token-window hash-agg
-    # (substring-granular dedup signal) and the per-node ordered-wedge
-    # triangle join
+    # corpus-wide token-window hash-agg, ordered-wedge triangle join
     "text_repeated_spans",
     "graph_clustering_coeff",
-    # round-9: the cluster-emit simhash variant (signature-graph CC —
-    # the linear-output answer to pair-emit's replica pair-mass), the
-    # contraction-merge incremental CC, the nprobe recall ladder over
-    # one fitted codebook, and the cross-split LM-entropy join
+    # signature-graph CC, contraction-merge incremental CC, the nprobe
+    # recall ladder over one codebook, cross-split LM-entropy join
     "dedup_simhash_clusters",
     "dedup_incremental_cc",
     "sim_ivf_recall_curve",
     "text_split_xentropy",
-    # round-10 heavies: the per-jaccard-bin LSH recall curve (one
-    # signature table + nested-band flags), the 4-round self-vote LPA
-    # loop, and the integer-Lloyd IVF whose 6-round fit is part of the
-    # measured query
+    # per-jaccard-bin LSH recall curve, 4-round LPA, integer-Lloyd IVF
+    # with its fit inside the measured query
     "dedup_lsh_recall_by_jaccard",
     "graph_lpa_communities",
     "sim_ivf_int_topk",
-    # round-11: the composed IVFPQ tier — BOTH integer fits (6-round
-    # coarse Lloyd + 4-round joint PQ Lloyd) plus the probed-slice
-    # ADC scan inside the measured query
+    # composed IVFPQ: both integer fits plus the probed-slice ADC scan
     "sim_ivf_pq_topk",
-    # round-11 late additions: exact-substring cut spans (gram-df join
-    # + per-doc islands window), the mulmod-rebased CM sketch (the
-    # xxhash64→md5 flip gets its delta recorded like minhash's r10
-    # flip did), and the hand-rolled two-level HLL merge
+    # exact-substring cut spans, mulmod count-min sketch, two-level HLL
     "dedup_substring_spans",
     "sketch_cm_heavy_hitters",
     "sketch_hll_mulmod_merge",
-    # the lossless exact-Jaccard join (prefix filtering) — benched
-    # alongside its df-capped inverted-index twin so the cost of
-    # exactness is a recorded number, not a guess
+    # lossless prefix-filter Jaccard (twin of the df-capped index)
     "dedup_prefix_jaccard_pairs",
-    # content-defined chunking: per-doc array pipeline + one digest
-    # hash-agg — should sit near the linear text map-agg tier
+    # content-defined chunking: per-doc arrays + one digest hash-agg
     "dedup_cdc_chunks",
-    # the quantile histogram: one lineitem scan + bounded-bin agg —
-    # the cheapest shape in the sketch family, benched for the record
+    # quantile histogram: one lineitem scan + bounded-bin agg
     "sketch_logbin_quantiles",
-    # the cut list applied corpus-wide: spans derivation + struct-
-    # array collapse + per-doc array cut, whole corpus re-emitted
+    # the cut list applied corpus-wide
     "dedup_cut_spans_emit",
-    # k-core: 6 fixed peel rounds over the pair graph — the second
-    # bounded-round iterative join family member after LPA
+    # k-core: 6 fixed peel rounds over the pair graph
     "graph_kcore_membership",
-    # SNM blocking: one sharded sort window + lead() offsets
+    # sorted-neighborhood blocking: one sharded sort window + lead()
     "dedup_sorted_neighborhood_pairs",
     # temperature mixture: two tiny aggregates + one broadcast gate
     "pipeline_temperature_mixture",
-    # round-12: the residual IVFADC tier — the composed IVFPQ cost
-    # shape plus the per-cell residual fit (every PQ aggregation key
-    # widened by the cell) and the broadcast centroid subtraction
+    # residual IVFADC: composed IVFPQ plus the per-cell residual fit
     "sim_ivfpq_residual_topk",
 ]
 
 HEADLINE = SHARED12 + EXTRAS
 
-#: Scale-probe tier (r5 verdict item 4): the sub-quadratic claims of
-#: the dedup/ANN/graph family are argued from plan shape; this tier
-#: validates them EMPIRICALLY with one order-of-magnitude datapoint —
-#: each family query runs once at SF_DIR and once on a 10× replica
-#: slice, and the ratio is recorded (a linear family stays near the
-#: factor; a quadratic one lands near factor²).  Membership favors the
-#: family's distinct shapes over raw coverage to bound bench time:
-#: posting-list jaccard (ONE shuffle), banded MinHash LSH, shingle-df
-#: contamination, fixed-join graph, brute-force + LSH ANN, and the
-#: linear text map-agg as control.
+#: CPU-heavy queries shown in the summary line after SHARED12, so a
+#: low-core vs high-core comparison of the line measures parallelism
+#: (SHARED12 alone is scheduling-bound at sf0.1).  The harness parses
+#: the line: entries are only ever added, never removed or renamed.
+SCALING_COHORT = [
+    "sim_ivfpq_residual_topk",
+    "sim_ivf_pq_topk",
+    "pipeline_corpus_emit",
+    "dedup_simhash_clusters",
+]
+
+#: Scale-probe tier: each family runs at SF_DIR and on a
+#: SCALE_PROBE_FACTOR-times replica slice, and the ratio is recorded
+#: (a linear family's cpu_ratio stays near the factor; a quadratic one
+#: lands near factor²).  Membership favors the dedup/ANN/graph
+#: family's distinct shapes, with the linear text map-agg as control.
+#: sim_semdedup_prune is deliberately absent: its cluster count is
+#: fixed at the label cardinality, so a replica grows within-cluster
+#: pairs with the factor squared by design.
 SCALE_PROBE_QUERIES = [
     "text_stats",
     "dedup_ngram_jaccard_pairs",
@@ -190,206 +184,32 @@ SCALE_PROBE_QUERIES = [
     "graph_2hop_reach",
     "sim_cosine_topk",
     "sim_ann_lsh_topk",
-    # the iterative representative: O(component-diameter) rounds over a
-    # once-materialized edge list — diameter doesn't grow with corpus
-    # replication, so the probe isolates the per-round linear cost
+    # iterative: rounds track component diameter, which replication
+    # does not grow, so the probe isolates the per-round cost
     "dedup_cluster_assign",
-    # round-6 late heavies: posting-list containment (same one-shuffle
-    # claim as jaccard) and the order-2 LM whose model table grows with
-    # the corpus (the probe checks the shuffle join stays ~linear)
     "dedup_containment_pairs",
     "text_bigram_logprob",
-    # round-7: Hamming-band LSH — replica token-suffixing makes
-    # cross-replica band collisions ~random, so candidates should
-    # scale linearly like the MinHash bands.  (sim_semdedup_prune is
-    # deliberately NOT probed: its cluster count k is fixed at the
-    # label cardinality here, so a 10x replica grows clusters 10x and
-    # within-cluster pairs 100x BY DESIGN — at real scale k scales
-    # with the corpus, which the replica construction can't express.)
     "dedup_simhash_band_pairs",
-    # round-7 late: the bigram-df posting shape (novelty) and the
-    # broadcast bloom probe — both claimed linear, both new shapes
     "text_novelty_rate",
     "dedup_bloom_prefilter",
-    # round-8: the star-operation CC — same edge generator as
-    # dedup_cluster_assign, rounds bounded by O(log² n) instead of
-    # diameter, so its probe ratio should track min-label's
     "dedup_cluster_assign_star",
-    # round-9: cluster-emit simhash — output linear in corpus size, so
-    # its ratio should stay near the factor where pair-emit's is
-    # output-inflated (warmed best-of-2 at r9 build time: pairs 2.24,
-    # clusters 2.59 at factor 10, down from 9.59 before the
-    # signature-collapse rewrite)
     "dedup_simhash_clusters",
-    # round-10: the integer-Lloyd IVF — fixed rounds of integer-GEMM
-    # assignment + (cell, dim) aggregation over the train sample, all
-    # claimed linear in corpus size
     "sim_ivf_int_topk",
-    # round-11 (r10 verdict item 4): the three new heavies' scale
-    # claims get datapoints — the recall-by-jaccard curve's
-    # single-band-join rewrite (dedup.py docstring claims one
-    # loosest-setting self-join + flag aggregation), the band ladder
-    # (same nested-band theorem), and LPA's per-round degree-bounded
-    # join (rounds fixed, cost claimed linear in edges)
     "dedup_lsh_recall_by_jaccard",
     "dedup_lsh_band_ladder",
     "graph_lpa_communities",
-    # round-11 late: substring spans — claimed linear (gram-key df
-    # filter + one equi-join + per-doc window); the replica probe
-    # checks the duplicated-gram join doesn't inflate (replica
-    # suffixing keeps cross-replica grams distinct, so dup postings
-    # scale with the factor, not its square)
     "dedup_substring_spans",
-    # prefix-filter Jaccard: the claim is that df-ascending prefixes
-    # keep joined posting lists short WITHOUT a cap — the probe
-    # watches the prefix self-join under 10× replication (cross-
-    # replica shingles distinct → candidate mass should scale with
-    # the factor, like the inverted-index twin it must match)
     "dedup_prefix_jaccard_pairs",
-    # k-core: fixed peel rounds of survivor-restricted joins — the
-    # per-round cost is claimed linear in surviving edges, and
-    # replication grows edges with the factor (cross-replica edges
-    # don't exist), so the ratio should track LPA's
     "graph_kcore_membership",
-    # round-12 (r11 verdict item 1): the three remaining >4.5 s benched
-    # queries with linearity claims but no probe datapoint —
-    # the composed IVFPQ (docstring claims the encode stage is
-    # probed-slice-bounded: candidates scale with the corpus but the
-    # per-vector encode cost is constant), the emit mart (broadcast-
-    # anti-join over per-doc maps — every stage one corpus scan), and
-    # PageRank (fixed rounds over the once-materialized edge list,
-    # same claim family as LPA/k-core)
     "sim_ivf_pq_topk",
     "pipeline_corpus_emit",
     "graph_pagerank",
-    # and the r12 residual tier — same serving claim as the composed
-    # IVFPQ plus the per-cell fit's extra aggregation key
     "sim_ivfpq_residual_topk",
 ]
-SCALE_PROBE_FACTOR = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "10"))
-SCALE_PROBE_ENABLED = os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") != "0"
+SCALE_PROBE_FACTOR = 10
 
-#: Bench-set modes (r8 + r13):
-#:   all      (default) — the ADJUDICATING run: SHARED12 + EXTRAS_WATCH
-#:            every time, plus the stable EXTRAS tail on a 2-round
-#:            cadence (see the rotation note below); writes
-#:            BENCH_DETAIL.json with carryover for the untimed tail.
-#:   full     — every HEADLINE query + every probe family (the pre-r13
-#:            behavior; ~28-45 min wall, too long for a quiet window
-#:            on this steal-prone VM but available for a full table).
-#:   shared12 — fresh-JVM SHARED12-only diagnostic (r8): no probe, no
-#:            detail write; decides JVM-session-aging questions.
-#:   flagged  — fresh-JVM best-of-3 over EXTRAS_WATCH only (r12
-#:            verdict item 1): the minimal quiet-window adjudication
-#:            of the weak-flagged movers; prints timings + the quiet
-#:            verdict, does NOT touch BENCH_DETAIL.json.
-#:   probe    — the probe tier ALONE (this round's cohort + its stage
-#:            decompositions) in a fresh JVM, self-labeled over the
-#:            whole process window, written to BENCH_PROBE.json (r13:
-#:            inside an `all` run the probe window is the longest and
-#:            its steal check failed on every r12/r13 full run — this
-#:            mode gives the ratio tier its own quiet artifact without
-#:            re-paying the headline).  Does NOT touch
-#:            BENCH_DETAIL.json.
-BENCH_SET = os.environ.get("SPARK_GRAFT_BENCH_SET", "all")
-
-PROBE_FILE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "BENCH_PROBE.json"
-)
-
-#: r13 (r12 verdict items 1+5): the full 62-query best-of-3 headline
-#: plus the 26-family two-scale probe outgrew any realistic quiet
-#: window on this VM (r12 never landed a steal<1% full run in ~10
-#: attempts; the window needed is ~30-45 min and steal bursts arrive
-#: minute-to-minute).  The adjudicating run now times SHARED12 (the
-#: pinned round-over-round comparable) and EXTRAS_WATCH (every query
-#: changed this round or weak-flagged by the last verdict) EVERY run,
-#: and splits the stable EXTRAS tail into two deterministic
-#: index-parity cohorts timed on alternating rounds (_bench_rotor).
-#: Untimed queries carry their newest timing forward in
-#: BENCH_DETAIL.queries_carryover with an age counter, so no
-#: per-query series is lost and a changed query is never carried —
-#: by the registry's RECHECK rule it must be in EXTRAS_WATCH.
-EXTRAS_WATCH = [
-    # r15 watch drain: the r14 watch (broadcast sweep + IVF/PQ
-    # materialization + CC lazy-barrier cohort) was adjudicated by the
-    # r15-opening quiet-true BENCH_DETAIL on unchanged r14 HEAD (the
-    # artifact VERDICT r14 item 1 asked for; numbers in
-    # OPTIMIZATION_r15.md) and PRUNED back to the stable tail —
-    # except the queries re-changed or cohort-pinned below.
-    #
-    # r15 optimization sweep (registry RECHECK_CHANGED): every benched
-    # query whose execution changed this round rides the watch so its
-    # post-optimization series lands on a timed run, never a
-    # carryover — the recall curve's single-pass ladder, the fused
-    # encode+ADC serving kernels, and the recall-by-jaccard
-    # self-join removal.
-    "sim_ivf_recall_curve",
-    "sim_ivf_pq_topk",
-    "sim_ivfpq_residual_topk",
-    "dedup_lsh_recall_by_jaccard",
-    # r15 scaling cohort (r14 verdict item 2): the driver's low-core
-    # comparison needs CPU-heavy queries in EVERY run's summary line
-    # (SCALING_COHORT below) — these two are not otherwise forced
-    # this rotor, so they ride the watch; residual/ivf_pq above
-    # double as cohort members.
-    "pipeline_corpus_emit",
-    "dedup_simhash_clusters",
-    # r14 verdict item 7: the CC lazy-barrier effect needs probe-tier
-    # cpu_ratio evidence; the watch forces dedup_cluster_assign's
-    # probe slot (its stage decompositions ride along).
-    "dedup_cluster_assign",
-]
-
-#: r15 (r14 verdict item 2): the driver's scaling block ratios
-#: low-core vs 32-core wall per query from the summary line's
-#: `queries` dict — which carried only SHARED12, all
-#: scheduling-bound at sf0.1 (every ratio ≈ 1, tripping the driver's
-#: suspect_cpus_ignored alarm even though session.py honors
-#: $SPARK_GRAFT_CPUS).  These four CPU-heavy queries (cpu/wall
-#: 1.8–6.1 at 32 cores) are ADDED to the summary line so the
-#: low-core ratio measures parallelism; entries are only ever added,
-#: never removed or renamed, per the driver contract.
-SCALING_COHORT = [
-    "sim_ivfpq_residual_topk",
-    "sim_ivf_pq_topk",
-    "pipeline_corpus_emit",
-    "dedup_simhash_clusters",
-]
-
-#: Stable-tail rotation cadence: every stable EXTRAS query is timed at
-#: least every ROTATION_CADENCE rounds.
-ROTATION_CADENCE = 2
-
-
-def _bench_rotor() -> int:
-    """The rotation selector — the round number being benched, derived
-    from the newest committed BENCH_r*.json (+1), so a mid-round local
-    run and the driver's end-of-round run pick the SAME cohort.
-    Overridable via SPARK_GRAFT_BENCH_ROTOR for forced cohorts."""
-    env = os.environ.get("SPARK_GRAFT_BENCH_ROTOR")
-    if env is not None:
-        return int(env)
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    rounds = [
-        int(re.search(r"BENCH_r(\d+)", f).group(1))
-        for f in glob.glob(os.path.join(here, "BENCH_r*.json"))
-    ]
-    return (max(rounds) + 1) if rounds else 0
-
-
-def _cohort(names: list[str], rotor: int) -> list[str]:
-    """The deterministic index-parity slice of a stable rotation list
-    for this rotor (ordering is the list's declared order, so cohort
-    membership only changes when the list itself is edited)."""
-    return [
-        n
-        for i, n in enumerate(names)
-        if i % ROTATION_CADENCE == rotor % ROTATION_CADENCE
-    ]
+HEADLINE_RUNS = 3
+PROBE_RUNS = 2
 
 
 def _ensure_scale_slice(sf_dir: str, factor: int, fp_hash: str) -> str:
@@ -460,14 +280,14 @@ def _force(df) -> None:
 
 def _tree_cpu_seconds() -> float | None:
     """utime+stime seconds summed over this process and every LIVE
-    descendant (r14, r13 verdict item 3).  time.process_time() alone
-    is useless here: under local[32] the executor threads live in the
-    JVM gateway — a CHILD process — so the Python driver's own CPU is
-    a rounding error.  One /proc sweep builds the ppid tree (comm is
-    parsed after the LAST ')' so names with spaces/parens can't shift
-    the fields); CPU of descendants that EXIT mid-run is lost, but
-    the JVM outlives the bench, which is the case that matters.
-    Returns None when /proc isn't readable (non-Linux)."""
+    descendant.  time.process_time() alone is useless here: the
+    executor threads live in the JVM gateway — a CHILD process — so
+    the Python driver's own CPU is a rounding error.  One /proc sweep
+    builds the ppid tree (comm is parsed after the LAST ')' so names
+    with spaces/parens can't shift the fields); CPU of descendants
+    that EXIT mid-run is lost, but the JVM outlives the bench, which
+    is the case that matters.  Returns None when /proc isn't readable
+    (non-Linux)."""
     try:
         hz = os.sysconf("SC_CLK_TCK")
         children: dict[int, list[int]] = {}
@@ -493,16 +313,37 @@ def _tree_cpu_seconds() -> float | None:
         return None
 
 
+def _best_of(run, n: int) -> tuple[list[float], list[float | None]]:
+    """Call `run` n times; returns (wall seconds, process-tree CPU
+    seconds) per call.  Callers report the min of each list
+    independently: the first call carries Catalyst optimization and
+    Janino codegen, which amortize to nothing at scale, and when it
+    happens to win on wall its CPU would still include that JIT
+    work — min-of-runs is the steady-state lower bound on both."""
+    walls: list[float] = []
+    cpus: list[float | None] = []
+    for _ in range(n):
+        c0 = _tree_cpu_seconds()
+        t0 = time.perf_counter()
+        run()
+        walls.append(round(time.perf_counter() - t0, 3))
+        c1 = _tree_cpu_seconds()
+        cpus.append(
+            round(c1 - c0, 3) if c0 is not None and c1 is not None else None
+        )
+    return walls, cpus
+
+
+def _min_cpu(cpus: list[float | None]) -> float | None:
+    return min((c for c in cpus if c is not None), default=None)
+
+
 def _env_capture() -> dict:
-    """Machine-contention snapshot (r7 verdict item 1): the r6→r7
-    SHARED12 regression (+24%, spread near-uniformly across unrelated
-    queries — including trivial ones whose plans never changed)
-    pattern-matched machine contention, but nothing in the tree
-    recorded load conditions, so plan-change vs noisy-neighbor was
-    undecidable.  This snapshot (before AND after the run) makes it
-    decidable: loadavg over ~32 cpus, PSI cpu pressure (share of
-    wall-time runnable tasks stalled waiting for a cpu), and the
-    process count."""
+    """Machine-contention snapshot, taken before AND after a run:
+    loadavg, PSI cpu pressure (share of wall time runnable tasks
+    stalled waiting for a cpu), process count, cpu count, and the
+    cumulative /proc/stat jiffies whose steal delta exposes hypervisor
+    noisy-neighbor time that loadavg and PSI cannot see."""
     cap: dict = {}
     try:
         la = os.getloadavg()
@@ -530,13 +371,6 @@ def _env_capture() -> dict:
     except Exception:
         pass
     try:
-        # Cumulative jiffies since boot; the before/after DELTA of
-        # steal vs total exposes hypervisor noisy-neighbor time that
-        # loadavg and PSI cannot see (both only count runnable tasks
-        # inside this guest).  r8 observed quiet-start runs (load1
-        # 0.04-0.06, psi60 0.0) whose per-query medians still drifted
-        # 1.12-1.19x vs an earlier same-HEAD-family run — steal is the
-        # remaining measurable suspect.
         with open("/proc/stat") as fh:
             parts = fh.readline().split()[1:]
         ticks = list(map(int, parts))
@@ -546,25 +380,20 @@ def _env_capture() -> dict:
     return cap
 
 
-#: Quiet-run thresholds (r9 verdict item 2 — make the detail file
-#: self-labeling).  Judged from the BEFORE capture (the AFTER capture
-#: reflects the bench's own 32-thread load) plus the steal DELTA over
-#: the run.  Calibration from the tracked history: quiet runs start at
-#: load1 0.04–0.16 / psi60 0.0; the loaded r9 driver run started at
-#: load1 3.14 / psi60 0.26; steal stayed ≤ 0.4% even during drifted
-#: runs (so 1% only catches real hypervisor noise).
+#: Quiet-run thresholds, judged from the BEFORE capture (the AFTER
+#: capture reflects the bench's own load) plus the steal DELTA over
+#: the run.  Quiet runs start at load1 0.04–0.16 / psi60 0.0; a loaded
+#: run started at load1 3.14 / psi60 0.26; steal stays ≤ 0.4% on a
+#: quiet host, so 1% only catches real hypervisor noise.
 QUIET_LOAD1_MAX = 1.0
 QUIET_PSI60_MAX = 0.1
 QUIET_STEAL_MAX = 0.01
 
 
 def _quiet_verdict(before: dict, after: dict) -> dict:
-    """Self-labeling quietness verdict for this bench run.  A loaded
-    run's delta table is NOT adjudicating evidence (the r9 driver run
-    — load1 3.14→9.35 — showed 21 above-floor deltas that a quiet
-    same-commit run didn't reproduce); this stamp makes that readable
-    from the detail file alone instead of requiring forensic
-    cross-referencing of env captures."""
+    """Self-labeling quietness verdict for a bench run, so a loaded
+    run's deltas are readable as non-adjudicating from the artifact
+    alone.  None (abstain) when no check could be evaluated."""
     checks: dict = {}
     if before.get("load1") is not None:
         checks["load1_before_ok"] = before["load1"] <= QUIET_LOAD1_MAX
@@ -593,14 +422,10 @@ def _quiet_verdict(before: dict, after: dict) -> dict:
 
 
 def _testdata_fingerprint(sf_dir: str) -> dict:
-    """CONTENT hash of the input files — BENCH numbers are only
-    comparable round-over-round when this matches (the r3→r4 'shared-12
-    regression' was a testdata regeneration, not a plan change; this
-    field makes that distinguishable without a forensic re-run).
-    Content-based, not size+mtime: the r5→r6 transition re-copied
-    byte-identical files with fresh mtimes, and an mtime-sensitive
-    fingerprint would have voided five rounds of driver evidence over
-    a no-op."""
+    """CONTENT hash of the input files — bench numbers are only
+    comparable when this matches.  Content-based, not size+mtime: the
+    testdata can be re-copied byte-identical with fresh mtimes, which
+    must not void earlier evidence."""
     import hashlib
 
     entries = []
@@ -619,483 +444,90 @@ def _testdata_fingerprint(sf_dir: str) -> dict:
     }
 
 
-def main() -> None:
+def _sf_value(sf_dir: str) -> float | str:
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
+def _bench_queries() -> dict:
+    """The registry, plus the SHARED12 comparability pin: the
+    registry's "mm_feature_extract" serves a harness-safe flat-column
+    twin, so the bench times the typed-array variant under the pinned
+    name and the shipped twin under "mm_feature_extract_json"."""
     queries = dict(all_queries())
-    # SHARED12 comparability pin: the registry's "mm_feature_extract"
-    # was re-pointed (round 3) to a harness-safe twin (JSON string in
-    # r3-r5; flat scalar columns + oracle since r6).  Bench keeps
-    # timing the typed-array variant under the pinned name; the
-    # SHIPPED twin keeps its own EXTRAS series (named *_json for
-    # series continuity, measuring whatever form the registry serves).
     queries["mm_feature_extract_json"] = queries["mm_feature_extract"]
     queries["mm_feature_extract"] = multimodal.mm_feature_extract
-    env_before = _env_capture()
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    return queries
 
-    # warm the JVM/codegen path once so per-query timings aren't
-    # dominated by first-action startup cost.
-    _force(queries["tpch_q1_pricing_summary"](spark, SF_DIR))
 
-    # best-of-3 per query: the first run is dominated by single-threaded
-    # driver work (Catalyst optimization + Janino codegen compilation,
-    # measured ~90% idle CPU locally) that amortizes to nothing over a
-    # real 100 TB execution; the later runs measure the steady-state
-    # scan+shuffle+agg cost that actually scales with data.  r9 extends
-    # best-of-3 from SHARED12 to the EXTRAS too (r8 verdict item 5: the
-    # 1.4-1.5x same-data deltas on nine extras were unadjudicated
-    # because the measured noise floor covered only SHARED12).  The two
-    # steady-state runs (2nd, 3rd) also yield a PER-QUERY variance
-    # floor, recorded in the detail file — a same-data delta below a
-    # query's own steady-state spread is noise by construction.
-    rotor = _bench_rotor()
-    if BENCH_SET == "shared12":
-        headline = SHARED12
-    elif BENCH_SET == "flagged":
-        headline = list(EXTRAS_WATCH)
-    elif BENCH_SET == "full":
-        headline = HEADLINE
-    elif BENCH_SET == "probe":
-        headline = []  # probe tier only; the q1 warm above still ran
-    else:  # "all" — the adjudicating rotation (see EXTRAS_WATCH note)
-        stable = [n for n in EXTRAS if n not in EXTRAS_WATCH]
-        headline = SHARED12 + EXTRAS_WATCH + _cohort(stable, rotor)
-    timings: dict[str, float] = {}
-    per_query_runs: dict[str, list[float]] = {}
-    # r14 (r13 verdict item 3): process-tree CPU per run, alongside
-    # wall.  Rationale: r13 proved sub-gate contention inflates wall
-    # clock 1.125–1.34× even at steal 0.15–0.64% — wall-only timing
-    # cannot separate "plan got slower" from "machine was busy", which
-    # cost three full quiet runs to adjudicate.  CPU time is immune to
-    # time-slicing (a preempted thread stops accruing), so: a wall
-    # delta with flat cpu_sec is contention; matching cpu growth is a
-    # real plan/volume change — ONE run decides.
-    per_query_cpu_runs: dict[str, list[float | None]] = {}
-    cpu_sec: dict[str, float | None] = {}
-    for name in headline:
-        runs: list[float] = []
-        cpu_runs: list[float | None] = []
-        for _ in range(3):
-            c0 = _tree_cpu_seconds()
-            t0 = time.perf_counter()
-            _force(queries[name](spark, SF_DIR))
-            runs.append(round(time.perf_counter() - t0, 3))
-            c1 = _tree_cpu_seconds()
-            cpu_runs.append(
-                round(c1 - c0, 3)
-                if c0 is not None and c1 is not None
-                else None
-            )
-        per_query_runs[name] = runs
-        per_query_cpu_runs[name] = cpu_runs
-        timings[name] = min(runs)
-        # min CPU across the three runs — NOT the min-wall run's CPU:
-        # the first run carries Catalyst+Janino JIT CPU, and when it
-        # wins on wall (warm plans, cold codegen) pairing its CPU
-        # with the wall figure wobbled same-code readings ~2x between
-        # quiet runs.  Min-of-runs is the steady-state lower bound,
-        # the same statistic as the wall side; the raw triples stay
-        # in per_query_cpu_runs.  (The r14 committed detail predates
-        # this and used the min-wall run's CPU — recompute min from
-        # its per_query_cpu_runs when comparing across rounds.)
-        cpu_sec[name] = min(
-            (c for c in cpu_runs if c is not None), default=None
-        )
-
-    fingerprint = _testdata_fingerprint(SF_DIR)
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+def _prior_queries(live_hash: str) -> dict:
+    """Per-query timings of the committed BENCH_DETAIL.json, or {}
+    when it is absent, unparseable, or recorded against different
+    testdata (deltas are only meaningful on byte-identical inputs)."""
     try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
+        with open(DETAIL_FILE) as fh:
+            prior = json.load(fh)
+    except (OSError, ValueError):
+        return {}
+    if (prior.get("testdata") or {}).get("hash") != live_hash:
+        return {}
+    return {n: v for n, v in (prior.get("queries") or {}).items() if v}
 
-    if BENCH_SET == "shared12":
-        # diagnostic mode: print the SHARED12 line only — no detail
-        # file, no probe, no deltas (this run is not the committed
-        # round record and must not overwrite it).
-        env_after = _env_capture()
-        print(json.dumps(
-            summary_payload(
-                timings, fingerprint, sf_val, env_before, env_after
-            )
-        ))
-        return
 
-    if BENCH_SET == "flagged":
-        # adjudication mode (r12 verdict item 1): the weak-flagged
-        # movers, best-of-3 in a fresh JVM, self-labeled for
-        # quietness — the minimal run that fits a quiet window when
-        # the full bench can't.  Prints everything (no detail write:
-        # this run must never clobber the committed round record).
-        env_after = _env_capture()
-        print(json.dumps({
-            "bench_set": "flagged",
-            "queries": timings,
-            "per_query_runs": per_query_runs,
-            "cpu_sec": cpu_sec,
-            "per_query_cpu_runs": per_query_cpu_runs,
-            "quiet": _quiet_verdict(env_before, env_after),
-            "sf": sf_val,
-            "testdata": fingerprint["hash"],
-        }))
-        return
-
-    # r12: the quiet verdict is scoped to the HEADLINE window (env
-    # captured here, right after the timing loop), not the whole
-    # process.  Rationale: the verdict adjudicates per-query DELTAS,
-    # which are headline timings; the scale probe that follows roughly
-    # doubles wall time, and a steal burst during it flipped three
-    # otherwise-clean r12 runs to quiet-false even though probe RATIOS
-    # are intra-run comparisons whose numerator and denominator a
-    # steady steal inflates together.  The probe window gets its OWN
-    # env capture + verdict inside scale_probe (probe_quiet), so a
-    # steal burst confined to one side of the 10× step is still
-    # visible and a probe-window-loaded run can be re-read honestly.
-    env_headline_end = _env_capture()
-
-    scale_probe = None
-    # r13 (r12 verdict item 5): the probe tier rotates on the same
-    # 2-round cadence as the stable EXTRAS tail — ratios are intra-run
-    # comparisons, so a family's recorded ratio stays meaningful while
-    # it sits out a round (carried in ratio_carryover below).  A
-    # family whose CODE changes must be re-probed the same round: the
-    # registry's RECHECK rule puts it in EXTRAS_WATCH, and the cohort
-    # union below forces its probe slot.
-    probe_names = (
-        list(SCALE_PROBE_QUERIES)
-        if BENCH_SET == "full"
-        else _cohort(SCALE_PROBE_QUERIES, rotor)
-        + [n for n in EXTRAS_WATCH if n in SCALE_PROBE_QUERIES
-           and n not in _cohort(SCALE_PROBE_QUERIES, rotor)]
-    )
-    if SCALE_PROBE_ENABLED and probe_names:
-        probe_dir = _ensure_scale_slice(
-            SF_DIR, SCALE_PROBE_FACTOR, fingerprint["hash"]
+def run_headline(spark, queries: dict, env_before: dict) -> None:
+    """Time every HEADLINE query best-of-HEADLINE_RUNS, write
+    BENCH_DETAIL.json, print the summary line."""
+    per_query_runs: dict[str, list[float]] = {}
+    per_query_cpu_runs: dict[str, list[float | None]] = {}
+    for name in HEADLINE:
+        per_query_runs[name], per_query_cpu_runs[name] = _best_of(
+            lambda: _force(queries[name](spark, SF_DIR)), HEADLINE_RUNS
         )
-        # best-of-2 per scale (r9): the probe was single-shot and its
-        # RATIO wobbled 2.3→3.7 between two same-code quiet runs —
-        # ratio noise compounds from both numerator and denominator,
-        # so each side gets the same steady-state treatment as the
-        # headline timings.
-        def _probe_best(name: str, d: str) -> tuple[float, float | None]:
-            """(best wall, best CPU) — CPU captured per run with
-            _tree_cpu_seconds like the headline loop (r14): a probe
-            RATIO whose numerator and denominator carry CPU readings
-            is adjudicable in one run — a wall ratio above the
-            family's claim with a matching CPU ratio is real growth;
-            wall-only inflation is the window's contention.  CPU is
-            the MIN across the runs, independently of which run wins
-            on wall: the first run carries the Catalyst+Janino JIT's
-            CPU, and when it happens to win on wall (warm plans, cold
-            codegen) pairing its CPU with the wall figure inflated
-            same-code cpu_ratio readings ~2x between quiet runs —
-            min-of-runs is the steady-state lower bound, the same
-            statistic the wall side uses."""
-            best, best_cpu = float("inf"), None
-            for _ in range(2):
-                c0 = _tree_cpu_seconds()
-                t0 = time.perf_counter()
-                _force(queries[name](spark, d))
-                wall = time.perf_counter() - t0
-                c1 = _tree_cpu_seconds()
-                best = min(best, wall)
-                if c0 is not None and c1 is not None:
-                    cpu = round(c1 - c0, 3)
-                    best_cpu = cpu if best_cpu is None else min(best_cpu, cpu)
-            return round(best, 3), best_cpu
-
-        base_timed = {n: _probe_best(n, SF_DIR) for n in probe_names}
-        scaled_timed = {
-            n: _probe_best(n, probe_dir) for n in probe_names
-        }
-        base_sec = {n: w for n, (w, _) in base_timed.items()}
-        scaled_sec = {n: w for n, (w, _) in scaled_timed.items()}
-        scale_probe = {
-            "factor": SCALE_PROBE_FACTOR,
-            "probed": probe_names,
-            "base_sec": base_sec,
-            "scaled_sec": scaled_sec,
-            "ratio": {
-                n: round(scaled_sec[n] / base_sec[n], 2) if base_sec[n] else None
-                for n in probe_names
-            },
-            "base_cpu_sec": {n: c for n, (_, c) in base_timed.items()},
-            "scaled_cpu_sec": {n: c for n, (_, c) in scaled_timed.items()},
-            "cpu_ratio": {
-                n: (
-                    round(scaled_timed[n][1] / base_timed[n][1], 2)
-                    if base_timed[n][1] and scaled_timed[n][1] is not None
-                    else None
-                )
-                for n in probe_names
-            },
-            # How to read cpu_ratio vs (wall) ratio — they answer
-            # different questions and a LINEAR family's cpu_ratio is
-            # expected to sit near the FACTOR, not near 1:
-            #
-            # First measured band (committed quiet artifact
-            # 2026-08-17, factor 10, min-of-runs CPU): cpu_ratio
-            # 0.94–13.83 across the 14 cohort families — i.e. every
-            # family at or below ~1.4× per unit of data.  The
-            # above-factor tail (containment 13.83, LPA 13.17, 2hop
-            # 11.78, lsh_recall 11.65) is the shuffle-sort log factor
-            # plus hash-table pressure at the bigger working set, not
-            # a quadratic term — their wall ratios sit at 1.6–2.0
-            # and their output/candidate masses are probed linear by
-            # the stage decompositions.
-            "cpu_ratio_note": (
-                "cpu_ratio is the contention-proof scaling measure: "
-                "factor-x data means factor-x total work, so a "
-                "linear family reads cpu_ratio ~= factor while its "
-                "wall ratio sits far lower because the larger input "
-                "also fills more of the 32 threads (per-unit growth "
-                "= cpu_ratio / factor).  cpu_ratio well below the "
-                "factor = fixed overhead amortizing (sublinear); "
-                "well above = superlinear work, the thing the probe "
-                "hunts.  Wall-vs-cpu disagreement localizes "
-                "contention to the window, same rule as the "
-                "headline cpu_sec.  CPU here is min-of-runs per "
-                "side (the first run's Catalyst+Janino JIT CPU "
-                "otherwise leaks into whichever side it lands on "
-                "and wobbled same-code cpu_ratio ~2x between quiet "
-                "runs)."
-            ),
-        }
-        # Stage decompositions run only when their anchor family is in
-        # this run's probe cohort (they re-run the family's heaviest
-        # stages and dominate probe wall time):
-        #   simhash_stages        (r7 item 7)  — signature vs
-        #     candidate+verify vs output pair count
-        #   incremental_cc_stages (r9 item 2)  — merge cost vs batch
-        #     fraction vs the corpus-bound prior-CC term
-        #   jaccard_stages / cluster_assign_stages (r11 item 3) —
-        #     index vs pair-mass emit; edge gen vs min-label loop
-        stage_breakdowns = {
-            "simhash_stages": (
-                "dedup_simhash_band_pairs", _simhash_stage_breakdown
-            ),
-            "incremental_cc_stages": (
-                "dedup_cluster_assign", _incremental_cc_stage_breakdown
-            ),
-            "jaccard_stages": (
-                "dedup_ngram_jaccard_pairs", _jaccard_stage_breakdown
-            ),
-            "cluster_assign_stages": (
-                "dedup_cluster_assign", _cluster_assign_stage_breakdown
-            ),
-            # r13: the last undecomposed >2.5 quiet ratio — LM build
-            # vs scoring join, with the model-table growth recorded
-            "bigram_stages": (
-                "text_bigram_logprob", _bigram_stage_breakdown
-            ),
-        }
-        for key, (anchor, fn) in stage_breakdowns.items():
-            if anchor in probe_names:
-                scale_probe[key] = {
-                    "base": fn(spark, SF_DIR),
-                    "scaled": fn(spark, probe_dir),
-                }
-        # r12 verdict item 3 — the standing declaration for the one
-        # ratio above the >4 escalation threshold:
-        scale_probe["simhash_probe_note"] = (
-            "declared 2026-08-16 (r13): dedup_simhash_band_pairs' "
-            "probe ratio (4.08 committed r12 / 2.87 r12 driver run) "
-            "is INTRINSIC pair mass, not a plan defect — the recorded "
-            "simhash_stages show output pairs 506k->8.7M (17x) at "
-            "factor 10 because replica token-suffixing preserves "
-            "word-frequency structure, so replicas of distinct docs "
-            "still collide in Hamming bands and ARE true near-dups "
-            "under the simhash metric; candidate_verify_sec grew only "
-            "3.4x against 17x pairs (sublinear per pair), and the "
-            "signature stage stayed flat.  The linear-output scale "
-            "path is the cluster-emit twin dedup_simhash_clusters "
-            "(ratio ~2.6); the pair listing exists for parity with "
-            "pair-granular consumers."
-        )
-        # the probe window's own contention verdict (see the
-        # env_headline_end note above)
-        pq = _quiet_verdict(env_headline_end, _env_capture())
-        # steal is the only meaningful check for a MID-RUN window:
-        # the "before" load1/psi here reflect the bench's own
-        # 32-thread headline load, not ambient contention
-        pq["checks"] = {
-            k: v for k, v in pq["checks"].items() if k.startswith("steal")
-        }
-        pq["verdict"] = pq["checks"].get("steal_run_ok")
-        if "steal_run_ok" not in pq["checks"]:
-            # r13 (ADVICE): distinguish 'quiet-unknown because /proc
-            # stat ticks were unavailable' from a silently dropped
-            # field — readers must not mistake None for quiet.
-            pq["note"] = (
-                "no stat_ticks in one or both env captures — steal "
-                "unmeasurable, probe-window quietness unknown"
-            )
-        pq["window"] = "scale_probe only (steal check only — see note)"
-        scale_probe["probe_quiet"] = pq
-
-    if BENCH_SET == "probe":
-        # probe-only artifact: full-process quiet verdict (the before
-        # capture reflects ambient load — this is a fresh JVM), written
-        # to its own file so it can never clobber the committed
-        # headline detail.
-        quiet = _quiet_verdict(env_before, _env_capture())
-        quiet["window"] = "whole probe-only process (fresh JVM)"
-        payload = {
-            "bench_set": "probe",
-            "quiet": quiet,
-            "scale_probe": scale_probe,
-            "sf": sf_val,
-            "testdata": fingerprint,
-        }
-        with open(PROBE_FILE, "w") as fh:
-            json.dump(payload, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-        print(json.dumps({
-            "bench_set": "probe",
-            "quiet_verdict": quiet["verdict"],
-            "ratio": (scale_probe or {}).get("ratio"),
-            "probe_file": "BENCH_PROBE.json",
-        }))
-        return
-
-    # Carry forward the untimed stable tail from the prior committed
-    # detail (same testdata only) so every query keeps a series across
-    # the rotation: {"sec": newest timing, "age": details since it was
-    # last timed}.  Same for probe ratios and stage decompositions.
-    prior = _prior_detail(fingerprint["hash"])
-    prior_q = dict((prior or {}).get("queries") or {})
-    prior_carry = dict((prior or {}).get("queries_carryover") or {})
-    carryover: dict[str, dict] = {}
-    prior_quiet = ((prior or {}).get("quiet") or {}).get("verdict")
-    for n in HEADLINE:
-        if n in timings:
-            continue
-        if n in prior_q and prior_q[n] is not None:
-            # carried numbers keep the quiet label of the run that
-            # MEASURED them — a steal-tainted prior stays visibly
-            # tainted no matter how quiet this run is
-            carryover[n] = {
-                "sec": prior_q[n], "age": 1, "quiet": prior_quiet
-            }
-        elif n in prior_carry:
-            e = prior_carry[n]
-            carryover[n] = {
-                "sec": e["sec"],
-                "age": int(e.get("age", 1)) + 1,
-                "quiet": e.get("quiet"),
-            }
-    if scale_probe is not None:
-        p_sp = (prior or {}).get("scale_probe") or {}
-        p_ratio = p_sp.get("ratio") or {}
-        p_rcarry = p_sp.get("ratio_carryover") or {}
-        ratio_carry: dict[str, dict] = {}
-        for n in SCALE_PROBE_QUERIES:
-            if n in scale_probe["ratio"]:
-                continue
-            if n in p_ratio and p_ratio[n] is not None:
-                ratio_carry[n] = {"ratio": p_ratio[n], "age": 1}
-            elif n in p_rcarry:
-                e = p_rcarry[n]
-                ratio_carry[n] = {
-                    "ratio": e["ratio"], "age": int(e.get("age", 1)) + 1
-                }
-        scale_probe["ratio_carryover"] = ratio_carry
-        p_scarry = p_sp.get("stages_carryover") or {}
-        stages_carry: dict[str, dict] = {}
-        for key in (
-            "simhash_stages", "incremental_cc_stages",
-            "jaccard_stages", "cluster_assign_stages", "bigram_stages",
-        ):
-            if key in scale_probe:
-                continue
-            if key in p_sp:
-                stages_carry[key] = {"stages": p_sp[key], "age": 1}
-            elif key in p_scarry:
-                e = p_scarry[key]
-                stages_carry[key] = {
-                    "stages": e["stages"],
-                    "age": int(e.get("age", 1)) + 1,
-                }
-        scale_probe["stages_carryover"] = stages_carry
-
-    # per-query deltas vs the newest prior bench of the SAME testdata
-    # (r5 verdict item 7): sub-second wobbles like the r5 text_stats
-    # 0.43→0.51 get adjudicated by recorded ratios instead of judge
-    # archaeology.  Primary source is the committed BENCH_DETAIL.json
-    # (timed + carried series, so rotation never breaks a comparison);
-    # BENCH_r*.json parsed summaries are the fallback (SHARED12
-    # coverage only, post-r6 format).
-    prior_series = {
-        **{n: e["sec"] for n, e in prior_carry.items()},
-        **{n: v for n, v in prior_q.items() if v is not None},
-    }
-    deltas = _deltas_vs_prior(
-        timings, fingerprint["hash"], prior_series or None
-    )
     env_after = _env_capture()
-    # headline-scoped (see env_headline_end above): the verdict that
-    # gates delta adjudication covers exactly the window the deltas
-    # were measured in
-    quiet = _quiet_verdict(env_before or {}, env_headline_end or {})
-    quiet["window"] = (
-        "headline timings only (r12); the probe window self-labels in "
-        "scale_probe.probe_quiet"
-    )
+    timings = {n: min(r) for n, r in per_query_runs.items()}
+    fingerprint = _testdata_fingerprint(SF_DIR)
+    sf_val = _sf_value(SF_DIR)
+
+    prior_q = _prior_queries(fingerprint["hash"])
+    deltas: dict | None = {
+        n: round(timings[n] / prior_q[n], 2) for n in timings if n in prior_q
+    } or None
+    quiet = _quiet_verdict(env_before, env_after)
     if deltas is not None and quiet["verdict"] is False:
-        # a loaded run's ratios are recorded for completeness but must
-        # not be read as regressions — the committed quiet adjudication
-        # stands until a quiet run contradicts it
-        deltas = dict(deltas)
+        # a loaded run's ratios are recorded but must not be read as
+        # regressions
         deltas["non_adjudicating"] = True
 
+    summary = summary_payload(
+        timings, fingerprint, sf_val, env_before, env_after
+    )
     detail = {
-        "quiet": quiet,
         "metric": (
-            "headline-query wall clock (noop sink, best of 3 runs), "
-            f"sum of {len(timings)} timed queries "
-            f"(bench_set={BENCH_SET}, rotor={rotor}; untimed stable "
-            "EXTRAS carried in queries_carryover)"
+            "headline-query wall clock (noop sink, best of "
+            f"{HEADLINE_RUNS} runs), sum of {len(timings)} queries"
         ),
-        "value": round(sum(timings.values()), 3),
+        "value": summary["value"],
         "unit": "sec",
-        "bench_set": BENCH_SET,
-        "rotor": rotor,
-        "rotation_note": (
-            "r13 (r12 verdict item 5): SHARED12 + EXTRAS_WATCH every "
-            "run; the stable EXTRAS tail alternates 2 index-parity "
-            "cohorts by rotor so a full adjudicating run fits a quiet "
-            "window.  'value' sums only this run's timed queries — "
-            "compare round-over-round PER QUERY (same-name series), "
-            "or via shared12_sec (membership pinned since r1)."
-        ),
         "queries": timings,
-        "queries_carryover": carryover,
-        "shared12_sec": round(
-            sum(timings[n] for n in SHARED12 if n in timings), 3
-        ),
-        "extras_sec": round(
-            sum(v for n, v in timings.items() if n not in SHARED12), 3
-        ),
+        "shared12_sec": summary["shared12_sec"],
+        "extras_sec": summary["extras_sec"],
         "sf": sf_val,
         "testdata": fingerprint,
+        "quiet": quiet,
         "delta_vs_prior_same_data": deltas,
-        "scale_probe": scale_probe,
         "env": {"before": env_before, "after": env_after},
-        # all three raw run times per query (timings above is the min)
-        # and the steady-state spread ratio max(r2,r3)/min(r2,r3) — the
-        # per-query noise floor that adjudicates same-data deltas for
-        # the EXTRAS exactly like the SHARED12 quiet-series bound.
         "per_query_runs": per_query_runs,
-        # r14 (r13 verdict item 3): process-tree CPU seconds for the
-        # SAME run each headline wall figure comes from (min-wall of
-        # 3), plus all three raw CPU readings.  Wall inflated but CPU
-        # flat vs the prior series = contention; both up = real
-        # plan/volume change.  Under local[32] a healthy parallel
-        # query reads cpu_sec ≫ wall (up to 32×); the JVM's
-        # background threads (GC etc.) ride along, so sub-100 ms
-        # queries carry proportionally noisier CPU numbers.
-        "cpu_sec": cpu_sec,
+        # min across the runs, independently of which run won on wall
+        # (see _best_of); the raw readings are per_query_cpu_runs
+        "cpu_sec": {
+            n: _min_cpu(c) for n, c in per_query_cpu_runs.items()
+        },
         "per_query_cpu_runs": per_query_cpu_runs,
+        # steady-state spread max(r2,r3)/min(r2,r3): a same-data delta
+        # below a query's own spread is noise by construction
         "variance_floor": {
             n: (
                 round(max(r[1], r[2]) / min(r[1], r[2]), 3)
@@ -1104,212 +536,12 @@ def main() -> None:
             )
             for n, r in per_query_runs.items()
         },
-        # r7 verdict item 1 — root cause of the r6→r7 SHARED12
-        # 13.41→16.66 s (+24%): two independent components, both
-        # measured in round 8.  (a) Machine contention: the r7 run
-        # executed under external load (the near-uniform spread across
-        # unrelated trivial queries); quiet-machine r8 re-runs
-        # (env.before.load1 ≤ 0.2, recorded above) recover most of it —
-        # e.g. sim_cosine_topk 0.64→0.43, sess1 1.12→0.73, sim_knn_top1
-        # 1.30→0.94 vs the r7 detail.  (b) The r8 round-on-average
-        # sweep's DECIMAL sums: converting tpch_q1's three averages and
-        # sql_word_price_stats' one to DECIMAL(18,6) aggregation cost
-        # ~2× on those queries (q1 measured 0.90→2.16 s at sf0.1);
-        # round 8 replaced the hot-path sites with the quantized-BIGINT
-        # form (_rounding._avg_q, measured 2.16→1.09 s) while cold
-        # swept queries keep _avg_dec.  Residual SHARED12 above the
-        # r6 envelope is run-to-run variance (±1 s observed between
-        # consecutive quiet runs on byte-identical data) plus q1's
-        # retained DECIMAL(18,6) money sums (+~0.2 s, the certified
-        # cross-engine exactness cost).  JVM-session aging is RULED
-        # OUT: a SHARED12-only fresh-JVM run (SPARK_GRAFT_BENCH_SET=
-        # shared12) reproduced the full 43-query session's SHARED12
-        # within 0.16 s (14.51 vs 14.67), so per-query numbers do not
-        # inflate with session size.
-        "regression_note": (
-            "r6->r7 +24% = external machine load (see env capture; "
-            "quiet r8 re-runs recover it) + DECIMAL-sum averages from "
-            "the rounding sweep on tpch_q1/sql_word_price_stats "
-            "(replaced by quantized-BIGINT _avg_q in r8). RETIRED at "
-            "round-8 end: best-of-3 SHARED12 on a quiet machine "
-            "(steal 0.05%) measured 12.12 s — below the r6 envelope "
-            "(13.41); session-size aging ruled out (SHARED12-only "
-            "fresh JVM reproduces the full-session SHARED12 within "
-            "0.16 s)"
-        ),
-        # Measured across four quiet-start (load1 <= 0.16, psi60 0.0)
-        # same-code-family runs at the end of round 8: SHARED12 came
-        # back 14.86 / 17.11 / 15.33 / 16.37 s and the per-query
-        # median ratio between consecutive runs was 1.05-1.19x with no
-        # stable winner (each run's worst-5 set was disjoint).  Steal
-        # time is ruled out (0.39% of cpu during a drifted run, 0.09%
-        # lifetime); the spread is intrinsic 32-thread JIT/GC/scheduler
-        # variance on sub-second-to-5 s queries.  Interpret SHARED12
-        # deltas under ~1.2x against this floor before suspecting a
-        # plan change; per-query, the delta_vs_prior_same_data ratios
-        # adjudicate.
-        "run_variance_note": (
-            "quiet-run SHARED12 intrinsic spread measured r8: "
-            "14.86-17.11 s over four runs (median per-query ratio "
-            "1.05-1.19x, disjoint worst-5 sets, steal ruled out); "
-            "treat SHARED12 deltas < ~1.2x as noise.  r9: EXTRAS run "
-            "best-of-3 too and every query records its steady-state "
-            "spread in variance_floor — adjudicate a same-data delta "
-            "against max(1.2, that query's floor).  r9 adjudication: "
-            "the quiet r9 run flagged attribution_last_touch (1.42x) "
-            "and ts_ohlc_hourly (1.26x) above their floors; a fresh "
-            "quiet JVM best-of-3 reproduced the r8 numbers for both "
-            "(0.551 vs 0.673 prior; 0.425 vs 0.447) — full-session "
-            "JVM aging, not plan regressions.  r10 expected delta: "
-            "dedup_minhash_lsh_pairs carries ~+0.3 s vs its r9 series "
-            "— the md5 mulmod signature family that oracle-backed the "
-            "whole minhash surface (r9 verdict item 4; decomposition "
-            "in dedup._perm_formula's docstring: signature stage "
-            "1.05→1.40 s, band join within noise) — an accepted, "
-            "recorded trade, not a regression.  r10 adjudication: "
-            "three quiet-verdict-true full-session runs measured "
-            "SHARED12 12.56 / 14.06 / 16.42 s — the same intrinsic "
-            "spread r8 documented (14.86-17.11) — and the committed "
-            "detail is the 12.56 s run, below the 13.41 s r6 "
-            "envelope; a SHARED12-only fresh-JVM diagnostic read "
-            "13.23 s.  minhash's 2.40 s vs the r9 2.03 s series is "
-            "the ~+0.35 s family cost plus noise, inside the 1.2x "
-            "bound.  r11 adjudication (r10 verdict item 1): the four "
-            "above-floor deltas in the committed r10 quiet detail "
-            "(incremental_cc 1.21, simhash_clusters 1.24, LPA 1.40, "
-            "ivf_recall_curve 1.25) got the fresh-JVM best-of-3 "
-            "protocol TWICE at sf0.1 (warm-start load1 1.5 and "
-            "quiet-start load1 0.06): incremental_cc 5.90/6.00 vs "
-            "quiet-r10 5.87 vs prior 4.85 vs the loaded r10 DRIVER "
-            "run's 4.41; simhash_clusters 4.85/5.46 vs 5.82/4.69/4.67; "
-            "LPA 3.27/4.20 vs 4.48/3.20/3.37.  The two fresh-JVM runs "
-            "themselves spread 1.02-1.28x per query and BRACKET both "
-            "the flagged values and the priors, and one run reproduced "
-            "simhash's prior within 3% — so the deltas are intrinsic "
-            "spread on 4-6 s iterative queries (session aging ruled "
-            "OUT this time: fresh JVMs reproduce the high values too), "
-            "not plan regressions; none of the three ops' code changed "
-            "in r10/r11.  ivf_recall_curve's flag is superseded by the "
-            "r11 integer-codebook rebase; the NEW implementation's "
-            "fresh-JVM best-of-3 read 4.29/4.50 vs the old 4.17 — the "
-            "rebase that bought the oracle is cost-neutral.  r11 "
-            "expected deltas: sim_ivf_int_topk now fits on the FULL "
-            "corpus (2x train input, ~+0.3 s expected on its series); "
-            "sim_ivf_recall_curve as above.  r11 committed-run "
-            "adjudication: vs the r10 quiet detail only two deltas "
-            "exceed 1.15 — asof_purchase_click 1.26 and "
-            "text_split_xentropy 1.20, both sub-second queries whose "
-            "r10 best-of-3 caught a tail run (r10 runs 0.657/0.514/"
-            "0.429 and 1.274/0.925/0.781; this run's steady-state "
-            "pairs 0.539/0.553 and 0.942/0.937 sit INSIDE those "
-            "spreads).  The fresh-JVM protocol is non-adjudicating at "
-            "this size class — a fresh JVM warmed only by q1 read "
-            "1.004/1.599, 2x the full-session numbers, pure cold-"
-            "codegen cost — so sub-second flags adjudicate on "
-            "steady-state spread overlap instead.  r13 adjudication "
-            "(r12 verdict item 1; all runs 2026-08-16 at sf0.1): after "
-            "the rotation restructure, FOUR quiet-true artifacts "
-            "landed — a flagged-subset fresh-JVM run (run steal "
-            "0.008%) and three full runs (steal 0.64%/0.19%/0.15%, "
-            "shared12 16.951/14.441/13.187; the 13.187 run is the "
-            "committed detail, below the 13.41 r6 envelope).  Median "
-            "per-query ratio vs the r11 quiet run on UNCHANGED "
-            "queries: 1.34/1.18/1.125 across the three full runs — "
-            "the same uniform small-query inflation the r12 verdict "
-            "measured (1.34x) now appears in steal-gate-green windows "
-            "too, so quiet-run quality varies below the gate and "
-            "cross-round deltas adjudicate against the BEST quiet run "
-            "plus each query's floor.  The three r12-flagged movers: "
-            "sketch_cm_heavy_hitters 0.697/0.863/0.885 vs r11 0.633 "
-            "— RECOVERED, the r12 3.25x was contention (no code "
-            "change); sketch_hll_mulmod_merge 0.789/1.028/1.265 vs "
-            "0.478 (1.65x best-run) — REAL, the broadcast "
-            "_HLL_LC_USERS linear-counting lookup exchange added in "
-            "r12 (sketches.py:362-370): one extra model-sized "
-            "broadcast stage on a sub-second query, the accepted "
-            "price of engine-libm-free oracle exactness, constant "
-            "work at any corpus size; dedup_substring_spans "
-            "2.903/3.359/3.567 vs 1.989 (1.46x best-run) and its "
-            "consumer dedup_cut_spans_emit 3.512/4.271/4.054 vs "
-            "2.454 (1.43x) — REAL, the r12 md5 gram-key widening to "
-            "two 60-bit BIGINTs doubles the gram-join shuffle key "
-            "(dedup.py:3283 area), the accepted collision-safety "
-            "price past 1e9 grams.  Probe windows: all three full "
-            "runs' probe_quiet self-label steal-false (1.2-3.8%); "
-            "ratios agree across runs except dedup_lsh_band_ladder "
-            "(1.91/1.91/3.76 — the 3.76 sits in the committed run's "
-            "3.8%-steal probe window and the 1.91 pair is the "
-            "operative figure).  A probe-only quiet-true artifact "
-            "(BENCH_PROBE.json, fresh JVM, run steal 0.39%, "
-            "2026-08-16) supersedes the tainted probe windows: all 13 "
-            "r13-cohort families measured 1.09-1.99 at factor 10 — "
-            "none above 2 — and the stage decompositions reproduce "
-            "(jaccard pair mass exactly 10x with emit sublinear at "
-            "1.86x, cluster-assign loop flat at 2 rounds/0.65 s, "
-            "incremental-CC merge_sec flat across the scale step at "
-            "both batch fractions).  Post-adjudication r13 rewrite: "
-            "sketch_hll_mulmod_merge's linear-counting lookup flipped "
-            "from the r12 broadcast join to element_at over the same "
-            "literal array (verified row-identical; "
-            "sketches.py:362-376) — full-session best-of-3 measured "
-            "1.732 -> 0.890 s at sf0.1, recovering most of the "
-            "adjudicated r12 cost; a quiet flagged re-run (steal "
-            "0.011%) reads 0.966 fresh-JVM vs 1.029 pre-rewrite.  The "
-            "committed detail's 0.789 predates the rewrite and "
-            "remains the old-plan figure.  r13 expected deltas: the "
-            "PQ resolution bump (PQ_M 16 -> 32, 2-dim sub-codes — "
-            "recall up at every (SF, tier) point, matrix in "
-            "similarity.py's PQ_M note) doubles the subspace row "
-            "volume through the PQ encode/fit, so sim_ivf_pq_topk "
-            "and sim_ivfpq_residual_topk carry a recall-bought cost "
-            "on their series — quiet-recorded same-day on the final "
-            "code: a flagged run (steal 0.29%) read ivfpq 7.533 (r11 "
-            "series 6.092, ~1.24x) and residual 14.034, and a "
-            "quiet-true FULL run of the final code (steal 0.18%, "
-            "shared12 16.116 — inside the 13.19-16.95 same-day quiet "
-            "spread; the committed 13.187 detail remains the "
-            "headline artifact since no SHARED12 query changed after "
-            "it) read ivfpq 9.368 / residual 12.832 / hll 0.770 "
-            "(the hll element_at rewrite recovering most of its r12 "
-            "cost in-session).  The final-code quiet probe artifact "
-            "(BENCH_PROBE.json, steal 0.04%) puts both M=32 PQ "
-            "tiers at 10x ratios 1.30/1.16.  Both PQ queries sit in "
-            "EXTRAS_WATCH pending the r14 verdict.  r14 adjudication "
-            "rule (r13 verdict item 3 — sub-gate contention inflates "
-            "wall 1.125-1.34x even at steal 0.15-0.64%, which "
-            "wall-only timing cannot see): every timed query now "
-            "records cpu_sec (process-tree utime+stime around the "
-            "same run the wall figure comes from).  Adjudicate a "
-            "same-data wall delta by its CPU ratio: wall up with "
-            "cpu_sec flat (ratio inside the query's variance_floor) "
-            "= contention, not a regression — no re-run needed; wall "
-            "and cpu_sec up together = real plan/volume change.  CPU "
-            "time is preemption-immune, so ONE run decides what r13 "
-            "needed three full quiet runs to settle; the steal/load "
-            "gates still label the artifact, but cpu_sec carries the "
-            "per-query verdict.  r14 quiet adjudication (committed "
-            "detail 2026-08-17, all gates green, headline steal "
-            "0.015%, probe window 0.081%): SHARED12 12.252 s — the "
-            "best committed quiet figure (r11 12.443, envelope "
-            "13.41).  All five r13 watch carry-ins resolved and "
-            "pruned (numbers in the EXTRAS_WATCH comment): hll "
-            "0.678, substring pair 2.835/3.053, PQ tiers "
-            "6.567/10.616 — the PQ 'series cost' was mostly "
-            "contention, 1.08x real.  The bigram broadcast fix "
-            "moved its probe ratio 3.2 -> 2.11 (score stage 0.993 "
-            "-> 1.353 s across the 10x step — sublinear; the model "
-            "build carries the rest).  Delta table clean: max 1.21 "
-            "(dedup_bloom_prefilter, floor 1.044, probe ratio 1.21 "
-            "quiet — the r8 intrinsic band, not a regression)."
-        ),
     }
     with open(DETAIL_FILE, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
         fh.write("\n")
 
-    line = json.dumps(
-        summary_payload(timings, fingerprint, sf_val, env_before, env_after)
-    )
+    line = json.dumps(summary)
     assert len(line) <= SUMMARY_LINE_BUDGET, (
         f"summary line {len(line)} chars exceeds the driver's capture "
         "budget — trim fields (full detail already lives in "
@@ -1318,235 +550,68 @@ def main() -> None:
     print(line)
 
 
-def _simhash_stage_breakdown(spark, sf_dir: str) -> dict:
-    """Per-stage cost of dedup_simhash_band_pairs: the pandas-UDF
-    signature stage alone, the full pipeline, their difference
-    (candidate join + Hamming verify), and the output pair count —
-    if scaled/base pair counts grow like the time ratio, the probe
-    growth is output-driven (the replica construction genuinely
-    multiplies true near-dup pairs); if candidate_verify_sec grows
-    much faster than n_pairs, the band join itself is the problem.
-    Since the r9 signature-collapse rewrite the band join + verify run
-    at signature-pair granularity, so candidate_verify_sec is mostly
-    the member-expansion OUTPUT materialization; n_pairs contextualizes
-    it (8.7M genuine pairs at the 10x slice)."""
-    from bigdata_gamedb_etl_spark.operators import dedup
-
-    t0 = time.perf_counter()
-    _force(dedup.dedup_simhash_signatures(spark, sf_dir))
-    sig_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    full = dedup.dedup_simhash_band_pairs(spark, sf_dir)
-    _force(full)
-    full_sec = round(time.perf_counter() - t0, 3)
-    return {
-        "signature_sec": sig_sec,
-        "full_sec": full_sec,
-        "candidate_verify_sec": round(max(0.0, full_sec - sig_sec), 3),
-        "n_pairs": full.count(),
-    }
-
-
-def _jaccard_stage_breakdown(spark, sf_dir: str) -> dict:
-    """Per-stage cost of dedup_ngram_jaccard_pairs (r11 verdict item
-    3: the 3.2× probe ratio needed data, not a declaration).  Stages:
-
-      index_sec  — the inverted-index build alone (shingle explode,
-                   df count, df-capped posting collect): the part
-                   claimed LINEAR in corpus size
-      full_sec   — the whole query
-      emit_sec   — their difference: C(df,2) pair emit + per-pair agg,
-                   the part whose cost is the POSTING PAIR MASS
-      pair_mass  — Σ C(df,2) over surviving posting lists: the
-                   intrinsic pair count the emit stage must touch
-      n_pairs    — surviving (≥ threshold) output pairs
-
-    Verdict key: if scaled/base pair_mass grows like emit_sec, the
-    superlinear ratio is pair-mass inflation — a property of the
-    replica data (each replica's shingles collide only within itself,
-    but df within a replica is unchanged, so mass scales ~linearly
-    while the index's constant factors don't) — not a plan defect."""
-    from pyspark.sql import functions as F
-
-    from bigdata_gamedb_etl_spark.operators import dedup
-
-    t0 = time.perf_counter()
-    postings = dedup._jaccard_postings(spark, sf_dir)
-    _force(postings)
-    index_sec = round(time.perf_counter() - t0, 3)
-    pair_mass = postings.select(
-        F.size("docs").cast("long").alias("df")
-    ).agg(
-        F.sum(F.expr("df * (df - 1) DIV 2")).alias("m")
-    ).first()["m"]
-    t0 = time.perf_counter()
-    full = dedup.dedup_ngram_jaccard_pairs(spark, sf_dir)
-    _force(full)
-    full_sec = round(time.perf_counter() - t0, 3)
-    return {
-        "index_sec": index_sec,
-        "full_sec": full_sec,
-        "emit_sec": round(max(0.0, full_sec - index_sec), 3),
-        "pair_mass": int(pair_mass or 0),
-        "n_pairs": full.count(),
-    }
-
-
-def _cluster_assign_stage_breakdown(spark, sf_dir: str) -> dict:
-    """Per-stage cost of dedup_cluster_assign (r11 verdict item 3).
-    Stages:
-
-      edges_sec — the Jaccard pair generation (the input: everything
-                  _jaccard_stage_breakdown decomposes, charged once)
-      full_sec  — the whole query (pair generation + min-label loop)
-      loop_sec  — their difference: the O(diameter) iteration
-      rounds    — converged round count (replication preserves
-                  component shape, so rounds should NOT grow with the
-                  factor; a growing loop_sec/rounds per-round cost
-                  would implicate the loop itself)
-      n_edges   — undirected input pairs
-
-    Verdict key: if edges_sec carries the growth and loop_sec/rounds
-    stays ~linear in n_edges, the >3 ratio is inherited from the pair
-    generator (see jaccard_stages), not the iteration."""
-    from bigdata_gamedb_etl_spark.operators import dedup
-
-    # checkpoint the pairs so the loop timing below cannot lazily
-    # re-run the pair generation — the decomposition must not double-
-    # count the generator inside loop_sec
-    t0 = time.perf_counter()
-    pairs = (
-        dedup.dedup_ngram_jaccard_pairs(spark, sf_dir)
-        .select("d1", "d2")
-        .localCheckpoint(eager=True)
+def run_probe(spark, queries: dict, env_before: dict) -> None:
+    """Time every SCALE_PROBE_QUERIES family best-of-PROBE_RUNS at
+    SF_DIR and on the SCALE_PROBE_FACTOR replica slice, write
+    BENCH_PROBE.json, print a one-line ratio summary."""
+    fingerprint = _testdata_fingerprint(SF_DIR)
+    probe_dir = _ensure_scale_slice(
+        SF_DIR, SCALE_PROBE_FACTOR, fingerprint["hash"]
     )
-    edges_sec = round(time.perf_counter() - t0, 3)
-    n_edges = pairs.count()
-    stats: dict = {}
-    # r13 (ADVICE): the loop timing must run under the SAME checkpoint
-    # policy as dedup_cluster_assign's full_sec (which reads
-    # RELIABLE_CKPT_CONF), or edges/loop can't be expected to sum to
-    # full under a non-default policy.
-    reliable = (
-        spark.conf.get(dedup.RELIABLE_CKPT_CONF, "false").lower()
-        == "true"
-    )
-    t0 = time.perf_counter()
-    _force(dedup._min_label_components(pairs, reliable, stats))
-    loop_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    _force(dedup.dedup_cluster_assign(spark, sf_dir))
-    full_sec = round(time.perf_counter() - t0, 3)
-    return {
-        "edges_sec": edges_sec,
-        "loop_sec": loop_sec,
-        "full_sec": full_sec,
-        "rounds": stats.get("rounds"),
-        "n_edges": n_edges,
-    }
-
-
-def _bigram_stage_breakdown(spark, sf_dir: str) -> dict:
-    """Per-stage cost of text_bigram_logprob (r13: its quiet probe
-    ratio, 2.61, was the last undecomposed >2.5).  Stages:
-
-      model_sec    — building the corpus bigram LM alone (the doc_bg
-                     aggregation + the (x,y)/(x) count rollups + the
-                     logp join): the part whose input is the corpus
-      full_sec     — the whole query
-      score_sec    — their difference: the doc_bg ⋈ model scoring
-                     join + per-doc aggregation
-      n_model      — LM table rows (replica suffixing keeps replica
-                     bigrams distinct, so this scales with the
-                     factor — the model table genuinely 10×es, which
-                     is what a 10× corpus with new content does)
-      n_doc_bg     — per-doc bigram count rows (the scoring join's
-                     probe side)
-
-    Verdict key: if model_sec and score_sec both track their input
-    sizes (~linear), the >2.5 ratio is two linear stages compounding
-    constant factors at small absolute times, not a superlinear
-    join."""
-    from bigdata_gamedb_etl_spark.operators import textops
-
-    t0 = time.perf_counter()
-    doc_bg, model = textops._bigram_lm_tables(spark, sf_dir)
-    _force(model)
-    model_sec = round(time.perf_counter() - t0, 3)
-    n_model = model.count()
-    n_doc_bg = doc_bg.count()
-    t0 = time.perf_counter()
-    _force(textops.text_bigram_logprob(spark, sf_dir))
-    full_sec = round(time.perf_counter() - t0, 3)
-    return {
-        "model_sec": model_sec,
-        "full_sec": full_sec,
-        "score_sec": round(max(0.0, full_sec - model_sec), 3),
-        "n_model": n_model,
-        "n_doc_bg": n_doc_bg,
-    }
-
-
-#: Batch fractions for the incremental-CC probe axis: doc_id % mod == 0
-#: plays the batch, so mod 5 = 20% batch and mod 20 = 5% batch.
-INCR_PROBE_MODS = (5, 20)
-
-
-def _incremental_cc_stage_breakdown(spark, sf_dir: str) -> dict:
-    """Decompose dedup_incremental_cc's cost into its scaling claims
-    (r9 verdict item 2: the op's value proposition is 'merge cost
-    tracks the batch, not the corpus' — measure it, per batch
-    fraction and per corpus scale):
-
-      edges_sec      — the shared Jaccard pair generation (input cost,
-                       corpus-bound; charged once, outside the claim)
-      prior_cc_sec   — CC over the old-old subgraph (the corpus-bound
-                       term; production persists this between ingests
-                       and never re-pays it)
-      merge_sec      — the contraction merge FROM a materialized prior
-                       (the term production actually pays per batch —
-                       the claim is that THIS tracks batch size)
-      batch_edges    — how many edges the batch contributed (the
-                       merge's true input size, contextualizing
-                       merge_sec across fractions and scales)
-
-    Single-shot timings (the probe already runs base+scaled; the
-    claim's signal — merge_sec ordering across fractions and its
-    growth vs prior_cc_sec's across scales — is far coarser than
-    run-to-run noise)."""
-    from pyspark.sql import functions as F
-
-    from bigdata_gamedb_etl_spark.operators import dedup
-
-    t0 = time.perf_counter()
-    pairs = (
-        dedup.dedup_ngram_jaccard_pairs(spark, sf_dir)
-        .select("d1", "d2")
-        .localCheckpoint(eager=True)
-    )
-    out: dict = {"edges_sec": round(time.perf_counter() - t0, 3)}
-    for mod in INCR_PROBE_MODS:
-        new1 = F.col("d1") % mod == 0
-        new2 = F.col("d2") % mod == 0
-        t0 = time.perf_counter()
-        prior = dedup._min_label_components(
-            pairs.where(~new1 & ~new2), False
-        ).localCheckpoint(eager=True)
-        prior_sec = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        _force(
-            dedup._incremental_cc_from_pairs(
-                pairs, False, mod=mod, prior=prior
+    sides: dict[str, dict[str, tuple[float, float | None]]] = {}
+    for side, d in (("base", SF_DIR), ("scaled", probe_dir)):
+        sides[side] = {}
+        for name in SCALE_PROBE_QUERIES:
+            walls, cpus = _best_of(
+                lambda: _force(queries[name](spark, d)), PROBE_RUNS
             )
-        )
-        merge_sec = round(time.perf_counter() - t0, 3)
-        out[f"mod{mod}"] = {
-            "batch_fraction": round(1.0 / mod, 3),
-            "prior_cc_sec": prior_sec,
-            "merge_sec": merge_sec,
-            "batch_edges": pairs.where(new1 | new2).count(),
-        }
-    return out
+            sides[side][name] = (min(walls), _min_cpu(cpus))
+    base, scaled = sides["base"], sides["scaled"]
+
+    def _ratio(num, den):
+        return round(num / den, 2) if den and num is not None else None
+
+    scale_probe = {
+        "factor": SCALE_PROBE_FACTOR,
+        "probed": list(SCALE_PROBE_QUERIES),
+        "base_sec": {n: w for n, (w, _) in base.items()},
+        "scaled_sec": {n: w for n, (w, _) in scaled.items()},
+        "ratio": {
+            n: _ratio(scaled[n][0], base[n][0]) for n in SCALE_PROBE_QUERIES
+        },
+        "base_cpu_sec": {n: c for n, (_, c) in base.items()},
+        "scaled_cpu_sec": {n: c for n, (_, c) in scaled.items()},
+        "cpu_ratio": {
+            n: _ratio(scaled[n][1], base[n][1]) for n in SCALE_PROBE_QUERIES
+        },
+        "cpu_ratio_note": (
+            "cpu_ratio is the contention-proof scaling measure: "
+            "factor-x data means factor-x total work, so a linear "
+            "family reads cpu_ratio ~= factor while its wall ratio "
+            "sits far lower because the larger input also fills more "
+            "of the cores (per-unit growth = cpu_ratio / factor).  "
+            "cpu_ratio well below the factor = fixed overhead "
+            "amortizing (sublinear); well above = superlinear work, "
+            "the thing the probe hunts.  Wall-vs-cpu disagreement "
+            "localizes contention to the window.  CPU is min-of-runs "
+            "per side."
+        ),
+    }
+    quiet = _quiet_verdict(env_before, _env_capture())
+    payload = {
+        "quiet": quiet,
+        "scale_probe": scale_probe,
+        "sf": _sf_value(SF_DIR),
+        "testdata": fingerprint,
+    }
+    with open(PROBE_FILE, "w") as fh:
+        json.dump(payload, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    print(json.dumps({
+        "quiet_verdict": quiet["verdict"],
+        "ratio": scale_probe["ratio"],
+        "probe_file": os.path.basename(PROBE_FILE),
+    }))
 
 
 def summary_payload(
@@ -1557,11 +622,9 @@ def summary_payload(
     env_after: dict | None = None,
 ) -> dict:
     """The ONE stdout JSON line: headline totals + the pinned SHARED12
-    series + the testdata fingerprint + a compact contention snapshot
-    (r7 verdict item 1: a fleet-wide timing shift must be attributable
-    to machine load from the recorded payload alone).  Everything else
-    goes to BENCH_DETAIL.json — the driver's tail capture is 2000
-    chars and round 6 proved the full dump doesn't fit."""
+    series and scaling cohort + the testdata fingerprint + a compact
+    contention snapshot.  Everything else goes to BENCH_DETAIL.json —
+    the harness's tail capture is 2000 chars."""
     env = {}
     for k in ("load1", "n_procs"):
         b = (env_before or {}).get(k)
@@ -1584,17 +647,13 @@ def summary_payload(
         )
     return {
         "metric": (
-            "headline-query wall clock (noop sink, best of 3 runs), "
-            f"sum of {len(timings)} timed queries (SHARED12 + scaling "
-            "cohort shown; rotation + per-query detail in "
-            "BENCH_DETAIL.json)"
+            "headline-query wall clock (noop sink, best of "
+            f"{HEADLINE_RUNS} runs), sum of {len(timings)} timed queries "
+            "(SHARED12 + scaling "
+            "cohort shown; per-query detail in BENCH_DETAIL.json)"
         ),
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        # SHARED12 first (the pinned round-over-round comparable),
-        # then the CPU-heavy scaling cohort (r15 — additions only:
-        # the driver's low-core ratio needs queries that actually
-        # use the cores at sf0.1)
         "queries": {
             n: timings[n]
             for n in SHARED12 + [c for c in SCALING_COHORT
@@ -1610,58 +669,25 @@ def summary_payload(
         "sf": sf_val,
         "testdata": fingerprint,
         "env": env,
-        "detail_file": "BENCH_DETAIL.json",
+        "detail_file": os.path.basename(DETAIL_FILE),
     }
 
 
-def _prior_detail(live_hash: str) -> dict | None:
-    """The committed prior BENCH_DETAIL.json, or None when absent,
-    unparseable, or recorded against different testdata (carryover
-    and deltas are only meaningful on byte-identical inputs)."""
-    if not os.path.exists(DETAIL_FILE):
-        return None
-    try:
-        prior = json.load(open(DETAIL_FILE))
-    except Exception:
-        return None
-    if (prior.get("testdata") or {}).get("hash") != live_hash:
-        return None
-    return prior
-
-
-def _deltas_vs_prior(
-    timings: dict, live_hash: str, prior_series: dict | None = None
-) -> dict | None:
-    """Ratio of this run's timings to the newest prior run on
-    byte-identical testdata, or None if no comparable prior exists.
-    prior_series (timed ∪ carried, r13) is the primary source; the
-    BENCH_r*.json parsed summaries are the fallback."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    prior_q: dict | None = dict(prior_series) if prior_series else None
-    if prior_q is None:
-        prior_rounds = []
-        for f in glob.glob(os.path.join(here, "BENCH_r*.json")):
-            try:
-                parsed = json.load(open(f)).get("parsed") or {}
-            except Exception:
-                continue
-            if (parsed.get("testdata") or {}).get("hash") == live_hash:
-                rnd = int(re.search(r"BENCH_r(\d+)", f).group(1))
-                prior_rounds.append((rnd, parsed))
-        if prior_rounds:
-            _, prior = max(prior_rounds)
-            prior_q = prior.get("queries") or {}
-    if not prior_q:
-        return None
-    return {
-        n: round(timings[n] / prior_q[n], 2)
-        for n in timings
-        if n in prior_q and prior_q[n]
-    }
+def main(argv: list[str]) -> None:
+    if argv not in ([], ["probe"]):
+        sys.exit("usage: python bench.py [probe]")
+    queries = _bench_queries()
+    env_before = _env_capture()
+    spark = get_spark(app_name="bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    # warm the JVM/codegen path once so per-query timings aren't
+    # dominated by first-action startup cost
+    _force(queries["tpch_q1_pricing_summary"](spark, SF_DIR))
+    if argv:
+        run_probe(spark, queries, env_before)
+    else:
+        run_headline(spark, queries, env_before)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

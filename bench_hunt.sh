@@ -13,18 +13,18 @@
 #      the tree) and retries.
 #
 # Usage:
-#   ./bench_hunt.sh            # full adjudicating run -> BENCH_DETAIL.json
-#   ./bench_hunt.sh probe      # probe tier only      -> BENCH_PROBE.json
+#   ./bench_hunt.sh            # headline run -> BENCH_DETAIL.json
+#   ./bench_hunt.sh probe      # probe tier   -> BENCH_PROBE.json
 #
-# Discipline (from rounds 12-14 of the tracked history):
+# Discipline:
 # - Do not run tests or other Spark jobs while this hunts; they spoil
 #   the window.  After a pytest run, load1 needs ~3 min to decay.
 # - Kill leftover hunts from earlier sessions first (pgrep -f bench_hunt).
 # - Read load1 AFTER the steal window, immediately before launching -
 #   a pre-sleep reading is stale and has cost an attempt before.
-# - Since r14, cpu_sec / cpu_ratio make single-run adjudication
-#   possible (wall up + CPU flat = contention); the quiet label still
-#   gates which run is the round's artifact of record.
+# - cpu_sec / cpu_ratio make single-run adjudication possible (wall
+#   up + CPU flat = contention); the quiet label still gates which
+#   run is the artifact of record.
 set -u
 cd "$(dirname "$0")"
 MODE="${1:-all}"
@@ -54,7 +54,7 @@ for attempt in 1 2 3 4 5 6 7 8; do
     sleep 45
   done
   if [ "$MODE" = probe ]; then
-    SPARK_GRAFT_BENCH_SET=probe python bench.py
+    python bench.py probe
   else
     python bench.py
   fi

@@ -141,10 +141,10 @@ ORDER BY keeper_id
 # --------------------------------------------------------------------------
 def _jaccard_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The inverted-index build alone — (s, docs: array<struct>) per
-    surviving shingle — factored out of _posting_pair_counts so the
-    bench scale probe can time index-build vs pair-emit separately
-    (r11 verdict item 3: the 3.2× probe ratio needed a stage
-    decomposition, not a declared guess)."""
+    surviving shingle — the input of _posting_pair_counts' pair emit,
+    whose work is the posting pair mass Σ C(df, 2).  That mass grew
+    exactly 10× (1,265,779 → 12,657,790) from sf0.1 to its 10× replica
+    slice."""
     sh = _shingled(spark, sf_dir)
     ex = sh.select(
         "doc_id",
@@ -2089,15 +2089,14 @@ def dedup_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is PROVABLY identical to a full recompute — the oracle is
     full-graph reachability (same SQL as dedup_cluster_assign).
 
-    The batch-not-corpus cost claim is MEASURED (r10, bench.py
-    incremental_cc_stages at sf0.1 and its 10× slice): the contraction
-    merge from a materialized prior ran 1.29→1.44 s across the 10×
-    corpus step at a 5% batch (1.35→1.70 s at 20%) — ordered by batch
-    fraction, near-flat in corpus size — while the corpus-bound term
-    is the edge generation (3.5→7.4 s), which production amortizes
-    across every consumer of the pair graph, and the prior state,
-    which production persists between ingests instead of regenerating
-    in-query as this benchmark shape must.
+    The batch-not-corpus cost claim was measured at sf0.1 and its 10×
+    replica slice: the contraction merge from a materialized prior ran
+    1.29→1.44 s across the 10× corpus step at a 5% batch (1.35→1.70 s
+    at 20%) — ordered by batch fraction, near-flat in corpus size —
+    while the corpus-bound term is the edge generation (3.5→7.4 s),
+    which production amortizes across every consumer of the pair
+    graph, and the prior state, which production persists between
+    ingests instead of regenerating in-query as this query must.
 
     Output: (doc_id, cluster_id) for every doc in ≥1 full-graph pair."""
     reliable = (
@@ -2111,29 +2110,21 @@ def dedup_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_cc_from_pairs(
-    pairs: DataFrame,
-    reliable: bool,
-    mod: int = INCR_MOD,
-    prior: DataFrame | None = None,
+    pairs: DataFrame, reliable: bool
 ) -> DataFrame:
     """The contraction merge over an explicit (d1, d2) pair DataFrame —
     split out so the bridge fixtures can drive it directly
     (tests/test_llm_pipeline.py::test_incremental_cc_matches_full_recompute).
-
-    `mod` sets the batch fraction (doc_id % mod == 0 plays the batch);
-    `prior` lets the bench's stage breakdown pass the persisted prior
-    state explicitly, isolating the merge cost the production ingest
-    loop actually pays (in-query we regenerate it, which is the
-    corpus-bound term)."""
-    new1 = F.col("d1") % mod == 0
-    new2 = F.col("d2") % mod == 0
+    doc_id % INCR_MOD == 0 plays the batch; the prior state is
+    regenerated in-query (the corpus-bound term)."""
+    new1 = F.col("d1") % INCR_MOD == 0
+    new2 = F.col("d2") % INCR_MOD == 0
     old_old = pairs.where(~new1 & ~new2)
     new_edges = pairs.where(new1 | new2)
 
-    if prior is None:
-        prior = _materialize_iter(
-            _min_label_components(old_old, reliable), reliable
-        )  # (doc_id, cluster_id) over docs with ≥1 old-old edge
+    prior = _materialize_iter(
+        _min_label_components(old_old, reliable), reliable
+    )  # (doc_id, cluster_id) over docs with ≥1 old-old edge
 
     lab1 = prior.select(
         F.col("doc_id").alias("d1"), F.col("cluster_id").alias("c1")

@@ -675,11 +675,11 @@ def _pq_round_sums(
     uq_train: DataFrame, cents: dict[tuple[int, int], list[int]]
 ):
     """One fused joint-Lloyd round for the PQ fit (r15, guide §4):
-    replaces subspace-explode (32× rows) → _pq_assign pandas UDF →
+    replaces subspace-explode (32× rows) → assignment pandas UDF →
     (j, code) JVM hash aggregate with ONE mapInArrow over the train
     unit vectors emitting ≤ PQ_M·PQ_K partial-sum rows per task.
-    Integer-identical to the old path (same argmin/tie-break per
-    subspace, int64 sums associate)."""
+    Integer-identical to the spec composition in tests/pq_spec.py
+    (same argmin/tie-break per subspace, int64 sums associate)."""
     import numpy as np
 
     js = sorted({jj for jj, _ in cents})
@@ -740,13 +740,27 @@ def _pq_round_sums(
     )
 
 
+def _cell_book(books: dict, cell: int, j: int):
+    """books[(cell, j)] for the residual kernels, or a ValueError
+    naming the uncovered cell instead of a bare executor KeyError."""
+    try:
+        return books[(cell, j)]
+    except KeyError:
+        raise ValueError(
+            f"residual PQ kernel got cell {cell}, which has no codebook "
+            f"for subspace {j}: callers pre-filter to covered cells "
+            "(cells with at least one train member)"
+        ) from None
+
+
 def _rpq_round_sums(
     res_train: DataFrame, cents: dict[tuple[int, int, int], list[int]]
 ):
     """The per-cell residual twin of _pq_round_sums: one mapInArrow
     over (cell, r) emitting ≤ |cells|·PQ_M·PQ_K partial rows per
     task.  Callers pre-filter to cells with a codebook (train rows
-    always are — each train vector is a member of its own cell)."""
+    always are — each train vector is a member of its own cell); an
+    uncovered cell raises ValueError (_cell_book)."""
     import numpy as np
 
     books = {}
@@ -777,7 +791,7 @@ def _rpq_round_sums(
             for cell in np.unique(cl):
                 idx = np.where(cl == cell)[0]
                 for j in range(PQ_M):
-                    ids_j, Cj, cn2 = books[(int(cell), j)]
+                    ids_j, Cj, cn2 = _cell_book(books, int(cell), j)
                     E = R[np.ix_(idx, range(j * PQ_SUBDIM,
                                             (j + 1) * PQ_SUBDIM))]
                     pos = np.argmin(
@@ -1675,65 +1689,6 @@ def _pq_unit_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_subspaces(uq: DataFrame) -> DataFrame:
-    """(vec_id, j, sub bigint[PQ_SUBDIM]) — one row per subspace."""
-    return uq.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice("u", j * PQ_SUBDIM + 1, PQ_SUBDIM).alias(
-                            "sub"
-                        ),
-                    )
-                    for j in range(PQ_M)
-                ]
-            )
-        ).alias("x"),
-    ).select("vec_id", "x.j", "x.sub")
-
-
-def _pq_assign(
-    subs: DataFrame, cents: dict[tuple[int, int], list[int]]
-) -> DataFrame:
-    """Nearest sub-centroid per (vec, subspace) — ONE Arrow-batched
-    integer GEMM pass covering all PQ_M subspaces (the batch is
-    grouped by j inside the UDF; ties to the smallest code id,
-    matching the oracle's FIRST(code ORDER BY dist2, code))."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType
-
-    books: dict[int, tuple] = {}
-    for j in sorted({jj for jj, _ in cents}):
-        codes = sorted(c for jj, c in cents if jj == j)
-        books[j] = (
-            np.asarray(codes, dtype=np.int64),
-            np.asarray([cents[(j, c)] for c in codes], dtype=np.int64),
-        )
-
-    @pandas_udf(IntegerType())
-    def codeof(js, sub):
-        if not len(js):
-            return pd.Series([], dtype="int32")
-        out = np.zeros(len(js), dtype=np.int64)
-        jarr = js.to_numpy()
-        for j in np.unique(jarr):
-            idx = np.where(jarr == j)[0]
-            ids, C = books[int(j)]
-            E = np.vstack(sub.iloc[idx].to_numpy()).astype(np.int64)
-            # argmin of dist² == argmin of (−2·e·c + |c|²); all int64,
-            # no overflow: |u|,|c| ≤ ~1.1e6, PQ_SUBDIM ≤ 4 dims
-            score = -2 * (E @ C.T) + (C * C).sum(axis=1)[None, :]
-            out[idx] = ids[np.argmin(score, axis=1)]
-        return pd.Series(out.astype("int32"))
-
-    return subs.withColumn("code", codeof("j", "sub"))
-
-
 def _pq_adc_sum(
     cents: dict[tuple[int, int], list[int]],
     lut: dict[tuple[int, int], int],
@@ -1742,7 +1697,8 @@ def _pq_adc_sum(
     ONE Arrow-batched kernel u → Σ_j pdot[j, nearest-code_j] replaces
     the 32×-row subspace explode → per-(j,sub) assignment UDF →
     broadcast-LUT join → groupBy(vec_id) SUM — the same integers
-    (argmin ties to the smallest code id exactly like _pq_assign;
+    (argmin ties to the smallest code id exactly like the spec's
+    pq_assign in tests/pq_spec.py;
     int64 throughout, |Σ| ≤ PQ_M·2·(1.1e6)² ≈ 1.6e14 ≪ 2⁶³), one
     Python boundary crossing one row per VECTOR instead of PQ_M, and
     zero exchanges where the explode shape paid one per serving
@@ -1776,7 +1732,7 @@ def _pq_adc_sum(
             # argmin of dist² == argmin of (−2·e·c + |c|²); ties to
             # the smallest code id (rows of C are code-id-ascending,
             # np.argmin returns the first minimum) — same contract as
-            # _pq_assign's codeof
+            # the spec pq_assign's codeof
             score = -2 * (E @ C.T) + (C * C).sum(axis=1)[None, :]
             total += pd_j[np.argmin(score, axis=1)]
         return pd.Series(total)
@@ -1797,8 +1753,9 @@ def _rpq_adc_sum(
     assignment UDF + broadcast-LUT join + groupBy + broadcast offset
     join of the old serving tail.  Same integers throughout
     (residual coords ≤ ~2.2e6, |total| ≤ ~2.3e14 ≪ 2⁶³; argmin ties
-    to the smallest code id like _rpq_assign).  Callers pre-filter to
-    cells that HAVE a codebook, exactly as _rpq_assign required."""
+    to the smallest code id like the spec's rpq_assign in
+    tests/pq_spec.py).  Callers pre-filter to cells that HAVE a
+    codebook; an uncovered cell raises ValueError (_cell_book)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -1823,11 +1780,11 @@ def _rpq_adc_sum(
         cl = cells.to_numpy().astype(np.int64)
         total = np.zeros(len(us), dtype=np.int64)
         for cell in np.unique(cl):
+            cbooks = [_cell_book(books, int(cell), j) for j in range(PQ_M)]
             idx = np.where(cl == cell)[0]
             R = U[idx] - cu_arr[int(cell)][None, :]
             t = np.full(len(idx), off[int(cell)], dtype=np.int64)
-            for j in range(PQ_M):
-                C, pd_j = books[(int(cell), j)]
+            for j, (C, pd_j) in enumerate(cbooks):
                 E = R[:, j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
                 score = -2 * (E @ C.T) + (C * C).sum(axis=1)[None, :]
                 t += pd_j[np.argmin(score, axis=1)]
@@ -1874,7 +1831,7 @@ def _pq_int_fit(
         # fused assign+partial-sum round (r15, guide §4): each task
         # emits ≤ PQ_M·PQ_K model-sized partial rows straight from the
         # train unit vectors — the r14 shape (subspace explode barrier
-        # → _pq_assign pandas UDF → (j, code) hash aggregate) crossed
+        # → assignment pandas UDF → (j, code) hash aggregate) crossed
         # the Python boundary with 32× the rows each round; see
         # _pq_round_sums for the exact-integer equivalence.  The train
         # slice is a cheap filter over the caller's materialized uq,
@@ -2234,71 +2191,6 @@ def _rpq_residuals(
             F.zip_with("u", "cu", lambda a, b: a - b).alias("r"),
         )
     )
-
-
-def _rpq_subspaces(res: DataFrame) -> DataFrame:
-    """(vec_id, cell, j, sub bigint[PQ_SUBDIM]) — the residual analog
-    of _pq_subspaces, carrying the cell through."""
-    return res.select(
-        "vec_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.slice("r", j * PQ_SUBDIM + 1, PQ_SUBDIM).alias(
-                            "sub"
-                        ),
-                    )
-                    for j in range(PQ_M)
-                ]
-            )
-        ).alias("x"),
-    ).select("vec_id", "cell", "x.j", "x.sub")
-
-
-def _rpq_assign(
-    subs: DataFrame, cents: dict[tuple[int, int, int], list[int]]
-) -> DataFrame:
-    """Nearest residual sub-centroid per (vec, subspace) under that
-    vec's CELL codebook — one Arrow-batched integer GEMM pass, batch
-    grouped by (cell, j) inside the UDF.  Callers must pre-filter to
-    cells that HAVE a codebook (cells with ≥1 train member keep one
-    for every j — each train vector stays in its cell, so the per-
-    (cell, j) GROUP BY never empties while the cell has members)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import IntegerType
-
-    books: dict[tuple[int, int], tuple] = {}
-    for cell, j in sorted({(c, j) for c, j, _ in cents}):
-        codes = sorted(k for cc, jj, k in cents if cc == cell and jj == j)
-        books[(cell, j)] = (
-            np.asarray(codes, dtype=np.int64),
-            np.asarray(
-                [cents[(cell, j, k)] for k in codes], dtype=np.int64
-            ),
-        )
-
-    @pandas_udf(IntegerType())
-    def codeof(cells, js, sub):
-        if not len(js):
-            return pd.Series([], dtype="int32")
-        out = np.zeros(len(js), dtype=np.int64)
-        key = cells.to_numpy().astype(np.int64) * PQ_M + js.to_numpy()
-        for kk in np.unique(key):
-            idx = np.where(key == kk)[0]
-            ids, C = books[(int(kk) // PQ_M, int(kk) % PQ_M)]
-            E = np.vstack(sub.iloc[idx].to_numpy()).astype(np.int64)
-            # argmin of dist² == argmin of (−2·e·c + |c|²); all int64,
-            # no overflow: residual coords ≤ ~2.2e6, PQ_SUBDIM ≤ 4 dims
-            score = -2 * (E @ C.T) + (C * C).sum(axis=1)[None, :]
-            out[idx] = ids[np.argmin(score, axis=1)]
-        return pd.Series(out.astype("int32"))
-
-    return subs.withColumn("code", codeof("cell", "j", "sub"))
 
 
 def _rpq_int_fit(

@@ -1145,9 +1145,10 @@ def _bigram_lm_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(doc_bg, model) — the per-doc bigram counts and the corpus LM
-    table.  Factored out (r13) so the bench's stage decomposition can
-    time the LM build separately from the scoring join while sharing
-    this exact construction with the query."""
+    table, the two inputs of text_bigram_logprob's scoring join.  On
+    the 10× replica slice the model table grows with the factor
+    (replica suffixing keeps replica bigrams distinct), as it does
+    for a 10× corpus of new content."""
     d = table(spark, sf_dir, "documents")
     stream = d.select(
         "doc_id", F.explode(F.expr(_BIGRAMS_DOC)).alias("bg")

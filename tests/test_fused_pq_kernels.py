@@ -3,13 +3,13 @@
 The PQ/IVF family's serving and fit hot paths were fused into single
 Arrow kernels in r15:
 
-  _pq_round_sums      ≡ _pq_assign(_pq_subspaces(·)) → groupBy(j, code)
-  _rpq_round_sums     ≡ _rpq_assign(_rpq_subspaces(·)) → groupBy(cell, j, code)
+  _pq_round_sums      ≡ pq_assign(pq_subspaces(·)) → groupBy(j, code)
+  _rpq_round_sums     ≡ rpq_assign(rpq_subspaces(·)) → groupBy(cell, j, code)
   _pq_adc_sum         ≡ encode → broadcast-LUT join → groupBy(vec_id).sum
   _rpq_adc_sum        ≡ residual join → encode → LUT join → sum → offset join
 
-The un-fused forms stay in the module as the executable SPEC (the
-hypothesis property test drives _rpq_assign's GEMM against plain-Python
+The un-fused forms live in tests/pq_spec.py as the executable SPEC (the
+hypothesis property test drives rpq_assign's GEMM against plain-Python
 argmin); these tests prove each fused kernel returns EXACTLY the same
 integers as its spec composition on the real corpus, so the oracle-
 parity guarantee transfers to the fused plans.
@@ -17,9 +17,11 @@ parity guarantee transfers to the fused plans.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_gamedb_etl_spark.operators import similarity as sim
+from pq_spec import pq_assign, pq_subspaces, rpq_assign, rpq_subspaces
 
 
 def _uq_and_cents(spark, sf_dir):
@@ -40,7 +42,7 @@ def test_pq_round_sums_match_explode_aggregate(spark, sf_dir):
     spec = {
         (r["j"], r["code"]): ([r[f"s{d}"] for d in range(sim.PQ_SUBDIM)],
                               r["n"])
-        for r in sim._pq_assign(sim._pq_subspaces(train), cents)
+        for r in pq_assign(pq_subspaces(train), cents)
         .groupBy("j", "code")
         .agg(*sim._dim_sum_aggs("sub", sim.PQ_SUBDIM))
         .collect()
@@ -71,7 +73,7 @@ def test_rpq_round_sums_match_explode_aggregate(spark, sf_dir):
         (r["cell"], r["j"], r["code"]): (
             [r[f"s{d}"] for d in range(sim.PQ_SUBDIM)], r["n"]
         )
-        for r in sim._rpq_assign(sim._rpq_subspaces(res_train), rcents)
+        for r in rpq_assign(rpq_subspaces(res_train), rcents)
         .groupBy("cell", "j", "code")
         .agg(*sim._dim_sum_aggs("sub", sim.PQ_SUBDIM))
         .collect()
@@ -104,7 +106,7 @@ def test_pq_adc_sum_matches_lut_join(spark, sf_dir):
     )
     spec = {
         r["vec_id"]: r["s"]
-        for r in sim._pq_assign(sim._pq_subspaces(uq), cents)
+        for r in pq_assign(pq_subspaces(uq), cents)
         .join(F.broadcast(lut_df), ["j", "code"])
         .groupBy("vec_id")
         .agg(F.sum("pdot").alias("s"))
@@ -166,8 +168,8 @@ def test_rpq_adc_sum_matches_join_chain(spark, sf_dir):
     off_df = spark.createDataFrame(
         sorted(off.items()), "cell int, odot bigint"
     )
-    enc = sim._rpq_assign(
-        sim._rpq_subspaces(
+    enc = rpq_assign(
+        rpq_subspaces(
             sim._rpq_residuals(
                 uq.join(cand.select("vec_id"), "vec_id"), assigned, cunit
             )
@@ -184,3 +186,34 @@ def test_rpq_adc_sum_matches_join_chain(spark, sf_dir):
         .collect()
     }
     assert fused == spec
+
+
+def _one_cell_codebook():
+    """Residual codebook covering cell 0 only (one zero code per j)."""
+    return {(0, j, 0): [0] * sim.PQ_SUBDIM for j in range(sim.PQ_M)}
+
+
+_UNCOVERED = r"cell 1, which has no codebook.*callers pre-filter to covered"
+
+
+def test_rpq_round_sums_rejects_uncovered_cell(spark):
+    res = spark.createDataFrame(
+        [(0, 1, [1] * sim._EMB_DIM)], "vec_id long, cell int, r array<bigint>"
+    )
+    with pytest.raises(Exception, match=_UNCOVERED):
+        sim._rpq_round_sums(res, _one_cell_codebook()).collect()
+
+
+def test_rpq_adc_sum_rejects_uncovered_cell(spark):
+    rcents = _one_cell_codebook()
+    radc = sim._rpq_adc_sum(
+        rcents,
+        {key: 0 for key in rcents},
+        {0: [0] * sim._EMB_DIM, 1: [0] * sim._EMB_DIM},
+        {0: 0, 1: 0},
+    )
+    uq = spark.createDataFrame(
+        [(1, [1] * sim._EMB_DIM)], "cell int, u array<bigint>"
+    )
+    with pytest.raises(Exception, match=_UNCOVERED):
+        uq.select(radc("cell", "u")).collect()

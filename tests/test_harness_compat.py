@@ -234,10 +234,9 @@ def test_bench_summary_line_fits_capture_budget():
 
 
 def test_bench_summary_payload_tolerates_shared12_only_timings():
-    """The SHARED12-only diagnostic mode (SPARK_GRAFT_BENCH_SET=
-    shared12) builds the summary line from a timings dict that has NO
-    EXTRAS entries; summary_payload must not KeyError on the missing
-    series (extras_sec reports 0 for the absent set)."""
+    """summary_payload must not KeyError on a timings dict that has
+    NO EXTRAS entries (a partial dict, e.g. built by hand from an
+    artifact); extras_sec reports 0 for the absent set."""
     import os
     import sys
 
@@ -249,6 +248,29 @@ def test_bench_summary_payload_tolerates_shared12_only_timings():
     payload = summary_payload(timings, fp, 0.1, {}, {})
     assert payload["shared12_sec"] == float(len(SHARED12))
     assert payload["extras_sec"] == 0
+
+
+def test_bench_summary_payload_keys_and_query_order():
+    """The bench harness parses the summary line: its top-level keys
+    are fixed, and `queries` lists SHARED12 first, then the rest of
+    the SCALING_COHORT in declared order.  Entries are only ever
+    added, never removed or renamed."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    from bench import HEADLINE, SCALING_COHORT, SHARED12, summary_payload
+
+    timings = {n: 1.0 for n in HEADLINE}
+    fp = {"hash": "f" * 16, "total_bytes": 1, "n_files": 10}
+    payload = summary_payload(timings, fp, 0.1, {}, {})
+    assert list(payload) == [
+        "metric", "value", "unit", "queries", "shared12_sec",
+        "extras_sec", "sf", "testdata", "env", "detail_file",
+    ]
+    assert list(payload["queries"]) == SHARED12 + [
+        n for n in SCALING_COHORT if n not in SHARED12
+    ]
 
 
 def test_bench_names_are_registered():
@@ -384,7 +406,6 @@ def test_committed_bench_artifacts_are_self_labeling_and_complete():
     for n in d["queries"]:
         assert n in d["per_query_runs"] and len(d["per_query_runs"][n]) == 3
         assert n in d["cpu_sec"], f"{n} missing cpu_sec (r14 contract)"
-    assert set(d["queries_carryover"]).isdisjoint(d["queries"])
     assert d["shared12_sec"] > 0
 
     with open(os.path.join(root, "BENCH_PROBE.json")) as fh:

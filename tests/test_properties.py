@@ -731,7 +731,7 @@ def test_rpq_assign_gemm_matches_spec_argmin(spark, data, books):
     gap-coded) per-cell codebooks.  The oracle checks this only on the
     two fixed corpora; this pins the UDF itself, overflow headroom
     and tie policy included."""
-    from bigdata_gamedb_etl_spark.operators.similarity import _rpq_assign
+    from pq_spec import rpq_assign
 
     cents = {}
     for cell, j, code, c in books:
@@ -749,7 +749,7 @@ def test_rpq_assign_gemm_matches_spec_argmin(spark, data, books):
     )
     got = {
         r["vec_id"]: r["code"]
-        for r in _rpq_assign(df, cents).collect()
+        for r in rpq_assign(df, cents).collect()
     }
     for vec_id, cell, j, sub in rows:
         want = min(
