@@ -26,26 +26,16 @@ the corpus); LSH/IVF cut the scan to a bucket subset.
 
 from __future__ import annotations
 
-import sys
-
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import table
 from ._rounding import _fr4
 
-# The r15 fused kernels (_pq_round_sums / _rpq_round_sums /
-# _pq_adc_sum / _rpq_adc_sum) call the module-level _np_fixed /
-# _scatter_sums helpers from inside executor-side functions; plain
-# cloudpickle ships module-level functions BY REFERENCE, which dies
-# with ModuleNotFoundError on any harness whose executors run from a
-# different cwd (the multimodal/windowed precedent — their module
-# docstrings carry the original war story).  Registering the module
-# for by-value pickling ships the referenced function bodies inside
-# the task; their only foreign deps (numpy, pyarrow) exist on every
-# worker.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
+# Executor-side functions here are closures, which cloudpickle ships by
+# value.  A module-level function they call, even through a local
+# alias, ships by reference and needs this package importable on the
+# executors — so kernel helpers are nested inside the kernel factories.
 
 QUERY_VEC_ID = 0
 TOP_K = 20
@@ -636,144 +626,69 @@ def _dims_of(row, n_dims: int) -> list[int]:
     ]
 
 
-def _np_fixed(col, width: int):
-    """(n, width) int64 ndarray from an Arrow list<int64> batch column
-    — one flatten of the fixed-width value buffer (offset-safe), no
-    per-row Python objects."""
+def _pq_codebooks(cents: dict[tuple[int, int, int], list[int]]):
+    """The PQ codebook layout, built here only: `cents` maps (cell, j,
+    code) to a sub-centroid, and books[(cell, j)] holds (code ids
+    ascending, the sub-centroids as int64 rows in that order, their
+    squared norms) — so np.argmin over a row of scores ties to the
+    smallest code id, like the spec's FIRST(code ORDER BY dist2, code).
+    `book(cell, j)` is the executor-side lookup: an uncovered cell
+    raises ValueError naming the callers' pre-filter contract instead
+    of a bare KeyError."""
     import numpy as np
 
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(np.int64, copy=False).reshape(-1, width)
-
-
-def _sum_schema_ddl(keys: str, n_dims: int) -> str:
-    return (
-        keys
-        + ", "
-        + ", ".join(f"s{d} bigint" for d in range(n_dims))
-        + ", n bigint"
-    )
-
-
-def _scatter_sums(acc, cnt, pos, E):
-    """acc[p] += column-sums of E's rows with pos == p; cnt bumps by
-    the per-p row counts.  Exact int64 via one stable argsort +
-    np.add.reduceat — np.add.at's unbuffered scatter measured an
-    order of magnitude slower on row blocks this shape."""
-    import numpy as np
-
-    if not len(pos):
-        return
-    order = np.argsort(pos, kind="stable")
-    ps = pos[order]
-    starts = np.flatnonzero(np.r_[True, ps[1:] != ps[:-1]])
-    acc[ps[starts]] += np.add.reduceat(E[order], starts, axis=0)
-    cnt += np.bincount(pos, minlength=len(cnt))
-
-
-def _pq_round_sums(
-    uq_train: DataFrame, cents: dict[tuple[int, int], list[int]]
-):
-    """One fused joint-Lloyd round for the PQ fit (r15, guide §4):
-    replaces subspace-explode (32× rows) → assignment pandas UDF →
-    (j, code) JVM hash aggregate with ONE mapInArrow over the train
-    unit vectors emitting ≤ PQ_M·PQ_K partial-sum rows per task.
-    Integer-identical to the spec composition in tests/pq_spec.py
-    (same argmin/tie-break per subspace, int64 sums associate)."""
-    import numpy as np
-
-    js = sorted({jj for jj, _ in cents})
+    codes: dict[tuple[int, int], list[int]] = {}
+    for cell, j, k in sorted(cents):
+        codes.setdefault((cell, j), []).append(k)
     books = {}
-    for j in js:
-        codes = sorted(c for jj, c in cents if jj == j)
-        Cj = np.asarray([cents[(j, c)] for c in codes], dtype=np.int64)
-        books[j] = (np.asarray(codes, dtype=np.int64), Cj,
-                    (Cj * Cj).sum(axis=1))
-
-    def fn(it):
-        import pyarrow as pa
-
-        acc = {j: np.zeros_like(books[j][1]) for j in js}
-        cnt = {j: np.zeros(len(books[j][0]), dtype=np.int64) for j in js}
-        for batch in it:
-            U = _np_fixed(batch.column(0), _EMB_DIM)
-            for j in js:
-                ids_j, Cj, cn2 = books[j]
-                E = U[:, j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
-                pos = np.argmin(-2 * (E @ Cj.T) + cn2[None, :], axis=1)
-                _scatter_sums(acc[j], cnt[j], pos, E)
-        out_j, out_c, out_s, out_n = [], [], [], []
-        for j in js:
-            nz = np.nonzero(cnt[j])[0]
-            out_j.append(np.full(len(nz), j, dtype=np.int64))
-            out_c.append(books[j][0][nz])
-            out_s.append(acc[j][nz])
-            out_n.append(cnt[j][nz])
-        if out_j and sum(len(a) for a in out_j):
-            S = np.concatenate(out_s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(out_j).astype("int32"),
-                        type=pa.int32(),
-                    ),
-                    pa.array(
-                        np.concatenate(out_c).astype("int32"),
-                        type=pa.int32(),
-                    ),
-                ]
-                + [pa.array(S[:, d]) for d in range(PQ_SUBDIM)]
-                + [pa.array(np.concatenate(out_n))],
-                names=["j", "code"]
-                + [f"s{d}" for d in range(PQ_SUBDIM)]
-                + ["n"],
-            )
-
-    return (
-        uq_train.select("u")
-        .mapInArrow(fn, _sum_schema_ddl("j int, code int", PQ_SUBDIM))
-        .groupBy("j", "code")
-        .agg(
-            *[F.sum(f"s{d}").alias(f"s{d}") for d in range(PQ_SUBDIM)],
-            F.sum("n").alias("n"),
-        )
-    )
-
-
-def _cell_book(books: dict, cell: int, j: int):
-    """books[(cell, j)] for the residual kernels, or a ValueError
-    naming the uncovered cell instead of a bare executor KeyError."""
-    try:
-        return books[(cell, j)]
-    except KeyError:
-        raise ValueError(
-            f"residual PQ kernel got cell {cell}, which has no codebook "
-            f"for subspace {j}: callers pre-filter to covered cells "
-            "(cells with at least one train member)"
-        ) from None
-
-
-def _rpq_round_sums(
-    res_train: DataFrame, cents: dict[tuple[int, int, int], list[int]]
-):
-    """The per-cell residual twin of _pq_round_sums: one mapInArrow
-    over (cell, r) emitting ≤ |cells|·PQ_M·PQ_K partial rows per
-    task.  Callers pre-filter to cells with a codebook (train rows
-    always are — each train vector is a member of its own cell); an
-    uncovered cell raises ValueError (_cell_book)."""
-    import numpy as np
-
-    books = {}
-    for cell, j in sorted({(c, j) for c, j, _ in cents}):
-        codes = sorted(k for cc, jj, k in cents if cc == cell and jj == j)
-        Cj = np.asarray(
-            [cents[(cell, j, k)] for k in codes], dtype=np.int64
-        )
+    for (cell, j), ks in codes.items():
+        C = np.asarray([cents[(cell, j, k)] for k in ks], dtype=np.int64)
         books[(cell, j)] = (
-            np.asarray(codes, dtype=np.int64),
-            Cj,
-            (Cj * Cj).sum(axis=1),
+            np.asarray(ks, dtype=np.int64),
+            C,
+            (C * C).sum(axis=1),
         )
+
+    def book(cell, j):
+        try:
+            return books[(cell, j)]
+        except KeyError:
+            raise ValueError(
+                f"PQ kernel got cell {cell}, which has no codebook "
+                f"for subspace {j}: callers pre-filter to covered cells "
+                "(cells with at least one train member)"
+            ) from None
+
+    return books, book
+
+
+def _rpq_round_kernel(cents: dict[tuple[int, int, int], list[int]]):
+    """The mapInArrow function of one fused Lloyd round: (cell, r)
+    batches → per-(cell, j, code) partial sums and counts, at most
+    |cells|·PQ_M·PQ_K rows per task.  Its helpers are nested so the
+    kernel pickles by value as a whole."""
+    import numpy as np
+
+    books, book = _pq_codebooks(cents)
+
+    def fixed(col):
+        # (n, _EMB_DIM) int64 from an Arrow list<int64> column: one
+        # flatten of the value buffer (offset-safe), no per-row objects
+        flat = col.flatten().to_numpy(zero_copy_only=False)
+        return flat.astype(np.int64, copy=False).reshape(-1, _EMB_DIM)
+
+    def scatter_sums(acc, cnt, pos, E):
+        # acc[p] += column sums of E's rows with pos == p, cnt[p] +=
+        # their count.  Exact int64 via one stable argsort +
+        # np.add.reduceat — np.add.at's unbuffered scatter measured an
+        # order of magnitude slower on row blocks this shape.
+        if not len(pos):
+            return
+        order = np.argsort(pos, kind="stable")
+        ps = pos[order]
+        starts = np.flatnonzero(np.r_[True, ps[1:] != ps[:-1]])
+        acc[ps[starts]] += np.add.reduceat(E[order], starts, axis=0)
+        cnt += np.bincount(pos, minlength=len(cnt))
 
     def fn(it):
         import pyarrow as pa
@@ -787,58 +702,63 @@ def _rpq_round_sums(
             cl = batch.column(0).to_numpy(zero_copy_only=False).astype(
                 np.int64
             )
-            R = _np_fixed(batch.column(1), _EMB_DIM)
-            for cell in np.unique(cl):
-                idx = np.where(cl == cell)[0]
+            R = fixed(batch.column(1))
+            for cell in np.unique(cl).tolist():
+                # one row gather per cell; the subspaces below are views
+                Rc = R[cl == cell]
                 for j in range(PQ_M):
-                    ids_j, Cj, cn2 = _cell_book(books, int(cell), j)
-                    E = R[np.ix_(idx, range(j * PQ_SUBDIM,
-                                            (j + 1) * PQ_SUBDIM))]
-                    pos = np.argmin(
-                        -2 * (E @ Cj.T) + cn2[None, :], axis=1
-                    )
-                    _scatter_sums(
-                        acc[(int(cell), j)], cnt[(int(cell), j)], pos, E
-                    )
-        rows_cell, rows_j, rows_c, rows_s, rows_n = [], [], [], [], []
-        for (cell, j), b in books.items():
-            nz = np.nonzero(cnt[(cell, j)])[0]
-            if not len(nz):
-                continue
-            rows_cell.append(np.full(len(nz), cell, dtype=np.int64))
-            rows_j.append(np.full(len(nz), j, dtype=np.int64))
-            rows_c.append(b[0][nz])
-            rows_s.append(acc[(cell, j)][nz])
-            rows_n.append(cnt[(cell, j)][nz])
-        if rows_cell:
-            S = np.concatenate(rows_s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(rows_cell).astype("int32"),
-                        type=pa.int32(),
-                    ),
-                    pa.array(
-                        np.concatenate(rows_j).astype("int32"),
-                        type=pa.int32(),
-                    ),
-                    pa.array(
-                        np.concatenate(rows_c).astype("int32"),
-                        type=pa.int32(),
-                    ),
-                ]
-                + [pa.array(S[:, d]) for d in range(PQ_SUBDIM)]
-                + [pa.array(np.concatenate(rows_n))],
-                names=["cell", "j", "code"]
-                + [f"s{d}" for d in range(PQ_SUBDIM)]
-                + ["n"],
+                    _, C, cn2 = book(cell, j)
+                    E = Rc[:, j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
+                    # argmin of dist² == argmin of (−2·e·c + |c|²): |e|²
+                    # is a per-row constant
+                    pos = np.argmin(-2 * (E @ C.T) + cn2[None, :], axis=1)
+                    scatter_sums(acc[(cell, j)], cnt[(cell, j)], pos, E)
+        parts = [(key, np.nonzero(cnt[key])[0]) for key in books]
+        parts = [(key, nz) for key, nz in parts if len(nz)]
+        if not parts:
+            return
+
+        def int32s(xs):
+            return pa.array(
+                np.concatenate(xs).astype("int32"), type=pa.int32()
             )
 
-    return (
-        res_train.select("cell", "r")
-        .mapInArrow(
-            fn, _sum_schema_ddl("cell int, j int, code int", PQ_SUBDIM)
+        S = np.concatenate([acc[key][nz] for key, nz in parts])
+        yield pa.RecordBatch.from_arrays(
+            [
+                int32s([np.full(len(nz), key[0]) for key, nz in parts]),
+                int32s([np.full(len(nz), key[1]) for key, nz in parts]),
+                int32s([books[key][0][nz] for key, nz in parts]),
+            ]
+            + [pa.array(S[:, d]) for d in range(PQ_SUBDIM)]
+            + [pa.array(np.concatenate([cnt[k][nz] for k, nz in parts]))],
+            names=["cell", "j", "code"]
+            + [f"s{d}" for d in range(PQ_SUBDIM)]
+            + ["n"],
         )
+
+    return fn
+
+
+def _rpq_round_sums(
+    train: DataFrame, cents: dict[tuple[int, int, int], list[int]]
+) -> DataFrame:
+    """One fused joint-Lloyd round over (cell, r) rows (r15, guide §4):
+    the _rpq_round_kernel mapInArrow plus a (cell, j, code) sum of its
+    model-sized partials, replacing subspace explode (32× rows) →
+    assignment pandas UDF → hash aggregate.  Integer-identical to the
+    spec composition in tests/pq_spec.py (same argmin and tie-break per
+    (cell, j); int64 sums associate).  Callers pre-filter to cells with
+    a codebook (train rows always are: each train vector is a member of
+    its own cell); an uncovered cell raises ValueError."""
+    schema = (
+        "cell int, j int, code int, "
+        + ", ".join(f"s{d} bigint" for d in range(PQ_SUBDIM))
+        + ", n bigint"
+    )
+    return (
+        train.select("cell", "r")
+        .mapInArrow(_rpq_round_kernel(cents), schema)
         .groupBy("cell", "j", "code")
         .agg(
             *[F.sum(f"s{d}").alias(f"s{d}") for d in range(PQ_SUBDIM)],
@@ -1689,156 +1609,132 @@ def _pq_unit_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_adc_sum(
-    cents: dict[tuple[int, int], list[int]],
-    lut: dict[tuple[int, int], int],
-):
-    """Fused encode + ADC sum for the PQ serving pass (r15, guide §4):
-    ONE Arrow-batched kernel u → Σ_j pdot[j, nearest-code_j] replaces
-    the 32×-row subspace explode → per-(j,sub) assignment UDF →
-    broadcast-LUT join → groupBy(vec_id) SUM — the same integers
-    (argmin ties to the smallest code id exactly like the spec's
-    pq_assign in tests/pq_spec.py;
-    int64 throughout, |Σ| ≤ PQ_M·2·(1.1e6)² ≈ 1.6e14 ≪ 2⁶³), one
-    Python boundary crossing one row per VECTOR instead of PQ_M, and
-    zero exchanges where the explode shape paid one per serving
-    query.  Codebook and query lookup table are model-sized closure
-    constants — the per-task rebuild cost production would amortize
-    via a persisted code table is the same constant the broadcast
-    LUT paid."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    js = sorted({jj for jj, _ in cents})
-    books = {}
-    for j in js:
-        codes = sorted(c for jj, c in cents if jj == j)
-        books[j] = (
-            np.asarray([cents[(j, c)] for c in codes], dtype=np.int64),
-            np.asarray([lut[(j, c)] for c in codes], dtype=np.int64),
-        )
-
-    @pandas_udf(LongType())
-    def adc(us):
-        if not len(us):
-            return pd.Series([], dtype="int64")
-        U = np.vstack(us.to_numpy()).astype(np.int64)
-        total = np.zeros(len(us), dtype=np.int64)
-        for j in js:
-            C, pd_j = books[j]
-            E = U[:, j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
-            # argmin of dist² == argmin of (−2·e·c + |c|²); ties to
-            # the smallest code id (rows of C are code-id-ascending,
-            # np.argmin returns the first minimum) — same contract as
-            # the spec pq_assign's codeof
-            score = -2 * (E @ C.T) + (C * C).sum(axis=1)[None, :]
-            total += pd_j[np.argmin(score, axis=1)]
-        return pd.Series(total)
-
-    return adc
-
-
 def _rpq_adc_sum(
-    rcents: dict[tuple[int, int, int], list[int]],
-    lut: dict[tuple[int, int, int], int],
+    cents: dict[tuple[int, int, int], list[int]],
+    qu: list[int],
     cunit: dict[int, list[int]],
-    off: dict[int, int],
 ):
-    """Residual twin of _pq_adc_sum (r15): (cell, u) → odot[cell] +
-    Σ_j pdot[cell, j, nearest-residual-code_j], with the residual
-    subtraction r = u − cunit[cell] folded into the kernel — replaces
-    the broadcast centroid join + 32×-row explode + per-(cell,j,sub)
-    assignment UDF + broadcast-LUT join + groupBy + broadcast offset
-    join of the old serving tail.  Same integers throughout
-    (residual coords ≤ ~2.2e6, |total| ≤ ~2.3e14 ≪ 2⁶³; argmin ties
-    to the smallest code id like the spec's rpq_assign in
-    tests/pq_spec.py).  Callers pre-filter to cells that HAVE a
-    codebook; an uncovered cell raises ValueError (_cell_book)."""
+    """Fused encode + ADC sum (r15, guide §4): a pandas UDF (cell, u) →
+    dot(qu, cunit[cell]) + Σ_j pdot[cell, j, nearest code_j] of the
+    residual r = u − cunit[cell].  It replaces the broadcast centroid
+    join → 32×-row subspace explode → per-(cell, j) assignment UDF →
+    broadcast lookup-table join → groupBy(vec_id) SUM → offset join of
+    the un-fused form: one Python boundary crossing, one row per
+    vector, no exchange.  The query-side lookup table pdot (exact
+    partial dots of the query subvector against each sub-centroid) and
+    the per-cell offsets are built here from the query unit vector qu,
+    as model-sized closure constants.  The shared-codebook tiers pass
+    cunit = {0: zero vector} and score with cell 0, so r = u and the
+    offset is 0.  Same integers as the spec in tests/pq_spec.py:
+    argmin ties to the smallest code id, int64 throughout (residual
+    coords ≤ ~2.2e6, |total| ≤ ~2.3e14 ≪ 2⁶³).  Callers pre-filter to
+    cells that have a codebook; an uncovered cell raises ValueError."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    books = {}
-    for cell, j in sorted({(c, j) for c, j, _ in rcents}):
-        codes = sorted(k for cc, jj, k in rcents if cc == cell and jj == j)
-        books[(cell, j)] = (
-            np.asarray(
-                [rcents[(cell, j, k)] for k in codes], dtype=np.int64
-            ),
-            np.asarray([lut[(cell, j, k)] for k in codes], dtype=np.int64),
-        )
-    cu_arr = {c: np.asarray(v, dtype=np.int64) for c, v in cunit.items()}
+    books, book = _pq_codebooks(cents)
+    q = np.asarray(qu, dtype=np.int64)
+    pdot = {
+        (cell, j): b[1] @ q[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
+        for (cell, j), b in books.items()
+    }
+    cu = {c: np.asarray(v, dtype=np.int64) for c, v in cunit.items()}
+    off = {c: int(v @ q) for c, v in cu.items()}
 
     @pandas_udf(LongType())
-    def radc(cells, us):
+    def adc(cells, us):
         if not len(us):
             return pd.Series([], dtype="int64")
         U = np.vstack(us.to_numpy()).astype(np.int64)
         cl = cells.to_numpy().astype(np.int64)
         total = np.zeros(len(us), dtype=np.int64)
-        for cell in np.unique(cl):
-            cbooks = [_cell_book(books, int(cell), j) for j in range(PQ_M)]
-            idx = np.where(cl == cell)[0]
-            R = U[idx] - cu_arr[int(cell)][None, :]
-            t = np.full(len(idx), off[int(cell)], dtype=np.int64)
-            for j, (C, pd_j) in enumerate(cbooks):
+        for cell in np.unique(cl).tolist():
+            cbooks = [book(cell, j) for j in range(PQ_M)]
+            idx = np.flatnonzero(cl == cell)
+            R = U[idx] - cu[cell][None, :]
+            t = np.full(len(idx), off[cell], dtype=np.int64)
+            for j, (_, C, cn2) in enumerate(cbooks):
                 E = R[:, j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
-                score = -2 * (E @ C.T) + (C * C).sum(axis=1)[None, :]
-                t += pd_j[np.argmin(score, axis=1)]
+                score = -2 * (E @ C.T) + cn2[None, :]
+                t += pdot[(cell, j)][np.argmin(score, axis=1)]
             total[idx] = t
         return pd.Series(total)
 
-    return radc
+    return adc
 
 
-def _pq_int_fit(
-    uq_train: DataFrame,
-) -> dict[tuple[int, int], list[int]]:
-    """PQ_INT_ITERS rounds of joint integer Lloyd across all PQ_M
-    sub-codebooks.  Seeds: the subvectors of the PQ_K train vec_ids
-    that sort FIRST BY md5(vec_id) — an engine-reproducible
+def _rpq_int_fit(
+    train: DataFrame,
+) -> dict[tuple[int, int, int], list[int]]:
+    """PQ_INT_ITERS rounds of joint integer Lloyd over per-cell
+    sub-codebooks, keyed (cell, j, code).  `train` is either residuals
+    (vec_id, cell, r), for the IVFADC tier, or unit vectors (vec_id,
+    u), for the shared-codebook tiers: those fit one cell 0 whose
+    centroid is zero, so r = u (IVFADC with a single coarse cell).
+
+    Seeds: within each cell, the (residual) vectors of the PQ_K train
+    vec_ids that sort FIRST BY md5(vec_id) — an engine-reproducible
     pseudo-random draw, NOT the IVF tier's first-by-vec_id recipe.
     Low-dim sub-codebooks are far more seed-sensitive than 64-dim
     cells: the lowest vec_ids' subvectors cluster in quantized space,
     and seeding from them measured recall@20 0.45/0.65/0.20 at
     sf0.001/0.01/0.1 (gate-trained, 4 rounds, at the r11 16×4
-    setting) vs 0.65/0.70/0.55 for the md5-ordered draw — the
-    scrambled seed is the difference between a broken and a working
-    codebook at sf0.1.  The same PQ_K
-    vectors seed every subspace (the oracle's ROW_NUMBER-per-j
-    reproduces this).  Per round: one assignment pass + one
-    (j, code, dim) integer-sum aggregation; driver traffic is the
-    PQ_M·PQ_K·PQ_SUBDIM-int codebook per round — model-sized.  Codes
-    that lose all members vanish (the oracle's GROUP BY does the
-    same)."""
-    seed = (
-        uq_train.orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(PQ_K)
-        .select("u")
-        .take(PQ_K)
-    )
-    cents: dict[tuple[int, int], list[int]] = {}
-    for code, r in enumerate(seed):
-        u = [int(v) for v in r["u"]]
-        for j in range(PQ_M):
-            cents[(j, code)] = u[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
+    setting) vs 0.65/0.70/0.55 for the md5-ordered draw.  The same
+    PQ_K vectors seed every subspace of their cell (the oracles'
+    ROW_NUMBER per j, or per (cell, j), reproduces this).  Residuals
+    draw with a ROW_NUMBER window per cell; the one-cell fit draws
+    the same vectors with orderBy(md5).limit, one driver job fewer.
+
+    Per round: one fused assign + partial-sum pass (_rpq_round_sums);
+    driver traffic is the |cells|·PQ_M·PQ_K·PQ_SUBDIM-int codebook —
+    model-sized.  Codes that lose all members vanish (the oracles'
+    GROUP BY does the same)."""
+    md5 = F.md5(F.col("vec_id").cast("string"))
+    if "cell" in train.columns:
+        # materialize the residual table ONCE (r15): the seed window
+        # plus every fused round below consumes it — without the
+        # barrier each of those 1 + PQ_INT_ITERS jobs re-runs the
+        # assignment/centroid joins in its lineage (guide §5).  The
+        # one-cell train slice is a cheap filter over the caller's
+        # materialized uq and needs no barrier.
+        train = train.localCheckpoint(eager=False)
+        n_cells = IVF_CELLS
+        rn = F.row_number().over(Window.partitionBy("cell").orderBy(md5))
+        seed = [
+            (row["cell"], row["rn"] - 1, row["r"])
+            for row in train.withColumn("rn", rn)
+            .where(F.col("rn") <= PQ_K)
+            .select("cell", "rn", "r")
+            .take(IVF_CELLS * PQ_K)
+        ]
+    else:
+        train = train.select(
+            "vec_id", F.lit(0).alias("cell"), F.col("u").alias("r")
+        )
+        n_cells = 1
+        seed = [
+            (0, code, row["r"])
+            for code, row in enumerate(
+                train.orderBy(md5).limit(PQ_K).select("r").take(PQ_K)
+            )
+        ]
+    cents = {
+        (cell, j, code): [
+            int(v) for v in r[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
+        ]
+        for cell, code, r in seed
+        for j in range(PQ_M)
+    }
     if not cents:
         return {}
     for _ in range(PQ_INT_ITERS):
-        # fused assign+partial-sum round (r15, guide §4): each task
-        # emits ≤ PQ_M·PQ_K model-sized partial rows straight from the
-        # train unit vectors — the r14 shape (subspace explode barrier
-        # → assignment pandas UDF → (j, code) hash aggregate) crossed
-        # the Python boundary with 32× the rows each round; see
-        # _pq_round_sums for the exact-integer equivalence.  The train
-        # slice is a cheap filter over the caller's materialized uq,
-        # so no extra barrier is needed here.
-        rows = _pq_round_sums(uq_train, cents).take(PQ_M * PQ_K)
+        rows = _rpq_round_sums(train, cents).take(n_cells * PQ_M * PQ_K)
         cents = {
-            (int(r["j"]), int(r["code"])): _dims_of(r, PQ_SUBDIM)
+            (int(r["cell"]), int(r["j"]), int(r["code"])): _dims_of(
+                r, PQ_SUBDIM
+            )
             for r in rows
         }
     return cents
@@ -1855,7 +1751,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds only the PQ_M×PQ_K×PQ_SUBDIM-int codebook, never data);
     encoding is one Arrow-batched integer GEMM over the corpus; the
     serving scan reads 1-byte-range codes instead of 8-byte doubles
-    and scores each vector with PQ_M lookup-adds via a broadcast
+    and scores each vector with PQ_M lookup-adds into the query's
     (j, code)→partial-dot table — no vector reconstruction.
     Normalizing first makes the approximate inner product an
     approximate cosine (score/1e12 ≈ cosine on the 6dp-quantized unit
@@ -1863,7 +1759,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once: the fit's seed draw, the query-row fetch, and
     # the full-corpus encode below all re-derive uq otherwise (§5)
     uq = _pq_unit_quantized(spark, sf_dir).localCheckpoint(eager=False)
-    cents = _pq_int_fit(uq.where(_int_train_gate()))
+    cents = _rpq_int_fit(uq.where(_int_train_gate()))
     empty = "vec_id bigint, approx_cosine double"
     if not cents:
         return spark.createDataFrame([], empty)
@@ -1873,21 +1769,11 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # result, same schema
         return spark.createDataFrame([], empty)
     qu = [int(v) for v in q["u"]]
-    # query-side ADC lookup table: exact-integer partial dot of the
-    # query subvector against each sub-centroid — model-sized driver
-    # math, folded into the fused encode+ADC kernel (r15; the r11-r14
-    # shape shipped it as a broadcast join table over a 32×-row
-    # subspace explode — see _pq_adc_sum for the equivalence)
-    lut = {
-        (j, code): sum(
-            a * b
-            for a, b in zip(qu[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM], c)
-        )
-        for (j, code), c in cents.items()
-    }
-    adc = _pq_adc_sum(cents, lut)
+    # fused encode+ADC with the shared codebook: the fit's one cell 0,
+    # whose centroid is zero (see _rpq_adc_sum)
+    adc = _rpq_adc_sum(cents, qu, {0: [0] * _EMB_DIM})
     return (
-        uq.select("vec_id", adc("u").alias("s"))
+        uq.select("vec_id", adc(F.lit(0), "u").alias("s"))
         .select(
             "vec_id",
             F.round(
@@ -2063,7 +1949,7 @@ def sim_ivf_pq_topk(
     # materialized once, like sim_pq_topk's (fit seed + probed-slice
     # encode both consume it)
     uq = _pq_unit_quantized(spark, sf_dir).localCheckpoint(eager=False)
-    pq_cents = _pq_int_fit(uq.where(_int_train_gate()))
+    pq_cents = _rpq_int_fit(uq.where(_int_train_gate()))
     if not pq_cents:
         return spark.createDataFrame([], empty)
     # the query's unit vector derives from the coarse qrow already in
@@ -2072,20 +1958,16 @@ def sim_ivf_pq_topk(
     qu = _unit_quantize_py([int(v) for v in qrow["e"]])
     if qu is None:
         return spark.createDataFrame([], empty)
-    lut = {
-        (j, code): sum(
-            a * b
-            for a, b in zip(qu[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM], c)
-        )
-        for (j, code), c in pq_cents.items()
-    }
     # fused encode+ADC over the probed slice (r15): the cand join
-    # carries the cell through, so the old post-aggregation join-back
-    # disappears along with the explode + LUT join + groupBy exchange
-    adc = _pq_adc_sum(pq_cents, lut)
+    # carries the IVF cell through to the output, so the old
+    # post-aggregation join-back disappears along with the explode +
+    # LUT join + groupBy exchange.  The codebook is shared across IVF
+    # cells — the fit's one zero-centroid cell 0 — so the kernel
+    # scores with a literal 0, not the IVF cell.
+    adc = _rpq_adc_sum(pq_cents, qu, {0: [0] * _EMB_DIM})
     return (
         uq.join(cand, "vec_id")
-        .select("vec_id", "cell", adc("u").alias("s"))
+        .select("vec_id", "cell", adc(F.lit(0), "u").alias("s"))
         .select(
             "vec_id",
             "cell",
@@ -2193,60 +2075,6 @@ def _rpq_residuals(
     )
 
 
-def _rpq_int_fit(
-    res_train: DataFrame,
-) -> dict[tuple[int, int, int], list[int]]:
-    """PQ_INT_ITERS rounds of joint integer Lloyd over PER-CELL
-    sub-codebooks — _pq_int_fit with every key widened by the cell.
-    Seeds: within each cell, the residual subvectors of the PQ_K train
-    vec_ids sorting first by md5(vec_id) (ROW_NUMBER PARTITION BY cell
-    — the oracle repeats it verbatim); the same vectors seed every
-    subspace of their cell.  Driver traffic per round is the
-    IVF_CELLS·PQ_M·PQ_K·PQ_SUBDIM-int codebook — model-sized."""
-    # materialize the residual table ONCE (r15): the seed window plus
-    # every fused round below consumes it — without the barrier each
-    # of those 1 + PQ_INT_ITERS jobs re-runs the assignment/centroid
-    # joins in its lineage (guide §5; the r14 barrier sat one explode
-    # further downstream, on the 32×-row subspace table)
-    res_train = res_train.localCheckpoint(eager=False)
-    w = Window.partitionBy("cell").orderBy(
-        F.md5(F.col("vec_id").cast("string"))
-    )
-    seed = (
-        res_train.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= PQ_K)
-        .select("cell", (F.col("rn") - 1).alias("code"), "r")
-        .take(IVF_CELLS * PQ_K)
-    )
-    cents: dict[tuple[int, int, int], list[int]] = {}
-    for row in seed:
-        r = [int(v) for v in row["r"]]
-        for j in range(PQ_M):
-            cents[(int(row["cell"]), j, int(row["code"]))] = r[
-                j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM
-            ]
-    if not cents:
-        return {}
-    for _ in range(PQ_INT_ITERS):
-        # fused assign+partial-sum round (r15, guide §4) — the r14
-        # shape materialized the 32×-row residual subspace explode
-        # once (itself the fix for the re-derived full-corpus coarse
-        # GEMM) and still crossed the Python boundary with 32n rows
-        # per round; _rpq_round_sums reads res_train (the caller's
-        # barrier) directly and emits model-sized partials.  Same
-        # integers — argmin/tie-break per (cell, j) and int64 sums.
-        rows = _rpq_round_sums(res_train, cents).take(
-            IVF_CELLS * PQ_M * PQ_K
-        )
-        cents = {
-            (int(r["cell"]), int(r["j"]), int(r["code"])): _dims_of(
-                r, PQ_SUBDIM
-            )
-            for r in rows
-        }
-    return cents
-
-
 def sim_ivfpq_residual_topk(
     spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE
 ) -> DataFrame:
@@ -2327,22 +2155,6 @@ def sim_ivfpq_residual_topk(
     qu = _unit_quantize_py([int(v) for v in qrow["e"]])
     if qu is None:
         return spark.createDataFrame([], empty)
-    # query-side model math: per-(cell, j, code) residual partial dots
-    # plus the per-cell centroid offset — both exact integers, folded
-    # into the fused kernel (r15; the r12-r14 shape shipped them as
-    # two broadcast join tables over the residual-subtraction join +
-    # 32×-row explode — see _rpq_adc_sum for the equivalence)
-    lut = {
-        (cell, j, code): sum(
-            a * b
-            for a, b in zip(qu[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM], c)
-        )
-        for (cell, j, code), c in rcents.items()
-    }
-    off = {
-        cell: sum(a * b for a, b in zip(qu, cu))
-        for cell, cu in cunit.items()
-    }
     probe = _int_probe_order([int(v) for v in qrow["e"]], cents)[
         :nprobe
     ]
@@ -2354,8 +2166,9 @@ def sim_ivfpq_residual_topk(
     ).select("vec_id", "cell")
     # the cand join carries the assignment's cell, so the kernel's
     # residual subtraction reads the same per-row centroid the old
-    # _rpq_residuals broadcast join attached
-    radc = _rpq_adc_sum(rcents, lut, cunit, off)
+    # _rpq_residuals broadcast join attached; the kernel builds the
+    # query's lookup table and per-cell offsets from qu
+    radc = _rpq_adc_sum(rcents, qu, cunit)
     return (
         uq.join(cand, "vec_id")
         .select("vec_id", "cell", radc("cell", "u").alias("t"))

@@ -1,13 +1,13 @@
 """Executable spec of the PQ / residual-PQ encode step.
 
-The engine's fused kernels (similarity._pq_round_sums,
-_rpq_round_sums, _pq_adc_sum, _rpq_adc_sum) each do in one Arrow pass
-what these un-fused forms do in explicit stages: explode every vector
-into PQ_M subspace rows, then assign each row its nearest sub-centroid
-with one integer-GEMM pandas UDF.  tests/test_fused_pq_kernels.py
-proves every fused kernel returns exactly the integers of its spec
-composition; tests/test_properties.py drives rpq_assign's GEMM against
-plain-Python argmin.
+The engine's two fused kernels (similarity._rpq_round_sums and
+_rpq_adc_sum, which the shared-codebook tiers run as one cell 0) each
+do in one Arrow pass what these un-fused forms do in explicit stages:
+explode every vector into PQ_M subspace rows, then assign each row its
+nearest sub-centroid with one integer-GEMM pandas UDF.
+tests/test_fused_pq_kernels.py proves every fused kernel returns
+exactly the integers of its spec composition; tests/test_properties.py
+drives rpq_assign's GEMM against plain-Python argmin.
 
 The UDFs are closures, so cloudpickle ships them by value (with the
 PQ_M / PQ_SUBDIM constants they read) and this module need not be

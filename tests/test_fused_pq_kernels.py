@@ -1,18 +1,22 @@
-"""r15 fused-kernel equivalence pins (guide §4).
+"""Fused PQ kernel equivalence pins (guide §4).
 
-The PQ/IVF family's serving and fit hot paths were fused into single
-Arrow kernels in r15:
+The PQ family's fit and serving hot paths are two Arrow kernels keyed
+(cell, j, code), shared by every tier.  The shared-codebook tiers run
+them as one cell 0 whose centroid is zero:
 
-  _pq_round_sums      ≡ pq_assign(pq_subspaces(·)) → groupBy(j, code)
-  _rpq_round_sums     ≡ rpq_assign(rpq_subspaces(·)) → groupBy(cell, j, code)
-  _pq_adc_sum         ≡ encode → broadcast-LUT join → groupBy(vec_id).sum
-  _rpq_adc_sum        ≡ residual join → encode → LUT join → sum → offset join
+  _rpq_round_sums, cell 0  ≡ pq_assign(pq_subspaces(·)) → groupBy(j, code)
+  _rpq_round_sums          ≡ rpq_assign(rpq_subspaces(·))
+                             → groupBy(cell, j, code)
+  _rpq_adc_sum, cell 0     ≡ encode → broadcast-LUT join → groupBy(vec_id).sum
+  _rpq_adc_sum             ≡ residual join → encode → LUT join → sum
+                             → offset join
 
 The un-fused forms live in tests/pq_spec.py as the executable SPEC (the
 hypothesis property test drives rpq_assign's GEMM against plain-Python
 argmin); these tests prove each fused kernel returns EXACTLY the same
 integers as its spec composition on the real corpus, so the oracle-
-parity guarantee transfers to the fused plans.
+parity guarantee transfers to the fused plans.  Each test builds its
+own lookup table, independent of the engine's.
 """
 
 from __future__ import annotations
@@ -25,24 +29,30 @@ from pq_spec import pq_assign, pq_subspaces, rpq_assign, rpq_subspaces
 
 
 def _uq_and_cents(spark, sf_dir):
+    """Unit vectors and the shared codebook: the engine's keys (0, j,
+    code) and the spec's (j, code) view of the same sub-centroids."""
     uq = sim._pq_unit_quantized(spark, sf_dir).localCheckpoint(eager=True)
-    cents = sim._pq_int_fit(uq.where(sim._int_train_gate()))
+    cents = sim._rpq_int_fit(uq.where(sim._int_train_gate()))
     assert cents, "empty PQ codebook on the test corpus"
-    return uq, cents
+    assert {cell for cell, _, _ in cents} == {0}
+    return uq, cents, {(j, c): v for (_, j, c), v in cents.items()}
 
 
 def test_pq_round_sums_match_explode_aggregate(spark, sf_dir):
-    uq, cents = _uq_and_cents(spark, sf_dir)
+    uq, cents, spec_cents = _uq_and_cents(spark, sf_dir)
     train = uq.where(sim._int_train_gate())
+    one_cell = train.select(F.lit(0).alias("cell"), F.col("u").alias("r"))
     fused = {
-        (r["j"], r["code"]): ([r[f"s{d}"] for d in range(sim.PQ_SUBDIM)],
-                              r["n"])
-        for r in sim._pq_round_sums(train, cents).collect()
+        (r["cell"], r["j"], r["code"]): (
+            [r[f"s{d}"] for d in range(sim.PQ_SUBDIM)], r["n"]
+        )
+        for r in sim._rpq_round_sums(one_cell, cents).collect()
     }
     spec = {
-        (r["j"], r["code"]): ([r[f"s{d}"] for d in range(sim.PQ_SUBDIM)],
-                              r["n"])
-        for r in pq_assign(pq_subspaces(train), cents)
+        (0, r["j"], r["code"]): (
+            [r[f"s{d}"] for d in range(sim.PQ_SUBDIM)], r["n"]
+        )
+        for r in pq_assign(pq_subspaces(train), spec_cents)
         .groupBy("j", "code")
         .agg(*sim._dim_sum_aggs("sub", sim.PQ_SUBDIM))
         .collect()
@@ -82,7 +92,7 @@ def test_rpq_round_sums_match_explode_aggregate(spark, sf_dir):
 
 
 def test_pq_adc_sum_matches_lut_join(spark, sf_dir):
-    uq, cents = _uq_and_cents(spark, sf_dir)
+    uq, cents, spec_cents = _uq_and_cents(spark, sf_dir)
     q = uq.where(F.col("vec_id") == sim.QUERY_VEC_ID).first()
     assert q is not None
     qu = [int(v) for v in q["u"]]
@@ -93,12 +103,12 @@ def test_pq_adc_sum_matches_lut_join(spark, sf_dir):
                 qu[j * sim.PQ_SUBDIM : (j + 1) * sim.PQ_SUBDIM], c
             )
         )
-        for (j, code), c in cents.items()
+        for (j, code), c in spec_cents.items()
     }
-    adc = sim._pq_adc_sum(cents, lut)
+    adc = sim._rpq_adc_sum(cents, qu, {0: [0] * sim._EMB_DIM})
     fused = {
         r["vec_id"]: r["s"]
-        for r in uq.select("vec_id", adc("u").alias("s")).collect()
+        for r in uq.select("vec_id", adc(F.lit(0), "u").alias("s")).collect()
     }
     lut_df = spark.createDataFrame(
         [(j, c, p) for (j, c), p in sorted(lut.items())],
@@ -106,7 +116,7 @@ def test_pq_adc_sum_matches_lut_join(spark, sf_dir):
     )
     spec = {
         r["vec_id"]: r["s"]
-        for r in pq_assign(pq_subspaces(uq), cents)
+        for r in pq_assign(pq_subspaces(uq), spec_cents)
         .join(F.broadcast(lut_df), ["j", "code"])
         .groupBy("vec_id")
         .agg(F.sum("pdot").alias("s"))
@@ -154,7 +164,7 @@ def test_rpq_adc_sum_matches_join_chain(spark, sf_dir):
     cand = assigned.where(
         F.col("cell").isin(sorted(covered))
     ).select("vec_id", "cell")
-    radc = sim._rpq_adc_sum(rcents, lut, cunit, off)
+    radc = sim._rpq_adc_sum(rcents, qu, cunit)
     fused = {
         r["vec_id"]: r["t"]
         for r in uq.join(cand, "vec_id")
@@ -208,9 +218,8 @@ def test_rpq_adc_sum_rejects_uncovered_cell(spark):
     rcents = _one_cell_codebook()
     radc = sim._rpq_adc_sum(
         rcents,
-        {key: 0 for key in rcents},
+        [0] * sim._EMB_DIM,
         {0: [0] * sim._EMB_DIM, 1: [0] * sim._EMB_DIM},
-        {0: 0, 1: 0},
     )
     uq = spark.createDataFrame(
         [(1, [1] * sim._EMB_DIM)], "cell int, u array<bigint>"

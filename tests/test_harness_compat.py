@@ -18,10 +18,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from bigdata_gamedb_etl_spark.registry import all_oracle, all_queries
+from bigdata_gamedb_etl_spark.registry import PRIORITY, all_oracle, all_queries
 
 QUERIES = all_queries()
 ORACLE = all_oracle()
+#: the driver's 50-query PRIORITY window
+_WINDOW = set(PRIORITY[:50])
 
 #: DECIMAL is banned in oracle *output* too: every oracle in this repo
 #: computes in DECIMAL where order-free exactness matters, then casts
@@ -53,9 +55,7 @@ def test_oracle_output_types_hash_safe(name, duck):
 @pytest.mark.parametrize(
     "name",
     [
-        n if n in set(__import__(
-            "bigdata_gamedb_etl_spark.registry", fromlist=["PRIORITY"]
-        ).PRIORITY[:50])
+        n if n in _WINDOW
         else pytest.param(n, marks=pytest.mark.fullsweep)
         for n in sorted(QUERIES)
     ],
@@ -84,14 +84,11 @@ def test_every_query_has_driver_evidence_or_is_queued():
     import json
     import os
 
-    from bigdata_gamedb_etl_spark.registry import PRIORITY
-
     root = os.path.join(os.path.dirname(__file__), "..")
     checked: set[str] = set()
     for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
         checked.update(json.load(open(f)).keys())
-    window = set(PRIORITY[:50])
-    unqueued = [n for n in QUERIES if n not in checked and n not in window]
+    unqueued = [n for n in QUERIES if n not in checked and n not in _WINDOW]
     assert not unqueued, (
         f"queries with no driver evidence and not in the head-50 window: "
         f"{unqueued} — append them to the current round's *_NEW list in "
@@ -121,7 +118,7 @@ def test_stale_evidence_queries_are_queued():
     import re
     import sys
 
-    from bigdata_gamedb_etl_spark.registry import PRIORITY, RECONFIRM_STALE
+    from bigdata_gamedb_etl_spark.registry import RECONFIRM_STALE
 
     root = os.path.join(os.path.dirname(__file__), "..")
     sys.path.insert(0, root)
@@ -174,7 +171,7 @@ def test_stale_evidence_queries_are_queued():
         for name in sorted(ORACLE)
         if latest_green.get(name, 0) not in fresh_rounds
     ]
-    queued = set(PRIORITY[:50]) | set(RECONFIRM_STALE)
+    queued = _WINDOW | set(RECONFIRM_STALE)
     unqueued = [n for n in stale if n not in queued]
     assert not unqueued, (
         f"oracle-backed queries whose driver evidence predates the "

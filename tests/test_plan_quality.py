@@ -545,6 +545,32 @@ def test_ivfpq_residual_serving_plan(spark, sf_dir):
     assert "Scan parquet" not in plan, "serving re-derives the fits"
 
 
+@pytest.mark.parametrize(
+    "name, jobs",
+    [
+        ("sim_pq_topk", 11),
+        ("sim_ivf_pq_topk", 26),
+        ("sim_ivfpq_residual_topk", 29),
+    ],
+)
+def test_pq_family_driver_job_count(spark, sf_dir, name, jobs):
+    """Driver jobs for building and collecting each PQ-family query:
+    the fits' seed draws and per-round take()s, the assignment
+    barriers, the query-row fetch and the final collect.  A new
+    driver action in the fit or serving path changes the count."""
+    from bigdata_gamedb_etl_spark.operators import similarity
+
+    sc = spark.sparkContext
+    group = f"pq-job-count-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(similarity, name)(spark, sf_dir).collect()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_lloyd_assignment_is_broadcast(spark, sf_dir):
     """KMeans assignment must probe BROADCAST centroids (k×d grain):
     no sort-merge join and no shuffle of the vector table keyed on

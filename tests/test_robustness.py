@@ -107,24 +107,44 @@ def test_python_udfs_unpickle_without_repo_on_path(tmp_path):
     from pyspark import cloudpickle
 
     from bigdata_gamedb_etl_spark.operators import multimodal
+    from bigdata_gamedb_etl_spark.operators import similarity as sim
     from bigdata_gamedb_etl_spark.streaming import windowed
 
+    # a one-cell PQ codebook: one all-ones code per subspace
+    cents = {(0, j, 0): [1] * sim.PQ_SUBDIM for j in range(sim.PQ_M)}
     blobs = {
         "mm_extract": multimodal._extract_batches,
         "stream_running_totals": windowed._running_totals,
+        "pq_round_kernel": sim._rpq_round_kernel(cents),
+        "pq_adc": sim._rpq_adc_sum(
+            cents, [1] * sim._EMB_DIM, {0: [0] * sim._EMB_DIM}
+        ).func,
     }
     for name, fn in blobs.items():
         p = tmp_path / f"{name}.pkl"
         p.write_bytes(cloudpickle.dumps(fn))
     driver = tmp_path / "drive.py"
     driver.write_text(
-        """
-import pickle, sys, pandas as pd
+        f"""
+import pickle, sys, pandas as pd, pyarrow as pa
 assert not any("repo" in p for p in sys.path if p), sys.path
 fn = pickle.loads(open(sys.argv[1], "rb").read())
+ones = [1] * {sim._EMB_DIM}
 if "mm_extract" in sys.argv[1]:
-    out = list(fn(iter([pd.DataFrame({"doc_id": [1], "payload": [b"xyz"]})])))
+    out = list(fn(iter([pd.DataFrame({{"doc_id": [1], "payload": [b"xyz"]}})])))
     assert out[0]["payload_bytes"].iloc[0] == 3
+if "pq_round_kernel" in sys.argv[1]:
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([0], pa.int32()), pa.array([ones], pa.list_(pa.int64()))],
+        names=["cell", "r"],
+    )
+    out = pa.Table.from_batches(list(fn(iter([batch]))))
+    assert out.num_rows == {sim.PQ_M}, out
+    assert set(out.column("n").to_pylist()) == {{1}}
+if "pq_adc" in sys.argv[1]:
+    # every subspace picks its only code: pdot = q_j . c = PQ_SUBDIM
+    out = fn(pd.Series([0]), pd.Series([ones]))
+    assert out.tolist() == [{sim._EMB_DIM}], out
 print("OK")
 """
     )
