@@ -23,14 +23,15 @@ no Python UDFs anywhere in the hot path.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
-import os
 import shutil
+import tempfile
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import table
@@ -1406,57 +1407,54 @@ RELIABLE_CKPT_CONF = "spark.bigdata_gamedb_etl.reliableCheckpoint"
 
 
 def _materialize_iter(
-    df: DataFrame, reliable: bool, lazy: bool = False
-) -> DataFrame:
-    """Cut lineage between CC iterations.  localCheckpoint is
-    executor-local: cheap, but after truncation the only copy of each
-    block lives on one executor, so at cluster scale an executor loss
-    kills the job mid-loop.  The reliable path writes checkpoint files
-    (HDFS/object store in deployment; a temp dir when unset here) —
-    slower per round, recoverable.
+    df: DataFrame, *observed: Column, supersedes: DataFrame | None = None
+) -> DataFrame | tuple[DataFrame, tuple]:
+    """The one lineage barrier of the iterative loops.  Always eager:
+    `df` is materialized before this returns, so no loop nests its
+    rounds' plans.
 
-    lazy=True (r14, guide §5) defers materialization to the caller's
-    NEXT action — correct ONLY when a full-scan action immediately
-    follows (the CC loops' convergence probes), so the barrier rides
-    that job instead of paying its own; loops with no per-round
-    action (PageRank/LPA/k-core) must stay eager or the lazy plan
-    nests every round.  The reliable path ignores it: checkpoint
-    files must exist before _ckpt_file can record them."""
-    if not reliable:
-        return df.localCheckpoint(eager=not lazy)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        import tempfile
+    `observed` aggregates ride the materializing job via `observe()`:
+    the call then returns `(frame, values)`, one value per aggregate
+    over exactly the rows materialized, so a loop's convergence test
+    runs no job of its own.  Without them it returns the frame.
 
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="gamedb-etl-ckpt-"))
-    return df.checkpoint(eager=True)
-
-
-def _ckpt_local_dir(spark: SparkSession) -> str | None:
-    """The session checkpoint dir as a local filesystem path, or None.
-    ``getCheckpointDir`` returns a Hadoop URI (``file:/tmp/...`` under
-    local mode); the explicit cleanup below only applies to local-fs
-    checkpoints — on HDFS/object stores deployments use Spark's own
-    cleaner or storage lifecycle rules."""
-    d = spark.sparkContext.getCheckpointDir()
-    if d is None:
-        return None
-    if d.startswith("file:"):
-        d = d[len("file:") :]
-        while d.startswith("//"):  # file:///x -> /x
-            d = d[1:]
-    elif "://" in d:  # non-local scheme: skip explicit cleanup
-        return None
-    return d if os.path.isdir(d) else None
+    RELIABLE_CKPT_CONF picks where the data lives: executor-local
+    blocks by default, or `checkpoint()` files under the session's
+    checkpoint dir.  When none is set the engine creates a temp dir
+    and removes it at interpreter exit; a dir the user set is never
+    removed.  On that path the files of `supersedes` (the barrier this
+    one replaces, no longer read once this one is written) are deleted
+    here: Spark's cleaner removes checkpoint files only at GC time and
+    only with spark.cleaner.referenceTracking.cleanCheckpoints set, so
+    a loop would otherwise leak one checkpoint per round."""
+    obs = Observation() if observed else None
+    if obs is not None:
+        df = df.observe(
+            obs, *(c.alias(f"v{i}") for i, c in enumerate(observed))
+        )
+    spark = df.sparkSession
+    if spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() != "true":
+        out = df.localCheckpoint(eager=True)
+    else:
+        sc = spark.sparkContext
+        if sc.getCheckpointDir() is None:
+            d = tempfile.mkdtemp(prefix="gamedb-etl-ckpt-")
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+            sc.setCheckpointDir(d)
+        out = df.checkpoint(eager=True)
+        if supersedes is not None and (old := _ckpt_file(supersedes)):
+            shutil.rmtree(old, ignore_errors=True)
+    if obs is None:
+        return out
+    vals = obs.get
+    return out, tuple(vals[f"v{i}"] for i in range(len(observed)))
 
 
 def _ckpt_file(df: DataFrame) -> str | None:
     """The concrete checkpoint path backing an eagerly `checkpoint()`ed
     DataFrame: its analyzed plan is a LogicalRDD whose RDD reports
-    `getCheckpointFile`.  EXACT ownership — earlier rounds attributed
-    subdirs by diffing directory listings, which could claim (and then
-    delete) the live checkpoint of a CONCURRENT query in the same
-    session that happened to checkpoint inside the iteration window.
+    `getCheckpointFile`.  Exact ownership, so rotation never deletes
+    the live checkpoint of a concurrent query in the same session.
     Returns a local-fs path, or None off local fs / not checkpointed."""
     try:
         opt = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
@@ -1473,18 +1471,6 @@ def _ckpt_file(df: DataFrame) -> str | None:
     return None if "://" in p else p
 
 
-def _drop_ckpt(path: str | None) -> None:
-    """Delete one superseded checkpoint dir.  Spark's ContextCleaner
-    only removes checkpoint files at GC time and only when
-    spark.cleaner.referenceTracking.cleanCheckpoints is set, so an
-    iterative loop that checkpoints every round leaks one labels-sized
-    dataset per iteration in a long session — delete each iteration's
-    checkpoint as soon as the next one (eagerly materialized, so no
-    longer reading its parent) supersedes it."""
-    if path:
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup pair graph: every doc in
     ≥1 Jaccard pair gets a cluster_id = the smallest doc_id reachable
@@ -1496,20 +1482,17 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     round every node takes the min of its own and its neighbors'
     labels; converges in O(component diameter) rounds — near-dup
     clusters are shallow, so a handful.  The driver loop carries only
-    a scalar convergence count and each iteration materializes to cut
+    the label sum each round's barrier observes, and that barrier cuts
     lineage (executor-local by default; set RELIABLE_CKPT_CONF=true
     for fault-tolerant checkpoint files at cluster scale); all data
     stays distributed.  Oracle: DuckDB recursive CTE computing
     reachability (exponential-ish, fine at oracle SF)."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     pairs = dedup_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
-    return _min_label_components(pairs, reliable)
+    return _min_label_components(pairs)
 
 
 def _min_label_components(
-    pairs: DataFrame, reliable: bool, stats: dict | None = None
+    pairs: DataFrame, stats: dict | None = None
 ) -> DataFrame:
     """Min-label-propagation connected components over an undirected
     (d1, d2) pair DataFrame — shared by the exact-Jaccard and the
@@ -1522,55 +1505,37 @@ def _min_label_components(
     edges = _materialize_iter(
         pairs.union(
             pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-        ).toDF("src", "nbr"),
-        reliable,
-        lazy=True,  # the label-sum probe below scans labels (and
-        # through it, edges) fully — both barriers ride that one job
-    )
-    labels = _materialize_iter(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node")),
-        reliable,
-        lazy=True,
+        ).toDF("src", "nbr")
     )
     # Convergence via the label-sum invariant: labels only ever
     # decrease, so the total is strictly smaller after any change and a
-    # repeated sum means fixpoint — one cheap scalar aggregate per
-    # round instead of an old-vs-new compare join.
+    # repeated sum means fixpoint — one scalar observed by each round's
+    # barrier instead of an old-vs-new compare join.
     # DECIMAL(38,0) sum: labels can be 64-bit simhash values (the
     # signature-graph CC in dedup_simhash_clusters), whose BIGINT sum
     # overflows under ANSI mode; decimal keeps the invariant exact.
     _label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
-    prev_sum = labels.agg(_label_sum).first()[0]
-    # In the reliable path, each iteration writes a fresh labels
-    # checkpoint; the previous iteration's files are dead the moment the
-    # new one is (eagerly) materialized.  Each checkpointed DataFrame
-    # reports its OWN concrete path (_ckpt_file), which is deleted when
-    # superseded — without this a long session leaks one labels-sized
-    # checkpoint per iteration (Spark's own cleaner is GC-driven and
-    # off by default).
-    prev_label_ckpt: str | None = _ckpt_file(labels) if reliable else None
+    labels, prev_sum = _materialize_iter(
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("comp", F.col("node")),
+        _label_sum,
+    )
     rounds = 0
     for _ in range(CLUSTER_MAX_ITERS):
         rounds += 1
         # min over self ∪ neighbor labels in ONE aggregate: the node's
         # own (node, comp) rows union the neighbor-relabeled edge rows,
         # replacing the old groupBy + left-join-back round trip.
-        labels = _materialize_iter(
+        labels, new_sum = _materialize_iter(
             edges.join(labels, edges["nbr"] == labels["node"])
             .select(F.col("src").alias("node"), "comp")
             .unionByName(labels)
             .groupBy("node")
             .agg(F.min("comp").alias("comp")),
-            reliable,
-            lazy=True,  # materialized by the convergence sum below —
-            # one job per round instead of two
+            _label_sum,
+            supersedes=labels,
         )
-        if reliable:
-            _drop_ckpt(prev_label_ckpt)
-            prev_label_ckpt = _ckpt_file(labels)
-        new_sum = labels.agg(_label_sum).first()[0]
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -1611,8 +1576,8 @@ def _min_label_components(
 # Both are one groupBy (neighborhood min) + one join per application;
 # alternating them strictly decreases the total endpoint sum of the
 # canonical edge set on any change (ids are non-negative), so
-# (count, Σlo, Σhi) equality is an exact fixpoint test — one scalar
-# aggregate per round, same convergence-probe style as the min-label
+# (count, Σlo, Σhi) equality is an exact fixpoint test — one
+# aggregate observed by each round's barrier, as in the min-label
 # loop.  At the fixpoint the graph is a union of stars rooted at each
 # component's minimum, so every node directly neighbors its component
 # id and the final labels are one neighborhood-min aggregate.
@@ -1620,24 +1585,13 @@ STAR_MAX_ITERS = 25
 
 
 def _star_components(
-    pairs: DataFrame, reliable: bool, stats: dict | None = None
+    pairs: DataFrame, stats: dict | None = None
 ) -> DataFrame:
     """Alternating large-star/small-star CC over an undirected
     (d1, d2) pair DataFrame — same contract (and same oracle: component
     membership is algorithm-independent) as _min_label_components.
     `stats["rounds"]` records the converged round count for the
     chain-graph convergence test."""
-    edges = _materialize_iter(
-        pairs.select(
-            F.least("d1", "d2").alias("lo"),
-            F.greatest("d1", "d2").alias("hi"),
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct(),
-        reliable,
-        lazy=True,  # the signature agg below scans it fully
-    )
-    prev_ckpt: str | None = _ckpt_file(edges) if reliable else None
     # decimal sums for the same ANSI-overflow reason as the min-label
     # probe: node ids may be 64-bit signature values.
     _star_sig = (
@@ -1645,7 +1599,15 @@ def _star_components(
         F.sum(F.col("lo").cast("decimal(38,0)")),
         F.sum(F.col("hi").cast("decimal(38,0)")),
     )
-    prev_sig = edges.agg(*_star_sig).first()
+    edges, prev_sig = _materialize_iter(
+        pairs.select(
+            F.least("d1", "d2").alias("lo"),
+            F.greatest("d1", "d2").alias("hi"),
+        )
+        .where(F.col("lo") != F.col("hi"))
+        .distinct(),
+        *_star_sig,
+    )
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.select(
@@ -1666,7 +1628,7 @@ def _star_components(
         )
         # materialize the large-star result: _sym(edges) below embeds
         # this subtree twice (unionAll branches) and `smaller` feeds
-        # both mins2 and the join probe side — left lazy, the
+        # both mins2 and the join probe side — unmaterialized, the
         # join+distinct would re-execute up to 4× per round (the same
         # reason the min-label loop materializes its edge list)
         ls_edges = _materialize_iter(
@@ -1674,15 +1636,14 @@ def _star_components(
             .join(mins, "u")
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
             .distinct(),
-            reliable,
+            supersedes=edges,
         )
-        ls_ckpt = _ckpt_file(ls_edges) if reliable else None
         # SMALL-STAR: for each u over its smaller neighbors Γ⁻(u):
         # (v, m) for every v ∈ Γ⁻(u) plus (u, m), m = min Γ⁻(u) < u.
         # Every canonical edge (a < b) is covered from b's perspective.
         smaller = _sym(ls_edges).where(F.col("v") < F.col("u"))
         mins2 = smaller.groupBy("u").agg(F.min("v").alias("m"))
-        edges = _materialize_iter(
+        edges, sig = _materialize_iter(
             smaller.join(mins2, "u")
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
             .unionAll(
@@ -1692,15 +1653,10 @@ def _star_components(
             )
             .where(F.col("lo") != F.col("hi"))
             .distinct(),
-            reliable,
-            lazy=True,  # materialized by the signature agg below
+            *_star_sig,
+            supersedes=ls_edges,
         )
-        if reliable:
-            _drop_ckpt(prev_ckpt)
-            _drop_ckpt(ls_ckpt)
-            prev_ckpt = _ckpt_file(edges)
-        sig = edges.agg(*_star_sig).first()
-        if tuple(sig) == tuple(prev_sig):
+        if sig == prev_sig:
             break
         prev_sig = sig
     else:
@@ -1744,11 +1700,8 @@ def dedup_cluster_assign_star(
     crossover argument for 100 TB is DEPTH, which corpus replication
     cannot grow: star's round count is diameter-independent, so it is
     the declared scale path while min-label stays the local default."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     pairs = dedup_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
-    return _star_components(pairs, reliable)
+    return _star_components(pairs)
 
 
 # reachability closure over the symmetric pair graph; component id =
@@ -1806,11 +1759,8 @@ def dedup_lsh_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact situation _star_components (O(log² n) rounds) exists for.
     Same output contract; component membership is
     algorithm-independent."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir).select("d1", "d2")
-    return _star_components(pairs, reliable)
+    return _star_components(pairs)
 
 
 DEDUP_LSH_CLUSTER_ORACLE = f"""
@@ -2099,19 +2049,13 @@ def dedup_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingests instead of regenerating in-query as this query must.
 
     Output: (doc_id, cluster_id) for every doc in ≥1 full-graph pair."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     pairs = _materialize_iter(
-        dedup_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2"),
-        reliable,
+        dedup_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
     )
-    return _incremental_cc_from_pairs(pairs, reliable)
+    return _incremental_cc_from_pairs(pairs)
 
 
-def _incremental_cc_from_pairs(
-    pairs: DataFrame, reliable: bool
-) -> DataFrame:
+def _incremental_cc_from_pairs(pairs: DataFrame) -> DataFrame:
     """The contraction merge over an explicit (d1, d2) pair DataFrame —
     split out so the bridge fixtures can drive it directly
     (tests/test_llm_pipeline.py::test_incremental_cc_matches_full_recompute).
@@ -2123,7 +2067,7 @@ def _incremental_cc_from_pairs(
     new_edges = pairs.where(new1 | new2)
 
     prior = _materialize_iter(
-        _min_label_components(old_old, reliable), reliable
+        _min_label_components(old_old)
     )  # (doc_id, cluster_id) over docs with ≥1 old-old edge
 
     lab1 = prior.select(
@@ -2142,7 +2086,7 @@ def _incremental_cc_from_pairs(
         .where(F.col("d1") != F.col("d2"))
         .distinct()
     )
-    inc = _min_label_components(contracted, reliable).select(
+    inc = _min_label_components(contracted).select(
         F.col("doc_id").alias("node"), F.col("cluster_id").alias("comp")
     )
 
@@ -2965,10 +2909,7 @@ def dedup_simhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the replica corpus genuinely containing ~17× the near-dup pairs,
     not a plan defect; at real corpus growth (new content, not
     replicas) pair mass tracks true duplication."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
-    groups = _materialize_iter(_simhash_groups(spark, sf_dir), reliable)
+    groups = _materialize_iter(_simhash_groups(spark, sf_dir))
     # materialize once: groups feeds the same-signature expansion and
     # BOTH sides of the cross-signature member join — without it each
     # consumer re-executes the pandas-UDF signature scan.
@@ -3043,14 +2984,11 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     its signature group has ≥2 members or its signature has a verified
     cross-signature edge.  Oracle: recursive-CTE reachability over the
     signature graph."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
-    groups = _materialize_iter(_simhash_groups(spark, sf_dir), reliable)
+    groups = _materialize_iter(_simhash_groups(spark, sf_dir))
     sig_edges = _simhash_sig_pairs(groups).select(
         F.col("s1").alias("d1"), F.col("s2").alias("d2")
     )
-    lab = _min_label_components(sig_edges, reliable)  # (doc_id=sig, cluster_id=comp sig)
+    lab = _min_label_components(sig_edges)  # (doc_id=sig, cluster_id=comp sig)
     sig_lab = (
         groups.join(lab, groups["simhash"] == lab["doc_id"], "left")
         .where((F.size("docs") >= 2) | lab["cluster_id"].isNotNull())
@@ -3201,7 +3139,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # bits_set rides along as a broadcast 1-row frame — no driver
-    # action at plan-build time (the query stays fully lazy)
+    # action at plan-build time (nothing runs until the caller's action)
     nbits = bits.agg(F.count("*").alias("bits_set"))
     fp = F.sum(
         (F.col("bloom_hit") & (F.col("member") == 0)).cast("long")

@@ -302,7 +302,7 @@ def dev_analytics_mart(games: DataFrame) -> DataFrame:
 def run_reference_workload(spark: SparkSession, games: DataFrame) -> dict[str, DataFrame]:
     """The reference's complete stage-2 + stage-3 run as one call
     (spark_eda.py main + stage3.ipynb cells, minus matplotlib/HBase):
-    every analysis as a named lazy DataFrame.  Callers collect/write
+    every analysis as a named, unevaluated DataFrame.  Callers collect/write
     at the presentation edge.
 
     Figure → input-DataFrame mapping (S9, reference figs/*.png — the

@@ -22,9 +22,6 @@ from pyspark.sql import functions as F
 
 from .dedup import (
     DEDUP_JACCARD_ORACLE,
-    RELIABLE_CKPT_CONF,
-    _ckpt_file,
-    _drop_ckpt,
     _materialize_iter,
     dedup_ngram_jaccard_pairs,
 )
@@ -49,10 +46,7 @@ def graph_2hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     three consumers (1-hop, both wedge sides, degree) would otherwise
     each re-execute the whole shingle/posting-list pair generation —
     measured ~8 s → ~4 s at sf0.1."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
-    e = _materialize_iter(_sym_edges(spark, sf_dir), reliable)
+    e = _materialize_iter(_sym_edges(spark, sf_dir))
     one = e.select("src", F.col("dst").alias("reach"))
     two = e.alias("a").join(
         e.alias("b"), F.col("a.dst") == F.col("b.src")
@@ -106,17 +100,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle counted exactly once, and the join input is the oriented
     edge list (half the symmetric one), materialized once for its four
     consumers (three join legs + the node census)."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     p = _materialize_iter(
         dedup_ngram_jaccard_pairs(spark, sf_dir)
         .select(
             F.least("d1", "d2").alias("lo"),
             F.greatest("d1", "d2").alias("hi"),
         )
-        .distinct(),
-        reliable,
+        .distinct()
     )
     tri = (
         p.alias("ab")
@@ -200,9 +190,8 @@ SELECT (SELECT COUNT(*) FROM tri) AS triangles,
 # out-degree ≥ 1), so no dangling-mass redistribution pass is needed.
 # Iteration count is FIXED (no driver-side convergence probe → no
 # collect in the query path); 8 rounds on a DF-capped pair graph whose
-# components are small is past convergence.  For production-sized
-# graphs, checkpoint every ~5 rounds (the dedup_cluster_assign
-# machinery, dedup.py:440) to cut lineage.
+# components are small is past convergence.  Every round's ranks pass
+# through the shared lineage barrier (dedup._materialize_iter).
 PAGERANK_ITERS = 8
 PAGERANK_DAMPING = 0.85  # carried exactly as DAMP_NUM/DAMP_DEN below
 PAGERANK_SCALE = 10**12  # fixed-point denominator of the rank numerator
@@ -213,37 +202,30 @@ _TELEPORT_FIXED = PAGERANK_SCALE * (_DAMP_DEN - _DAMP_NUM) // _DAMP_DEN
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node PageRank (damping 0.85, 8 fixed iterations, total mass
     1.0) over the symmetric near-dup pair graph, rounded to 8dp."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     # materialize the raw edge list before its two consumers (the
     # degree agg and the join below) — otherwise the jaccard pair
     # subtree executes twice during setup
-    e = _materialize_iter(_sym_edges(spark, sf_dir), reliable)
+    e = _materialize_iter(_sym_edges(spark, sf_dir))
     deg = e.groupBy("src").agg(F.count("*").alias("degree"))
     # materialize the static (edge ⋈ degree) relation ONCE — without
     # this every iteration's join re-executes the whole shingle/
-    # posting-list pair generation (the same fix the CC loop carries,
-    # dedup.py:500), and 8 iterations embed the jaccard subtree 8×.
+    # posting-list pair generation (the same fix the CC loop carries),
+    # and 8 iterations embed the jaccard subtree 8×.
     edge_deg = _materialize_iter(
         e.join(deg, "src").select(
             F.col("src").alias("node"), "dst", "degree"
-        ),
-        reliable,
+        )
     )
-    nodes = _materialize_iter(
-        edge_deg.select("node").distinct(), reliable
-    )
+    nodes = _materialize_iter(edge_deg.select("node").distinct())
     nt = nodes.agg(F.count("*").alias("n_nodes"))
     ranks = nodes.crossJoin(F.broadcast(nt)).select(
         "node",
         F.expr(f"CAST({PAGERANK_SCALE} AS BIGINT) DIV n_nodes").alias("rank"),
     )
     # materialize ranks EVERY iteration (same discipline as the CC
-    # loop): without it iteration k's lazy plan nests all k-1 prior
-    # rounds, so the loop re-executes O(iters²) stages — measured 20 s
-    # for 8 rounds on a 477-node graph, pure scheduling
-    prev_ckpt: str | None = None
+    # loop): without it iteration k's unmaterialized plan nests all k-1
+    # prior rounds, so the loop re-executes O(iters²) stages — measured
+    # 20 s for 8 rounds on a 477-node graph, pure scheduling
     for _ in range(PAGERANK_ITERS):
         contrib = (
             ranks.join(edge_deg, "node")
@@ -268,11 +250,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f" DIV {_DAMP_DEN}"
                 ).alias("rank"),
             ),
-            reliable,
+            supersedes=ranks,
         )
-        if reliable:
-            _drop_ckpt(prev_ckpt)
-            prev_ckpt = _ckpt_file(ranks)
     # 8dp round entirely in integer space: (rank + 5000) DIV 10^4 is an
     # exact integer at scale 10^8, and integers < 2^53 convert to
     # double identically in both engines
@@ -426,12 +405,8 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     both wedge sides + degree) — the 2-hop/triangle discipline; the
     unmaterialized form re-executed the posting-list generation per
     consumer (4.6 s → 3.3 s at sf0.1)."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     pairs = _materialize_iter(
-        dedup_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2"),
-        reliable,
+        dedup_ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
     )
     sym = pairs.select(
         F.col("d1").alias("src"), F.col("d2").alias("dst")
@@ -521,17 +496,13 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINTs, the engine-agreed form (see _rounding.py)."""
     from ._rounding import _fr4
 
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
     p = _materialize_iter(
         dedup_ngram_jaccard_pairs(spark, sf_dir)
         .select(
             F.least("d1", "d2").alias("lo"),
             F.greatest("d1", "d2").alias("hi"),
         )
-        .distinct(),
-        reliable,
+        .distinct()
     )
     tri = (
         p.alias("ab")
@@ -643,17 +614,13 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per round one (edges ⋈ labels) shuffle join on node ids and
     two hash-aggs — all degree-bounded (the pair graph is DF-capped at
     construction); labels materialize per round with the same
-    checkpoint discipline as the CC/PageRank loops, so the lazy plan
-    never nests rounds."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
-    e = _materialize_iter(_sym_edges(spark, sf_dir), reliable)
-    nodes = _materialize_iter(e.select("src").distinct(), reliable)
+    checkpoint discipline as the CC/PageRank loops, so no round's plan
+    nests the rounds before it."""
+    e = _materialize_iter(_sym_edges(spark, sf_dir))
+    nodes = _materialize_iter(e.select("src").distinct())
     # self-loops carry the self-vote through the same join
     e = e.union(nodes.select("src", F.col("src").alias("dst")))
     lab = nodes.select("src", F.col("src").alias("lab"))
-    prev_ckpt: str | None = None
     for _ in range(LPA_ITERS):
         nbr = e.join(
             lab.select(F.col("src").alias("dst"), "lab"), "dst"
@@ -673,11 +640,8 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("m")
             )
             .select("src", F.col("m.l").alias("lab")),
-            reliable,
+            supersedes=lab,
         )
-        if reliable:
-            _drop_ckpt(prev_ckpt)
-            prev_ckpt = _ckpt_file(lab)
     return lab.select(
         F.col("src").alias("doc_id"), F.col("lab").alias("community")
     ).orderBy("doc_id")
@@ -749,12 +713,8 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins on node ids) + one degree agg, all degree-bounded; the
     survivor table shrinks monotonically and materializes per round
     with the CC/PageRank checkpoint discipline."""
-    reliable = (
-        spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true"
-    )
-    e = _materialize_iter(_sym_edges(spark, sf_dir), reliable)
-    surv = _materialize_iter(e.select("src").distinct(), reliable)
-    prev_ckpt: str | None = None
+    e = _materialize_iter(_sym_edges(spark, sf_dir))
+    surv = _materialize_iter(e.select("src").distinct())
     for _ in range(KCORE_ROUNDS):
         alive = e.join(surv, "src").join(
             surv.select(F.col("src").alias("dst")), "dst"
@@ -764,11 +724,8 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("c"))
             .where(F.col("c") >= KCORE_K)
             .select("src"),
-            reliable,
+            supersedes=surv,
         )
-        if reliable:
-            _drop_ckpt(prev_ckpt)
-            prev_ckpt = _ckpt_file(surv)
     # r12 (ADVICE): the final aggregate re-applies the degree >= k
     # gate.  At test SFs peeling has converged by KCORE_ROUNDS (the
     # invariant test proves it), but at a scale where it has NOT, a

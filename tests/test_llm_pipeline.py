@@ -1114,12 +1114,12 @@ def test_incremental_cc_matches_full_recompute(spark):
     )
     merged = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup._incremental_cc_from_pairs(pairs, False).collect()
+        for r in dedup._incremental_cc_from_pairs(pairs).collect()
     }
     assert merged == {0: 0, 1: 0, 2: 0, 5: 0, 7: 0, 8: 0, 11: 11, 12: 11}
     full_cc = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup._min_label_components(pairs, False).collect()
+        for r in dedup._min_label_components(pairs).collect()
     }
     assert merged == full_cc
 
@@ -1138,7 +1138,7 @@ def test_star_cc_matches_min_label_and_converges_faster_on_chain(spark):
     star_stats: dict = {}
     star = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup._star_components(df, False, star_stats).collect()
+        for r in dedup._star_components(df, star_stats).collect()
     }
     expected = {i: 0 for i in range(n)}
     expected.update({100: 100, 101: 100, 102: 100})

@@ -551,20 +551,30 @@ def test_ivfpq_residual_serving_plan(spark, sf_dir):
         ("sim_pq_topk", 11),
         ("sim_ivf_pq_topk", 26),
         ("sim_ivfpq_residual_topk", 29),
+        ("dedup_cluster_assign", 18),
+        ("dedup_cluster_assign_star", 26),
+        ("dedup_lsh_cluster_assign", 29),
+        ("dedup_incremental_cc", 50),
+        # dedup_simhash_clusters is not pinned: its count varies between
+        # runs in one session (53 or 54)
     ],
 )
-def test_pq_family_driver_job_count(spark, sf_dir, name, jobs):
-    """Driver jobs for building and collecting each PQ-family query:
+def test_driver_job_count(spark, sf_dir, name, jobs):
+    """Driver jobs for building and collecting each query.  PQ family:
     the fits' seed draws and per-round take()s, the assignment
-    barriers, the query-row fetch and the final collect.  A new
-    driver action in the fit or serving path changes the count."""
-    from bigdata_gamedb_etl_spark.operators import similarity
+    barriers, the query-row fetch and the final collect.  CC family:
+    one barrier job per round, which also observes the convergence
+    value, plus the edge-generation barriers and the final collect.
+    A new driver action in any of these paths changes the count.  The
+    counts are those of the default test data: a CC loop's round count
+    depends on its graph."""
+    from bigdata_gamedb_etl_spark.registry import all_queries
 
     sc = spark.sparkContext
-    group = f"pq-job-count-{name}"
+    group = f"job-count-{name}"
     sc.setJobGroup(group, group)
     try:
-        getattr(similarity, name)(spark, sf_dir).collect()
+        all_queries()[name](spark, sf_dir).collect()
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

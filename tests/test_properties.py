@@ -512,11 +512,11 @@ def test_cc_variants_match_union_find(spark, pairs):
     df = spark.createDataFrame(pairs, "d1 long, d2 long")
     minl = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup._min_label_components(df, False).collect()
+        for r in dedup._min_label_components(df).collect()
     }
     star = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup._star_components(df, False).collect()
+        for r in dedup._star_components(df).collect()
     }
     assert minl == expected
     assert star == expected

@@ -159,6 +159,22 @@ print("OK")
         assert r.returncode == 0 and "OK" in r.stdout, (name, r.stderr[-2000:])
 
 
+def _ckpt_local_dir(spark) -> str | None:
+    """The session checkpoint dir as a local filesystem path, or None.
+    ``getCheckpointDir`` returns a Hadoop URI (``file:/tmp/...`` under
+    local mode); only a local-fs dir can be listed here."""
+    d = spark.sparkContext.getCheckpointDir()
+    if d is None:
+        return None
+    if d.startswith("file:"):
+        d = d[len("file:") :]
+        while d.startswith("//"):  # file:///x -> /x
+            d = d[1:]
+    elif "://" in d:  # non-local scheme
+        return None
+    return d if os.path.isdir(d) else None
+
+
 def test_cluster_assign_reliable_checkpoint_path(spark, sf_dir):
     """The fault-tolerant materialization (reliable checkpoint() files
     instead of executor-local blocks) must produce exactly the same
@@ -179,8 +195,6 @@ def test_cluster_assign_reliable_checkpoint_path(spark, sf_dir):
         )
     finally:
         spark.conf.unset(RELIABLE_CKPT_CONF)
-    from bigdata_gamedb_etl_spark.operators.dedup import _ckpt_local_dir
-
     assert spark.sparkContext.getCheckpointDir() is not None
     assert reliable == baseline
     # superseded per-iteration label checkpoints must be deleted as the
@@ -220,3 +234,151 @@ def test_graph_queries_reliable_checkpoint_path(spark, sf_dir):
         spark.conf.unset(RELIABLE_CKPT_CONF)
     assert rel_2hop == base_2hop
     assert rel_pr == base_pr
+
+
+#: Runs in a subprocess on local[2,2] (one retry per task): a Python
+#: UDF fails attempt 0 of partition 0 once per tag and leaves a marker
+#: file, so the test can tell an injected failure actually fired.
+_RETRY_DRIVER = """
+import json, os, sys
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from bigdata_gamedb_etl_spark.session import get_spark
+from bigdata_gamedb_etl_spark.operators.dedup import (
+    RELIABLE_CKPT_CONF, _materialize_iter, _min_label_components,
+    _star_components,
+)
+
+markers, pairs_file, out_file = sys.argv[1:4]
+spark = get_spark(
+    app_name="retry-determinism", master="local[2,2]", shuffle_partitions=4
+)
+spark.sparkContext.setLogLevel("OFF")
+
+
+def flaky(tag):
+    def ident(x):
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            open(os.path.join(markers, tag), "w").close()
+            raise RuntimeError("injected failure " + tag)
+        return x
+    return F.udf(ident, "long")
+
+
+pairs = [tuple(p) for p in json.load(open(pairs_file))]
+out = {"sums": {}, "cc": {}}
+for path in ("local", "reliable"):
+    spark.conf.set(RELIABLE_CKPT_CONF, str(path == "reliable").lower())
+    ids = spark.range(0, 1000, 1, 4)
+    # the failure in the map stage before the shuffle; the observation
+    # rides the post-shuffle stage
+    before = (
+        ids.select(flaky(path + "-before")("id").alias("v"))
+        .groupBy((F.col("v") % 10).alias("k"))
+        .agg(F.sum("v").alias("v"))
+    )
+    # the failure in the stage that carries the observation
+    carrying = ids.repartition(4, "id").select(
+        flaky(path + "-carrying")("id").alias("v")
+    )
+    for place, df in (("before", before), ("carrying", carrying)):
+        _, (s,) = _materialize_iter(
+            df, F.sum(F.col("v").cast("decimal(38,0)"))
+        )
+        out["sums"][path + "-" + place] = int(s)
+    edges = spark.createDataFrame(pairs, "d1 long, d2 long").repartition(2)
+    for name, cc in (
+        ("min_label", _min_label_components), ("star", _star_components)
+    ):
+        tag = path + "-" + name
+        flaky_pairs = edges.select(flaky(tag)("d1").alias("d1"), "d2")
+        out["cc"][tag] = [list(r) for r in cc(flaky_pairs).collect()]
+ckpt = spark.sparkContext.getCheckpointDir()[len("file:"):]
+while ckpt.startswith("//"):
+    ckpt = ckpt[1:]
+out["ckpt_dir"] = ckpt
+out["ckpt_dir_existed"] = os.path.isdir(ckpt)
+spark.stop()
+json.dump(out, open(out_file, "w"))
+"""
+
+
+def test_observed_barrier_and_cc_are_exact_under_task_retry(tmp_path):
+    """The barrier's observed aggregate and the CC loops' results must
+    not depend on a failed task attempt: a retried task's partial
+    values are dropped, not merged twice.  Checked on both checkpoint
+    paths from a foreign cwd, with the failure before the shuffle and
+    in the observed stage itself.  The checkpoint dir the engine
+    created is gone once the process exits."""
+    import json
+    import random
+    import subprocess
+    import sys as _sys
+
+    rng = random.Random(7)
+    pairs = [(i, i + 1) for i in range(9)]  # a chain 0-…-9
+    for _ in range(40):
+        a, b = rng.randrange(20, 80), rng.randrange(20, 80)
+        if a != b:
+            pairs.append((a, b))
+    pairs += [(100, 101), (101, 102), (100, 102)]
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        parent[find(a)] = find(b)
+    comp_min: dict[int, int] = {}
+    for n in parent:
+        comp_min[find(n)] = min(comp_min.get(find(n), n), n)
+    expected = sorted([n, comp_min[find(n)]] for n in parent)
+
+    markers = tmp_path / "markers"
+    markers.mkdir()
+    (tmp_path / "pairs.json").write_text(json.dumps(pairs))
+    (tmp_path / "drive.py").write_text(_RETRY_DRIVER)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [
+            _sys.executable,
+            str(tmp_path / "drive.py"),
+            str(markers),
+            str(tmp_path / "pairs.json"),
+            str(tmp_path / "out.json"),
+        ],
+        capture_output=True,
+        text=True,
+        cwd="/tmp",
+        env={**os.environ, "PYTHONPATH": repo, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = json.loads((tmp_path / "out.json").read_text())
+
+    tags = [
+        f"{path}-{case}"
+        for path in ("local", "reliable")
+        for case in ("before", "carrying", "min_label", "star")
+    ]
+    assert sorted(os.listdir(markers)) == sorted(tags), "a failure never fired"
+    assert out["sums"] == {
+        f"{path}-{place}": 499500
+        for path in ("local", "reliable")
+        for place in ("before", "carrying")
+    }
+    for path in ("local", "reliable"):
+        for name in ("min_label", "star"):
+            assert out["cc"][f"{path}-{name}"] == expected, (path, name)
+
+    # Spark puts its checkpoints in a subdir of the dir the engine made
+    assert out["ckpt_dir_existed"]
+    made = os.path.dirname(out["ckpt_dir"])
+    assert os.path.basename(made).startswith("gamedb-etl-ckpt-"), made
+    assert not os.path.exists(made), f"engine checkpoint dir left: {made}"
