@@ -44,6 +44,7 @@ sys.path.insert(0, _HERE)
 from bigdata_gamedb_etl_spark.operators import multimodal
 from bigdata_gamedb_etl_spark.registry import all_queries
 from bigdata_gamedb_etl_spark.session import get_spark
+from perfbench.proctree import TreeMonitor
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -278,64 +279,28 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _tree_cpu_seconds() -> float | None:
-    """utime+stime seconds summed over this process and every LIVE
-    descendant.  time.process_time() alone is useless here: the
-    executor threads live in the JVM gateway — a CHILD process — so
-    the Python driver's own CPU is a rounding error.  One /proc sweep
-    builds the ppid tree (comm is parsed after the LAST ')' so names
-    with spaces/parens can't shift the fields); CPU of descendants
-    that EXIT mid-run is lost, but the JVM outlives the bench, which
-    is the case that matters.  Returns None when /proc isn't readable
-    (non-Linux)."""
-    try:
-        hz = os.sysconf("SC_CLK_TCK")
-        children: dict[int, list[int]] = {}
-        ticks: dict[int, int] = {}
-        for p in os.listdir("/proc"):
-            if not p.isdigit():
-                continue
-            try:
-                with open(f"/proc/{p}/stat") as fh:
-                    rest = fh.read().rsplit(")", 1)[1].split()
-            except (OSError, IndexError):
-                continue
-            pid = int(p)
-            children.setdefault(int(rest[1]), []).append(pid)
-            ticks[pid] = int(rest[11]) + int(rest[12])
-        total, frontier = 0, [os.getpid()]
-        while frontier:
-            pid = frontier.pop()
-            total += ticks.get(pid, 0)
-            frontier.extend(children.get(pid, []))
-        return total / hz
-    except Exception:
-        return None
-
-
-def _best_of(run, n: int) -> tuple[list[float], list[float | None]]:
+def _best_of(run, n: int) -> tuple[list[float], list[float]]:
     """Call `run` n times; returns (wall seconds, process-tree CPU
-    seconds) per call.  Callers report the min of each list
-    independently: the first call carries Catalyst optimization and
-    Janino codegen, which amortize to nothing at scale, and when it
-    happens to win on wall its CPU would still include that JIT
-    work — min-of-runs is the steady-state lower bound on both."""
+    seconds) per call.  CPU comes from a `perfbench.proctree` ledger
+    over this process and its descendants: the executor threads live
+    in the JVM gateway, a CHILD process, so the Python driver's own CPU
+    is a rounding error; and the ledger keeps a process that exits
+    after it was sampled, so a delta is never negative.  Callers report
+    the min of each list independently: the first call carries
+    Catalyst optimization and Janino codegen, which amortize to nothing
+    at scale, and when it happens to win on wall its CPU would still
+    include that JIT work — min-of-runs is the steady-state lower bound
+    on both."""
+    ledger = TreeMonitor()
     walls: list[float] = []
-    cpus: list[float | None] = []
+    cpus: list[float] = []
     for _ in range(n):
-        c0 = _tree_cpu_seconds()
+        c0 = ledger.sample()
         t0 = time.perf_counter()
         run()
         walls.append(round(time.perf_counter() - t0, 3))
-        c1 = _tree_cpu_seconds()
-        cpus.append(
-            round(c1 - c0, 3) if c0 is not None and c1 is not None else None
-        )
+        cpus.append(round(ledger.sample() - c0, 3))
     return walls, cpus
-
-
-def _min_cpu(cpus: list[float | None]) -> float | None:
-    return min((c for c in cpus if c is not None), default=None)
 
 
 def _env_capture() -> dict:
@@ -481,7 +446,7 @@ def run_headline(spark, queries: dict, env_before: dict) -> None:
     """Time every HEADLINE query best-of-HEADLINE_RUNS, write
     BENCH_DETAIL.json, print the summary line."""
     per_query_runs: dict[str, list[float]] = {}
-    per_query_cpu_runs: dict[str, list[float | None]] = {}
+    per_query_cpu_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
         per_query_runs[name], per_query_cpu_runs[name] = _best_of(
             lambda: _force(queries[name](spark, SF_DIR)), HEADLINE_RUNS
@@ -522,9 +487,7 @@ def run_headline(spark, queries: dict, env_before: dict) -> None:
         "per_query_runs": per_query_runs,
         # min across the runs, independently of which run won on wall
         # (see _best_of); the raw readings are per_query_cpu_runs
-        "cpu_sec": {
-            n: _min_cpu(c) for n, c in per_query_cpu_runs.items()
-        },
+        "cpu_sec": {n: min(c) for n, c in per_query_cpu_runs.items()},
         "per_query_cpu_runs": per_query_cpu_runs,
         # steady-state spread max(r2,r3)/min(r2,r3): a same-data delta
         # below a query's own spread is noise by construction
@@ -558,18 +521,18 @@ def run_probe(spark, queries: dict, env_before: dict) -> None:
     probe_dir = _ensure_scale_slice(
         SF_DIR, SCALE_PROBE_FACTOR, fingerprint["hash"]
     )
-    sides: dict[str, dict[str, tuple[float, float | None]]] = {}
+    sides: dict[str, dict[str, tuple[float, float]]] = {}
     for side, d in (("base", SF_DIR), ("scaled", probe_dir)):
         sides[side] = {}
         for name in SCALE_PROBE_QUERIES:
             walls, cpus = _best_of(
                 lambda: _force(queries[name](spark, d)), PROBE_RUNS
             )
-            sides[side][name] = (min(walls), _min_cpu(cpus))
+            sides[side][name] = (min(walls), min(cpus))
     base, scaled = sides["base"], sides["scaled"]
 
     def _ratio(num, den):
-        return round(num / den, 2) if den and num is not None else None
+        return round(num / den, 2) if den else None
 
     scale_probe = {
         "factor": SCALE_PROBE_FACTOR,

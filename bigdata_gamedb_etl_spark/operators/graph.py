@@ -746,18 +746,21 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kcore_oracle() -> str:
     """DuckDB twin: KCORE_ROUNDS unrolled peel layers over the same
-    symmetric edge list."""
+    symmetric edge list.  Every CTE is MATERIALIZED: DuckDB otherwise
+    inlines a CTE at each reference, and each layer joins the one
+    before it twice, so the shingle self-join would run 2**KCORE_ROUNDS
+    times (minutes at sf0.001 instead of a fraction of a second)."""
     ctes = [
-        f"base_pairs AS ({DEDUP_JACCARD_ORACLE})",
+        f"base_pairs AS MATERIALIZED ({DEDUP_JACCARD_ORACLE})",
         (
-            "sym AS (SELECT d1 AS src, d2 AS dst FROM base_pairs\n"
+            "sym AS MATERIALIZED (SELECT d1 AS src, d2 AS dst FROM base_pairs\n"
             "  UNION ALL SELECT d2, d1 FROM base_pairs)"
         ),
-        "s0 AS (SELECT DISTINCT src FROM sym)",
+        "s0 AS MATERIALIZED (SELECT DISTINCT src FROM sym)",
     ]
     for i in range(1, KCORE_ROUNDS + 1):
         ctes.append(
-            f"s{i} AS (SELECT sym.src FROM sym\n"
+            f"s{i} AS MATERIALIZED (SELECT sym.src FROM sym\n"
             f"  JOIN s{i - 1} a ON sym.src = a.src\n"
             f"  JOIN s{i - 1} b ON sym.dst = b.src\n"
             f"  GROUP BY sym.src HAVING COUNT(*) >= {KCORE_K})"

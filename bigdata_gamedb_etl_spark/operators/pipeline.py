@@ -133,9 +133,9 @@ def pipeline_training_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
             # both engines fold the same doubles in the same order and
             # sqrt is IEEE-correctly-rounded, so the engines round the
             # bit-identical value; divergence needs that value within
-            # 1 ulp of a 4 dp halfway point.  Queued for the floor
-            # recipe (with oracle + RECHECK rotation) in round 9 —
-            # the r8 window is at its 50-slot capacity.
+            # 1 ulp of a 4 dp halfway point.  The floor recipe
+            # (_rounding._fr4) would close even that; it has not been
+            # applied here, and applying it changes the oracle too.
             F.round(emb_norm, 4).alias("emb_norm"),
             F.md5("text").alias("text_md5"),
         )

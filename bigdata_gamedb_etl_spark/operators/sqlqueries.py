@@ -266,7 +266,7 @@ def sql_window_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_WINDOW_ORACLE = """
+SQL_TOP_SUPPLIERS_ORACLE = """
 WITH rev AS (
   SELECT n.n_name,
          s.s_name,
@@ -308,5 +308,5 @@ ORACLE = {
     "sql_json_props_stats": SQL_JSON_ORACLE,
     "sql_from_json_struct": SQL_FROM_JSON_ORACLE,
     "sql_variant_props_stats": SQL_VARIANT_ORACLE,
-    "sql_window_top_suppliers": SQL_WINDOW_ORACLE,
+    "sql_window_top_suppliers": SQL_TOP_SUPPLIERS_ORACLE,
 }

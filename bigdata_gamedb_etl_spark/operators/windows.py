@@ -287,7 +287,7 @@ ORDER BY event_id
 # fan each distinct pair out to the ≤7 target days it supports and
 # hash-count distinct per target day.  At 100 TB the explode runs over
 # the collapsed grain, never the raw events.
-ACTIVE_WINDOW_DAYS = 7
+ACTIVE_SPAN_DAYS = 7
 
 
 def w9_sliding_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,7 +305,7 @@ def w9_sliding_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = daily.select(
         "day",
         "user_id",
-        F.explode(F.sequence(F.lit(0), F.lit(ACTIVE_WINDOW_DAYS - 1))).alias("off"),
+        F.explode(F.sequence(F.lit(0), F.lit(ACTIVE_SPAN_DAYS - 1))).alias("off"),
     ).select(
         F.date_add(F.col("day"), F.col("off")).alias("day"), "user_id", "off"
     )
@@ -333,7 +333,7 @@ wau AS (
   SELECT d.day, COUNT(DISTINCT a.user_id) AS wau7
   FROM days d
   JOIN daily a
-    ON a.day BETWEEN d.day - {ACTIVE_WINDOW_DAYS - 1} AND d.day
+    ON a.day BETWEEN d.day - {ACTIVE_SPAN_DAYS - 1} AND d.day
   GROUP BY d.day
 )
 SELECT dau.day, dau.dau, wau.wau7

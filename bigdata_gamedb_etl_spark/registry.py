@@ -6,6 +6,11 @@ Each operator module exports:
   ORACLE:  dict[name, ANSI SQL string runnable by DuckDB]
 A name present in QUERIES but absent from ORACLE is a declared
 rows-only check (non-SQL-expressible or approximate by design).
+
+``all_queries()`` keeps registration order: MODULES order, then each
+module's QUERIES order.  Every caller looks queries up by name, and the
+test suite checks every registered query, so the order carries no
+contract.
 """
 
 from __future__ import annotations
@@ -40,116 +45,6 @@ MODULES = [
     pipeline, behavior, core, sqlqueries, windows, joins, graph,
 ]
 
-# Order matters: the driver's correctness gate checks a bounded prefix
-# (50 entries) of this registry.
-#
-# STRUCTURAL RULE (r4 verdict item 3 — r4 broke it by never rotating):
-# any commit that registers a new query MUST append its name to the
-# current round's *_NEW list in the SAME commit, so it enters the
-# driver window the round it lands.
-# tests/test_harness_compat.py::test_every_query_has_driver_evidence_or_is_queued
-# enforces this: a registered name with no row in any CORRECTNESS_r*.json
-# must appear in PRIORITY[:50].
-#
-# Round-15 head: no new queries (round 15 is the second OPTIMIZATION
-# round).  The window takes the 5 plan-changed rechecks (the r15
-# fused-ADC/single-pass rewrites, all value-identical and locally
-# re-verified), then the full 24-query r8-age band (completing the
-# drain the r14 head comment scheduled), then the 9 alphabetically-
-# first r9-age queries — 5 + 33 + 12 CONTROLS = 50.  The 27 remaining
-# r9-age queries rotate next round; their greens stand and
-# test_oracle_parity re-verifies them every run.
-ROUND15_NEW: list[str] = []
-
-#: Queries edited this round (new plan shape or new result dtype) —
-#: locally re-verified vs DuckDB, re-queued for driver evidence at the
-#: head of the window.
-RECHECK_CHANGED: list[str] = [
-    # r15 optimization sweep (guide §2.4/§4): sim_ivf_recall_curve
-    # collapses its 5-step nprobe ladder to ONE scored corpus pass +
-    # per-cell top-k window + one conditional aggregation (the band-
-    # ladder trick — probe-set nesting makes per-step top-k membership
-    # decidable among the per-cell survivors); the PQ serving passes
-    # (sim_pq_topk, sim_ivf_pq_topk, sim_ivfpq_residual_topk) fuse
-    # encode+ADC-sum into one Arrow kernel, removing the 32×-row
-    # subspace explode, the broadcast LUT/offset joins, and the
-    # groupBy exchange; dedup_lsh_recall_by_jaccard drops the
-    # loosest-band candidate self-join (flags are computed directly
-    # on the exact pairs' signature rows — the nesting theorem makes
-    # the left-join-null path and the direct evaluation identical).
-    # Row-identical at sf0.001/0.01/0.1 vs DuckDB (verified this
-    # round); every plan changed shape, so all five re-queue.
-    "sim_pq_topk",
-    "sim_ivf_pq_topk",
-    "sim_ivfpq_residual_topk",
-    "sim_ivf_recall_curve",
-    "dedup_lsh_recall_by_jaccard",
-]
-
-#: Drained in r7; refills only after a real testdata regeneration
-#: (the staleness guard goes red and names land here).
-RECONFIRM_STALE: list[str] = []
-
-#: r15: the full 24-query r8-age band (newest driver green r8 —
-#: computed from the CORRECTNESS_r*.json union), then the 9
-#: alphabetically-first r9-age queries — alphabetical within each age
-#: band so the drain order is auditable.  All unchanged since their
-#: last green and locally re-verified every run by test_oracle_parity.
-RECONFIRM_ROTATION: list[str] = [
-    # r8-age (all 24 that remain after the r14 drain; completes the
-    # r8 band — no registered query's newest driver evidence predates
-    # r9 after this window lands).
-    "pipeline_split_contamination",
-    "rfm_customer_segments",
-    "sim_centroid_outliers",
-    "sim_cosine_dup_pairs",
-    "sim_cosine_topk",
-    "sim_dim_variance_profile",
-    "sim_kmeans_lloyd_step",
-    "sim_knn_top1",
-    "sim_label_centroid_norms",
-    "sim_mrl_truncation_recall",
-    "sim_pca_power_iteration",
-    "sim_sq8_topk",
-    "sql_from_json_struct",
-    "sql_variant_props_stats",
-    "text_bpe_first_merges",
-    "text_freq_spectrum",
-    "text_gopher_quality",
-    "text_heaps_law",
-    "text_lang_rollup",
-    "text_repetition_rate",
-    "text_unigram_logprob",
-    "text_zipf_slope",
-    "tpch_q2_min_cost_supplier",
-    "w3_moving_avg_events",
-    # r9-age head (9 of 36, alphabetical; the remaining 27 rotate
-    # next round).
-    "anomaly_daily_zscore",
-    "behavior_event_lorenz",
-    "cohort_weekly_retention",
-    "dedup_boilerplate_lines",
-    "dedup_decontaminate",
-    "dedup_editdist_names",
-    "dedup_incremental_cc",
-    "dedup_incremental_pairs",
-    "dedup_simhash_band_pairs",
-]
-
-CONTROLS = [
-    "tpch_q1_pricing_summary", "tpch_q3_top_revenue_orders",
-    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
-    "a1_word_revenue", "a4_price_bin_acctbal",
-    "w1_pareto_supplier_share", "j1_region_revenue",
-    "sql_word_price_stats", "mart_supplier_summary",
-    "ga2_cube_segment_priority", "p3_latest_event_per_user",
-]
-
-PRIORITY = (
-    ROUND15_NEW + RECHECK_CHANGED + RECONFIRM_STALE
-    + RECONFIRM_ROTATION + CONTROLS
-)
-
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -158,12 +53,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate query names from {m.__name__}: {overlap}")
         merged.update(m.QUERIES)
-    missing = [n for n in PRIORITY if n not in merged]
-    if missing:
-        raise ValueError(f"PRIORITY names not registered: {missing}")
-    out = {n: merged[n] for n in PRIORITY}
-    out.update((n, f) for n, f in merged.items() if n not in out)
-    return out
+    return merged
 
 
 def all_oracle() -> dict[str, str]:

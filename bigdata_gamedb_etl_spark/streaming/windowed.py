@@ -15,12 +15,10 @@ state.
 
 from __future__ import annotations
 
-import sys
 from typing import Any, Iterator
 
 import pandas as pd
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,12 +29,6 @@ from pyspark.sql.types import (
 )
 
 from ..sources.catalog import TABLE_SCHEMAS, events_ts_unit, read_events
-
-# _running_totals (applyInPandasWithState fn) is module-level, so
-# cloudpickle would serialize it by REFERENCE and executor workers
-# without this repo on sys.path fail to unpickle it; by-value
-# registration ships the body with the task (see operators/multimodal.py).
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 #: Decoded schema every stream/batch consumer sees: the catalog's
@@ -405,25 +397,26 @@ def daily_heavy_users_stream(events: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def _running_totals(
-    key: tuple, batches: Iterator[pd.DataFrame], state: Any
-) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState update fn: per-user running count/sum."""
-    count, total = state.get() if state.exists else (0, 0.0)
-    for pdf in batches:
-        count += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((count, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "event_count": [count], "total_value": [round(total, 2)]}
-    )
-
-
 def user_running_totals_stream(events: DataFrame) -> DataFrame:
     """Arbitrary stateful streaming: per-user running totals via
     applyInPandasWithState (Arrow-batched, state in the state store —
     the 100 TB path for custom stateful logic)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
+
+    # nested, so cloudpickle ships it by value: executor workers need
+    # not have this package on sys.path
+    def _running_totals(
+        key: tuple, batches: Iterator[pd.DataFrame], state: Any
+    ) -> Iterator[pd.DataFrame]:
+        """Update fn: per-user running count/sum."""
+        count, total = state.get() if state.exists else (0, 0.0)
+        for pdf in batches:
+            count += len(pdf)
+            total += float(pdf["value"].sum())
+        state.update((count, total))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "event_count": [count], "total_value": [round(total, 2)]}
+        )
 
     out_schema = StructType(
         [

@@ -9,11 +9,9 @@ from __future__ import annotations
 
 import pytest
 
-#: r15 driver-budget profile: the golden layer re-pins value-level
-#: behavior that the oracle-parity window already covers per round —
-#: it rides the fullsweep tier (SPARK_GRAFT_FULL_SUITE=1, the
-#: pre-commit bar for operator edits; the r15 full run is committed
-#: evidence all goldens were green when the profile was carved).
+#: The goldens re-pin value-level behavior that the default-tier
+#: oracle parity already checks, so they ride the fullsweep tier
+#: (SPARK_GRAFT_FULL_SUITE=1, the pre-commit bar for operator edits).
 pytestmark = pytest.mark.fullsweep
 
 from bigdata_gamedb_etl_spark.operators.dedup import dq_contamination_scorecard

@@ -9,8 +9,9 @@ the driver's pandas row canonicalizer with "unhashable type"
 (burned the map-mart in r1 and mm_feature_extract in r2).
 
 These tests bind every oracle (DuckDB DESCRIBE — no execution) and
-every registered query's schema (plan only — no execution) and reject
-both classes up front, so a new query can't reintroduce either.
+build every registered query (schema and physical plan, no collect)
+and reject both classes up front, so a new query can't reintroduce
+either.
 """
 
 from __future__ import annotations
@@ -18,12 +19,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from bigdata_gamedb_etl_spark.registry import PRIORITY, all_oracle, all_queries
+from bigdata_gamedb_etl_spark.registry import all_oracle, all_queries
 
 QUERIES = all_queries()
 ORACLE = all_oracle()
-#: the driver's 50-query PRIORITY window
-_WINDOW = set(PRIORITY[:50])
 
 #: DECIMAL is banned in oracle *output* too: every oracle in this repo
 #: computes in DECIMAL where order-free exactness matters, then casts
@@ -47,24 +46,23 @@ def test_oracle_output_types_hash_safe(name, duck):
     )
 
 
-#: r15 driver-budget profile: schema flatness is checked for the
-#: driver window by default (a new/changed query is always in the
-#: window by the registry's rotation rules); the full 241-name sweep
-#: rides the fullsweep tier.  The sim-family entries are the expensive
-#: ones — their schemas only materialize after the in-query fits run.
-@pytest.mark.parametrize(
-    "name",
-    [
-        n if n in _WINDOW
-        else pytest.param(n, marks=pytest.mark.fullsweep)
-        for n in sorted(QUERIES)
-    ],
-)
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_registered_query_schema_flat(name, spark, sf_dir):
-    schema = QUERIES[name](spark, sf_dir).schema
+    """The build contract of every registered query, checked on one
+    build (building runs the query's eager barriers, so it is not
+    plan-only):
+    - no complex-typed output column, which would crash the driver's
+      row canonicalizer;
+    - no CartesianProduct in the physical plan, the one join operator
+      with no scale story.  BroadcastNestedLoopJoin is allowed: Spark
+      only emits it with a broadcast side, which is how the one-row
+      global-aggregate crossJoins and the bounded band/block joins are
+      built; an unbroadcastable full product always plans as
+      CartesianProduct."""
+    df = QUERIES[name](spark, sf_dir)
     bad = [
         f.name
-        for f in schema.fields
+        for f in df.schema.fields
         if isinstance(f.dataType, (ArrayType, MapType, StructType))
     ]
     assert not bad, (
@@ -72,113 +70,8 @@ def test_registered_query_schema_flat(name, spark, sf_dir):
         "row canonicalizer; serialize with to_json or flatten to scalars "
         "in the registered form (keep the typed variant unregistered)"
     )
-
-
-def test_every_query_has_driver_evidence_or_is_queued():
-    """Structural rotation guard (r4 verdict item 3): a registered
-    query with no row in ANY historical CORRECTNESS_r*.json must sit
-    inside the driver's 50-entry PRIORITY window, so it gets driver
-    evidence the round it lands.  Round 4 registered 5 queries without
-    rotating the window; one of them was red and nobody could tell."""
-    import glob
-    import json
-    import os
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    checked: set[str] = set()
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        checked.update(json.load(open(f)).keys())
-    unqueued = [n for n in QUERIES if n not in checked and n not in _WINDOW]
-    assert not unqueued, (
-        f"queries with no driver evidence and not in the head-50 window: "
-        f"{unqueued} — append them to the current round's *_NEW list in "
-        "registry.py in the same commit that registers them"
-    )
-
-
-#: Rounds whose BENCH testdata.hash was produced by the retired
-#: mtime-sensitive fingerprint algorithm — the value is not comparable
-#: with bench._testdata_fingerprint's content hash and is treated as
-#: unrecorded (see the comment block inside the staleness guard).
-_LEGACY_FPV_ROUNDS = frozenset({5})
-
-
-def test_stale_evidence_queries_are_queued():
-    """Staleness guard (r5 verdict item 5): an oracle-backed query
-    whose newest hash-verified driver row predates the current
-    testdata fingerprint must sit in the PRIORITY window or the
-    declared RECONFIRM_STALE rotation queue — otherwise its green is
-    evidence about data that no longer exists and nobody is scheduled
-    to re-confirm it.  Round 4 stalled exactly this way; round 5 made
-    same-round registration structural, this makes re-rotation
-    structural too."""
-    import glob
-    import json
-    import os
-    import re
-    import sys
-
-    from bigdata_gamedb_etl_spark.registry import RECONFIRM_STALE
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    sys.path.insert(0, root)
-    from bench import _testdata_fingerprint
-
-    live = _testdata_fingerprint("/root/testdata/sf0.1")["hash"]
-
-    # Freshness derives from recorded data only (the r6-verdict
-    # retirement plan: the _R4_FINGERPRINT grandfather constant was
-    # deleted in round 8 once BENCH_r07 carried parsed.testdata.hash).
-    # A round whose BENCH records the live hash is fresh.  Rounds with
-    # no COMPARABLE fingerprint — r1-r4 (pre-fingerprint format), r6
-    # (the capture-overflow defect), and r5, whose recorded value
-    # predates the content-based fingerprint algorithm (it hashed file
-    # mtimes, so the per-round testdata re-copies changed it on
-    # byte-identical content; _LEGACY_FPV_ROUNDS documents the format
-    # change, it does NOT grandfather freshness) — are credited ONLY
-    # while the entire comparable recorded history is unanimous-and-
-    # equal-to-live, i.e. no regeneration has ever been recorded.  The
-    # moment any comparable recorded fingerprint diverges from the
-    # live data, credit collapses to exactly the rounds that recorded
-    # the live hash, and every green from an unrecorded round goes
-    # stale — the behavior this guard exists for.  (Post-r7 every
-    # oracle query's newest green is >= r4, so the unanimity credit
-    # never reaches the pre-r4 testdata generation.)
-    recorded: dict[int, str | None] = {}
-    for f in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        rnd = int(re.search(r"BENCH_r(\d+)", f).group(1))
-        d = json.load(open(f))
-        recorded[rnd] = (d.get("parsed") or {}).get("testdata", {}).get(
-            "hash"
-        )
-    for rnd in _LEGACY_FPV_ROUNDS:
-        recorded.pop(rnd, None)
-        recorded[rnd] = None
-    fresh_rounds = {r for r, h in recorded.items() if h == live}
-    seen_hashes = {h for h in recorded.values() if h}
-    if fresh_rounds and seen_hashes == {live}:
-        fresh_rounds |= {r for r, h in recorded.items() if h is None}
-
-    latest_green: dict[str, int] = {}
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)", f).group(1))
-        for name, row in json.load(open(f)).items():
-            if row.get("hash_match") is True:
-                latest_green[name] = max(latest_green.get(name, 0), rnd)
-
-    stale = [
-        name
-        for name in sorted(ORACLE)
-        if latest_green.get(name, 0) not in fresh_rounds
-    ]
-    queued = _WINDOW | set(RECONFIRM_STALE)
-    unqueued = [n for n in stale if n not in queued]
-    assert not unqueued, (
-        f"oracle-backed queries whose driver evidence predates the "
-        f"current testdata (fingerprint {live}) and that are not queued "
-        f"for rotation: {unqueued} — append them to RECONFIRM_STALE in "
-        "registry.py (the window takes the head automatically)"
-    )
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert "CartesianProduct" not in plan, f"{name}: plans a cartesian product"
 
 
 def test_readme_counts_match_registry():
@@ -324,32 +217,29 @@ def test_quiet_verdict_labels_loaded_and_quiet_runs():
 
 
 def test_bench_tree_cpu_seconds_counts_self_and_children():
-    """r14: the CPU-ratio adjudication rule (BENCH_DETAIL.cpu_sec)
-    stands on _tree_cpu_seconds summing utime+stime over this process
-    AND its descendants — the local[32] executor threads live in the
-    JVM child, so a self-only reading would miss ~all of the work.
-    Pins: (a) monotone non-negative delta, (b) a CPU burn in THIS
-    process registers, (c) a CPU burn in a CHILD process registers
-    while the child is still alive (the JVM-outlives-the-bench case)."""
+    """The CPU-ratio adjudication rule (BENCH_DETAIL.cpu_sec) stands on
+    bench._best_of reading utime+stime over this process AND its
+    descendants — the executor threads live in the JVM child, so a
+    self-only reading would miss ~all of the work.  Pins: (a) a CPU
+    burn in THIS process registers, (b) a CPU burn in a CHILD process
+    registers while the child is still alive (the JVM-outlives-the-
+    bench case), (c) every reading is non-negative."""
     import os
     import subprocess
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from bench import _tree_cpu_seconds
+    from bench import _best_of
 
-    c0 = _tree_cpu_seconds()
-    assert c0 is not None and c0 >= 0.0
+    def self_burn():  # ~0.3 s of pure-Python spinning
+        x = 0
+        for i in range(4_000_000):
+            x += i * i
 
-    # (b) self burn: ~0.3 s of pure-Python spinning
-    x = 0
-    for i in range(4_000_000):
-        x += i * i
-    c1 = _tree_cpu_seconds()
-    assert c1 - c0 >= 0.1, f"self CPU burn invisible: {c1 - c0}"
+    _, cpus = _best_of(self_burn, 2)
+    assert all(c >= 0.1 for c in cpus), f"self CPU burn invisible: {cpus}"
 
-    # (c) child burn, read while the child is STILL RUNNING (the
-    # helper only sees live descendants by design)
+    # the child burns 1 s of CPU, says so, then stays alive
     child = subprocess.Popen(
         [
             sys.executable,
@@ -361,19 +251,16 @@ def test_bench_tree_cpu_seconds_counts_self_and_children():
             "while time.process_time() - t0 < 1.0:\n"
             "    x += i * i\n"
             "    i += 1\n"
-            "time.sleep(5)\n",
-        ]
+            "print('burnt', flush=True)\n"
+            "time.sleep(30)\n",
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
     )
     try:
-        import time as _time
-
-        deadline = _time.monotonic() + 10.0
-        seen = 0.0
-        while _time.monotonic() < deadline:
-            seen = _tree_cpu_seconds() - c1
-            if seen >= 0.5:
-                break
-            _time.sleep(0.2)
+        # the child is forked before the first sample, so its whole
+        # burn falls inside the timed call
+        _, (seen,) = _best_of(child.stdout.readline, 1)
         assert seen >= 0.5, f"child CPU burn invisible: {seen}"
     finally:
         child.kill()

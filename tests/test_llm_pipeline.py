@@ -9,10 +9,10 @@ import pytest
 
 from bigdata_gamedb_etl_spark.operators import dedup, similarity
 
-#: r15 driver-budget profile: the sf0.01 leg of every SF-parametrized
-#: invariant rides the fullsweep tier (the sf0.001 leg keeps each
-#: invariant pinned by default; SPARK_GRAFT_FULL_SUITE=1 restores the
-#: scale leg — the pre-commit bar for operator edits).
+#: The sf0.01 leg of every SF-parametrized invariant rides the
+#: fullsweep tier (the sf0.001 leg keeps each invariant pinned by
+#: default; SPARK_GRAFT_FULL_SUITE=1 restores the scale leg — the
+#: pre-commit bar for operator edits).
 SF_DIR_PATHS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 SF_DIRS = [
     SF_DIR_PATHS[0],

@@ -12,26 +12,11 @@ from decimal import Decimal
 
 import pytest
 
-from bigdata_gamedb_etl_spark.registry import PRIORITY, all_oracle, all_queries
+from bigdata_gamedb_etl_spark.registry import all_oracle, all_queries
 
 QUERIES = all_queries()
 ORACLE = all_oracle()
 ROWS_ONLY = sorted(set(QUERIES) - set(ORACLE))
-
-#: r15 driver-budget profile: the default run mirrors exactly the
-#: driver's 50-query PRIORITY window (which by the registry's rotation
-#: rules always contains every changed query); the other ~190 twins
-#: ride the fullsweep tier (SPARK_GRAFT_FULL_SUITE=1 — the pre-commit
-#: bar for operator edits).
-_WINDOW = set(PRIORITY[:50])
-
-
-def _tiered(names):
-    return [
-        n if n in _WINDOW
-        else pytest.param(n, marks=pytest.mark.fullsweep)
-        for n in names
-    ]
 
 
 def _spark_family(dt: str) -> str:
@@ -93,7 +78,7 @@ def _normalize(columns, rows):
     return [columns[i] for i in order], out
 
 
-@pytest.mark.parametrize("name", _tiered(sorted(ORACLE)))
+@pytest.mark.parametrize("name", sorted(ORACLE))
 def test_oracle_parity(name, spark, duck, sf_dir):
     sdf = QUERIES[name](spark, sf_dir)
     spark_cols = sdf.columns

