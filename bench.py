@@ -44,7 +44,7 @@ sys.path.insert(0, _HERE)
 from bigdata_gamedb_etl_spark.operators import multimodal
 from bigdata_gamedb_etl_spark.registry import all_queries
 from bigdata_gamedb_etl_spark.session import get_spark
-from perfbench.proctree import TreeMonitor
+from perfbench.proctree import TreeMonitor, cpu_times
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -336,10 +336,8 @@ def _env_capture() -> dict:
     except Exception:
         pass
     try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()[1:]
-        ticks = list(map(int, parts))
-        cap["stat_ticks"] = {"total": sum(ticks), "steal": ticks[7]}
+        steal, total = cpu_times()
+        cap["stat_ticks"] = {"total": total, "steal": steal}
     except Exception:
         pass
     return cap

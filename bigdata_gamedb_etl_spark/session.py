@@ -11,8 +11,9 @@ worked around (SURVEY.md §0).  The new engine flips all of that:
 - Arrow on: every pandas interchange and Pandas UDF is batch-columnar.
 - UTC session timezone: deterministic date math against naive parquet
   timestamps (and against the DuckDB oracle).
-- Fixed shuffle partitions for the small local test scale; at cluster
-  scale this is expected to be overridden (AQE coalesces either way).
+- Shuffle partitions fixed at ``DEFAULT_SHUFFLE_PARTITIONS`` unless the
+  caller passes ``shuffle_partitions`` (the tests and perfbench pass 8);
+  AQE coalesces either way.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 #: Configs applied to every engine session.  Kept as data so tests and
 #: bench can introspect / override them.

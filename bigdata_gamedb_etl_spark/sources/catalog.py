@@ -9,9 +9,9 @@ parquet footers on every read.  The declared schema is also what the
 DuckDB oracles assume, and the scan keeps column pruning and predicate
 pushdown (SURVEY.md §4).  A declared column missing from the files
 would read as all-null, so ``table`` checks the first file's footer on
-the driver (pyarrow, no Spark job) and fails with a ``ValueError``.
-The one read that still infers is the legacy TIMESTAMP(NANOS) events
-generation, whose ``ts`` must surface as a long to be decoded.
+the driver (pyarrow, no Spark job) and fails with a ``ValueError``; the same
+check rejects a declared TIMESTAMP column the read cannot decode.
+Batch and stream reads share this one path (``read_declared``).
 
 Parquet is the primary format (the reference's own data had a parquet
 twin — reference: .MISSING_LARGE_BLOBS:2); CSV/JSON readers are provided
@@ -20,10 +20,10 @@ for source parity (reference: spark_eda.py:42, stage3.ipynb cell 2).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -146,98 +146,108 @@ def _first_parquet_file(path: str) -> str:
     return os.path.join(path, names[0])
 
 
-def _footer_schema(path: str):
-    """Driver-side pyarrow read of the parquet footer of `path` (first
-    file of a directory): no Spark job, no data pages touched, safe to
-    call at plan-build time at any scale."""
-    import pyarrow.parquet as pq
+#: The two `TimestampType` encodings a declared-schema read decodes
+#: (Spark reads both as session-tz TIMESTAMP, batch and stream): Spark's
+#: default INT96 sink output and annotated INT64 at ms/us — the testdata
+#: and `perfbench/datagen.py` write `timestamp[us]`.
+_DECODABLE_TIMESTAMPS = ("INT96", "INT64 TIMESTAMP(MILLIS)", "INT64 TIMESTAMP(MICROS)")
 
-    return pq.read_schema(_first_parquet_file(path))
+_PARQUET_UNITS = {"milliseconds": "MILLIS", "microseconds": "MICROS", "nanoseconds": "NANOS"}
+
+
+def _encoding(col) -> str:
+    """Physical type plus logical annotation of one parquet leaf column,
+    e.g. 'INT96', 'INT64 TIMESTAMP(NANOS)', 'INT64'.  The Arrow schema
+    cannot tell these apart: it reports INT96 and NANOS both as
+    `timestamp[ns]`."""
+    logical = col.logical_type
+    if logical.type == "TIMESTAMP":
+        unit = json.loads(logical.to_json())["timeUnit"]
+        return f"{col.physical_type} TIMESTAMP({_PARQUET_UNITS[unit]})"
+    if logical.type == "NONE":
+        return col.physical_type
+    return f"{col.physical_type} {logical.type}"
 
 
 def _check_declared_columns(name: str, path: str) -> None:
-    """Fail fast when the files at `path` lack a column `TABLE_SCHEMAS`
-    declares for `name` — a declared-schema read would return it as
-    silent nulls."""
-    present = set(_footer_schema(path).names)
-    missing = [f.name for f in TABLE_SCHEMAS[name].fields if f.name not in present]
+    """Driver-side footer check of the files at `path` (first file of a
+    directory; pyarrow, no Spark job) against `TABLE_SCHEMAS[name]`.
+
+    - A missing declared column would read as silent nulls.
+    - A declared `TimestampType` column in any encoding outside
+      `_DECODABLE_TIMESTAMPS` (TIMESTAMP(NANOS), unannotated int64)
+      would fail inside a task, or decode 1000x off.
+    Both raise `ValueError` here instead."""
+    import pyarrow.parquet as pq
+
+    file = _first_parquet_file(path)
+    with pq.ParquetFile(file) as pf:
+        present = set(pf.schema_arrow.names)
+        leaves = {c.path: c for c in (pf.schema.column(i) for i in range(len(pf.schema)))}
+    declared = TABLE_SCHEMAS[name].fields
+    missing = [f.name for f in declared if f.name not in present]
     if missing:
         raise ValueError(
             f"table {name!r} at {path} lacks declared column(s) {missing} "
             "(sources.catalog.TABLE_SCHEMAS)"
         )
+    for f in declared:
+        if isinstance(f.dataType, TimestampType):
+            found = _encoding(leaves[f.name])
+            if found not in _DECODABLE_TIMESTAMPS:
+                raise ValueError(
+                    f"table {name!r} at {file}: column {f.name!r} is {found}; "
+                    f"timestamp unit skew — a declared TIMESTAMP column must be "
+                    f"one of {list(_DECODABLE_TIMESTAMPS)} "
+                    "(sources.catalog.TABLE_SCHEMAS)"
+                )
 
 
-def events_ts_unit(path: str) -> str:
-    """Parquet-footer probe: the physical unit of the `events.ts`
-    column ('ns', 'us', 'ms', 's').
-
-    Testdata generations differ — TIMESTAMP(NANOS) through round 3,
-    TIMESTAMP(MICROS, isAdjustedToUTC=false) since round 4 — and batch
-    and streaming MUST decode identically, so both go through this one
-    probe instead of each hard-coding generation knowledge (r4 broke
-    exactly that way: the batch path was fixed for the regeneration and
-    the stream kept the nanos decode).  Footer-only read (`_footer_schema`).
-    """
-    t = _footer_schema(path).field("ts").type
-    unit = getattr(t, "unit", None)
-    # Plain int64 with no logical type: the legacy generation's
-    # nanos-as-long encoding.
-    return unit if unit is not None else "ns"
+def read_declared(spark: SparkSession, reader, name: str, path: str) -> DataFrame:
+    """`reader` (`spark.read`, or a `spark.readStream` with its options)
+    applied to the parquet at `path` with the declared
+    `TABLE_SCHEMAS[name]`, behind the footer check — the ONE decode of
+    every table, batch and stream.  Building it runs no Spark job."""
+    # Session-wide on purpose, not scoped to this read: the date math
+    # run after the read (to_date, window, hour) must see UTC under a
+    # vanilla session to match the DuckDB oracles, and inference reads
+    # elsewhere in the session rely on naive timestamps surfacing as
+    # TIMESTAMP rather than TIMESTAMP_NTZ.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    df = reader.schema(TABLE_SCHEMAS[name]).parquet(path)
+    _check_declared_columns(name, path)
+    return df
 
 
 def read_events(spark: SparkSession, path: str) -> DataFrame:
-    """Batch events reader — the ONE decode path (streaming mirrors it
-    via the same `events_ts_unit` probe, streaming/windowed.py).
-
-    - MICROS/MILLIS files read with the declared events schema
-      (`TABLE_SCHEMAS["events"]`, session-tz TIMESTAMP `ts`; no Spark
-      job, no cast wrapper, so scan-level predicate pushdown on `ts` is
-      preserved).
-    - legacy NANOS (or unannotated int64) files read by inference as
-      nano-longs and truncate to microseconds (identical to DuckDB/Arrow
-      ns → µs downcasting).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if events_ts_unit(path) == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.schema(TABLE_SCHEMAS["events"]).parquet(path)
+    """Batch events reader over any events parquet file or directory of
+    them (e.g. a stream source dir with appended files): the path-based
+    batch twin of `streaming.read_events_stream`, through the same
+    `read_declared`."""
+    return read_declared(spark, spark.read, "events", path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table as a DataFrame (Parquet scan).
 
-    The scan is built with the declared `TABLE_SCHEMAS[name]`, so no
-    Spark job runs until an action; Catalyst prunes columns and pushes
-    predicates into the scan for anything expressed declaratively on
-    top of this.  Columns the files carry beyond the declared ones are
-    not read.  A declared column missing from the files raises
-    `ValueError` (footer check of the first file, on the driver); a
-    missing path raises Spark's `PATH_NOT_FOUND` as before.
+    The scan is built with the declared `TABLE_SCHEMAS[name]`
+    (`read_declared`), so no Spark job runs until an action; Catalyst
+    prunes columns and pushes predicates into the scan for anything
+    expressed declaratively on top of this.  Columns the files carry
+    beyond the declared ones are not read.  A missing path raises
+    Spark's `PATH_NOT_FOUND`; a declared column missing from the files,
+    or a declared TIMESTAMP column in an encoding the read cannot
+    decode, raises `ValueError` (footer check of the first file, on the
+    driver).
 
-    Timestamp normalization: the engine (and all driver evidence) is
-    built on session-tz TIMESTAMP — `unix_micros`, `session_window`,
-    and the DuckDB oracles all assume it.  Naive parquet timestamps
-    read as the declared TIMESTAMP; `events.ts` additionally goes
-    through the unit-probed `read_events` (encodings vary across
-    testdata generations).
+    Timestamps: the engine (and all driver evidence) is built on
+    session-tz TIMESTAMP — `unix_micros`, `session_window`, and the
+    DuckDB oracles all assume it.  Naive parquet timestamps, INT96 and
+    INT64 ms/us alike, read as the declared TIMESTAMP under the pinned
+    UTC session time zone.
     """
-    # Pin the session timezone: naive parquet timestamps must yield the
-    # same date parts here as in DuckDB regardless of the host JVM's TZ.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        df = read_events(spark, path)
-    else:
-        df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
-    _check_declared_columns(name, path)
-    return df
+    return read_declared(spark, spark.read, name, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -28,53 +28,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..sources.catalog import TABLE_SCHEMAS, events_ts_unit, read_events
+from ..sources.catalog import TABLE_SCHEMAS, read_declared
 
 
 #: Decoded schema every stream/batch consumer sees: the catalog's
-#: declared events schema (ts is session-tz TIMESTAMP; the current
-#: testdata generation writes TIMESTAMP(MICROS)).
+#: declared events schema (ts is session-tz TIMESTAMP).
 EVENTS_STREAM_SCHEMA = TABLE_SCHEMAS["events"]
-#: Read-side schema for the legacy TIMESTAMP(NANOS) generation, which
-#: Spark only reads as long (catalog.py note): the same schema with ts
-#: as LongType, decoded to the schema above by `read_events_stream`.
-EVENTS_STREAM_SCHEMA_NANOS = StructType(
-    [
-        StructField(f.name, LongType(), f.nullable) if f.name == "ts" else f
-        for f in EVENTS_STREAM_SCHEMA.fields
-    ]
-)
-
-#: Sanity bounds for decoded event time: the testdata era plus slack.
-#: A decode with the wrong unit lands 1000× off — epoch 1970 (too
-#: small) or far future (too big) — never inside this window.
-_SANE_EVENT_YEARS = (1990, 2100)
-
-
-def read_events_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Batch twin of `read_events_stream`: same probe, same decode
-    (delegates to sources.catalog.read_events — ONE code path)."""
-    return read_events(spark, path)
-
-
-def _assert_event_time_sane(spark: SparkSession, source_dir: str) -> None:
-    """Unit-skew guard: decode one row through the shared batch path
-    and require a plausible event year, so a future testdata encoding
-    change fails loudly and attributably at stream construction instead
-    of silently producing 1000×-off windows (round-4 failure mode)."""
-    row = (
-        read_events_batch(spark, source_dir)
-        .select(F.year("ts").alias("y"))
-        .first()
-    )
-    lo, hi = _SANE_EVENT_YEARS
-    if row is not None and row["y"] is not None and not (lo <= row["y"] <= hi):
-        raise ValueError(
-            f"events.ts decodes to year {row['y']} (sane range {lo}-{hi}): "
-            f"timestamp unit skew — the files under {source_dir} use an "
-            "encoding the probe/decode in sources.catalog.read_events does "
-            "not handle; fix it THERE (batch and streaming share it)"
-        )
 
 
 def read_events_stream(
@@ -84,28 +43,13 @@ def read_events_stream(
     (Spark's file stream source rejects single-file paths; stage files
     or symlinks into a directory — new arrivals become micro-batches).
 
-    The timestamp unit is probed from the parquet footer via the SAME
-    `events_ts_unit` used by the batch reader, so batch and streaming
-    can never decode differently again (VERDICT r4 item 7)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    _assert_event_time_sane(spark, source_dir)
-    if events_ts_unit(source_dir) == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return (
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA_NANOS)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(source_dir)
-            .withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        )
-    return (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-
-DOCUMENTS_STREAM_SCHEMA = TABLE_SCHEMAS["documents"]
+    Same decode as the batch `sources.catalog.read_events`: the declared
+    events schema behind the driver-side footer check
+    (`catalog.read_declared`), so an undecodable `ts` encoding or a
+    missing column fails here with `ValueError`, and building the stream
+    runs no Spark job."""
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
+    return read_declared(spark, reader, "events", source_dir)
 
 
 def read_documents_stream(
@@ -113,12 +57,10 @@ def read_documents_stream(
 ) -> DataFrame:
     """File-source stream over a DIRECTORY of documents parquet files —
     the ingestion feed a live curation pipeline consumes (each arriving
-    file is one micro-batch of crawled/ingested documents)."""
-    return (
-        spark.readStream.schema(DOCUMENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    file is one micro-batch of crawled/ingested documents).  Read like
+    every table (`catalog.read_declared`)."""
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
+    return read_declared(spark, reader, "documents", source_dir)
 
 
 def quality_monitor_stream(docs: DataFrame) -> DataFrame:

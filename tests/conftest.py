@@ -23,6 +23,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #: for operator changes).
 FULL_SUITE = os.environ.get("SPARK_GRAFT_FULL_SUITE") == "1"
 
+#: DuckDB's default memory limit is 80% of the machine's RAM, so a
+#: runaway oracle could get the whole test process killed.  Under this
+#: cap it raises DuckDB's OutOfMemoryException instead.
+DUCKDB_MEMORY_LIMIT = "4GB"
+
+
+def duck_connect():
+    """The one way tests open a DuckDB connection: in memory, capped at
+    `DUCKDB_MEMORY_LIMIT`."""
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit='{DUCKDB_MEMORY_LIMIT}'")
+    return con
+
 
 def pytest_configure(config):
     config.addinivalue_line(
@@ -57,7 +70,7 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = duckdb.connect()
+    con = duck_connect()
     for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'"

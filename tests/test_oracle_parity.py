@@ -123,3 +123,11 @@ def test_rows_only_executes(name, spark, sf_dir):
     df = QUERIES[name](spark, sf_dir)
     assert df.columns, f"{name}: empty schema"
     assert df.count() >= 0
+
+
+def test_duck_fixture_memory_limit_is_capped(duck):
+    """The oracle connection runs under the conftest cap, not DuckDB's
+    default of 80% of the machine's RAM: a runaway oracle raises
+    OutOfMemoryException instead of getting the test process killed."""
+    (limit,) = duck.execute("SELECT current_setting('memory_limit')").fetchone()
+    assert limit == "3.7 GiB"  # DuckDB's rendering of '4GB' (10^9 bytes)

@@ -12,6 +12,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import FloatType, IntegerType, StringType, StructField, StructType
 
+from conftest import duck_connect
+
 from bigdata_gamedb_etl_spark.functions.cleaning import (
     genres_array,
     owners_range,
@@ -317,9 +319,7 @@ def test_pmi_lift_decimal_path_survives_int64_overflow(spark):
     assert lift == 4.0  # (4e9*4e9)/(2e9*2e9) exactly
 
     # and DuckDB computes the identical value through the oracle's form
-    import duckdb
-
-    (dlift,) = duckdb.connect().execute(
+    (dlift,) = duck_connect().execute(
         f"""SELECT floor(CAST(CAST({c} AS DECIMAL(19,0)) * CAST({c} AS DECIMAL(19,0)) AS DOUBLE)
                    / CAST(CAST(2000000000 AS DECIMAL(19,0)) * CAST(2000000000 AS DECIMAL(19,0)) AS DOUBLE)
                    * 10000.0 + 0.5) / 10000.0"""
@@ -446,9 +446,7 @@ def test_money_columns_are_fixed_point():
     columns must be exact at 2 decimal places, else round(col*scale)
     would CHANGE values instead of merely re-encoding them and the
     quantized recipe would silently drift from the true average."""
-    import duckdb
-
-    con = duckdb.connect()
+    con = duck_connect()
     checks = [
         ("lineitem", "l_quantity"),
         ("lineitem", "l_extendedprice"),
@@ -578,8 +576,6 @@ def test_perm_formula_matches_spark_and_duckdb_on_boundaries(spark):
     """The same formula text, evaluated by both engines on adversarial
     60-bit inputs, must equal the big-int reference — the end-to-end
     twin of the pure-Python property above."""
-    import duckdb
-
     from bigdata_gamedb_etl_spark.operators import dedup as dd
 
     hs = [0, 1, 2**31 - 1, 2**31, 2**59, 2**60 - 1]
@@ -592,7 +588,7 @@ def test_perm_formula_matches_spark_and_duckdb_on_boundaries(spark):
     got_spark = df.selectExpr(
         "h", *[f"{dd._perm_formula(k, 'DIV')} AS p{k}" for k in ks]
     ).collect()
-    con = duckdb.connect()
+    con = duck_connect()
     for r in got_spark:
         h = r["h"]
         hh1, hh0 = h // dd._T31, h % dd._T31

@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from bigdata_gamedb_etl_spark import plans
+from bigdata_gamedb_etl_spark import plans, streaming
 from bigdata_gamedb_etl_spark.functions.cleaning import GAMES_SCHEMA
 from bigdata_gamedb_etl_spark.operators.marts import build_marts
 from bigdata_gamedb_etl_spark.sources.catalog import (
@@ -26,15 +26,20 @@ from bigdata_gamedb_etl_spark.sources.catalog import (
 )
 
 
-def test_catalog_reads_start_no_spark_job(spark, sf_dir):
-    # Every table is read with its declared schema, so building the
-    # DataFrames runs no schema-inference job.
+def test_catalog_reads_start_no_spark_job(spark, sf_dir, tmp_path):
+    # Every table is read with its declared schema behind a driver-side
+    # footer check, batch and stream alike, so building the DataFrames
+    # runs no schema-inference or sanity job.
+    stream_dir = tmp_path / "events_stream"
+    stream_dir.mkdir()
+    os.symlink(f"{sf_dir}/events.parquet", stream_dir / "events.parquet")
     sc = spark.sparkContext
     group = "catalog-declared-schema-reads"
     sc.setJobGroup(group, group)
     try:
         dfs = [table(spark, sf_dir, n) for n in TABLE_NAMES]
         dfs.append(read_events(spark, os.path.join(sf_dir, "events.parquet")))
+        assert streaming.read_events_stream(spark, str(stream_dir)).isStreaming
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         # control: an action under the same group is counted
         dfs[0].count()
@@ -65,6 +70,24 @@ def test_table_missing_declared_column_fails_fast(spark, tmp_path):
     pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}), path)
     with pytest.raises(ValueError, match=r"'region'.*region\.parquet.*\['r_name'\]"):
         table(spark, str(tmp_path), "region")
+
+
+def test_table_rejects_nanos_timestamp_on_the_driver(spark, sf_dir, tmp_path):
+    # The footer check covers every declared TIMESTAMP column, not just
+    # events.ts: a TIMESTAMP(NANOS) l_shipdate fails on the driver
+    # instead of inside a task.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    i = li.schema.get_field_index("l_shipdate")
+    li = li.set_column(i, "l_shipdate", li.column(i).cast(pa.timestamp("ns")))
+    pq.write_table(li, str(tmp_path / "lineitem.parquet"), version="2.6")
+    with pytest.raises(
+        ValueError,
+        match=r"'lineitem'.*lineitem\.parquet.*'l_shipdate' is INT64 TIMESTAMP\(NANOS\).*unit skew",
+    ):
+        table(spark, str(tmp_path), "lineitem")
 
 
 def test_csv_roundtrip_with_quotes(spark, tmp_path):

@@ -11,7 +11,7 @@ import pytest
 
 from bigdata_gamedb_etl_spark import streaming
 from bigdata_gamedb_etl_spark.operators.windows import w4_daily_event_rollup
-from bigdata_gamedb_etl_spark.sources.catalog import table
+from bigdata_gamedb_etl_spark.sources.catalog import read_events, table, write_parquet
 
 from pyspark.sql import functions as F
 
@@ -188,7 +188,7 @@ def _per_user_totals(events):
 
 
 def _batch_totals(spark, events_dir):
-    batch = streaming.read_events_batch(spark, events_dir)
+    batch = read_events(spark, events_dir)
     return {
         r["user_id"]: (r["event_count"], r["total_value"], r["last_us"])
         for r in _per_user_totals(batch).collect()
@@ -216,7 +216,7 @@ def test_foreach_batch_upsert_mart(spark, sf_dir, events_dir, tmp_path):
     # a late-arriving second file updates only the touched users via the
     # same checkpoint (incremental MERGE semantics)
     first = (
-        streaming.read_events_batch(spark, events_dir)
+        read_events(spark, events_dir)
         .orderBy("event_id")
         .limit(100)
     )
@@ -264,21 +264,20 @@ _EPOCH_2024_S = 1_704_067_200  # 2024-01-01T00:00:00Z
 
 
 def _write_events_fixture(tmp_path, name: str, unit: str):
-    """Write a tiny events-shaped parquet dir with ts in the given
-    physical unit ('ns' → TIMESTAMP(NANOS) like testdata generations
-    1-3, 'us' → TIMESTAMP(MICROS) like round 4+, 'raw_s' → unannotated
-    int64 seconds, an encoding the engine does NOT handle)."""
+    """Write a tiny events-shaped `events.parquet` into a fresh dir —
+    a table dir for `catalog.table` and a stream source dir at once —
+    with ts in the given encoding: 'us' → INT64 TIMESTAMP(MICROS) like
+    the testdata, 'ms' → TIMESTAMP(MILLIS), 'int96' → INT96 like
+    Spark's default sink output; 'ns' → TIMESTAMP(NANOS) and 'raw_s'
+    → unannotated int64 seconds, two encodings the engine rejects."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     n = 10
-    ts_ns = [(_EPOCH_2024_S + i * 60) * 1_000_000_000 for i in range(n)]
-    if unit == "ns":
-        ts = pa.array(ts_ns, type=pa.timestamp("ns"))
-    elif unit == "us":
-        ts = pa.array([v // 1000 for v in ts_ns], type=pa.timestamp("us"))
-    else:  # raw_s
-        ts = pa.array([v // 1_000_000_000 for v in ts_ns], type=pa.int64())
+    ts = pa.array([_EPOCH_2024_S + i * 60 for i in range(n)], pa.int64())
+    if unit != "raw_s":
+        arrow_unit = "ns" if unit == "int96" else unit
+        ts = ts.cast(pa.timestamp("s")).cast(pa.timestamp(arrow_unit))
     t = pa.table(
         {
             "event_id": pa.array(range(n), pa.int64()),
@@ -291,33 +290,76 @@ def _write_events_fixture(tmp_path, name: str, unit: str):
     )
     d = tmp_path / name
     d.mkdir()
-    pq.write_table(t, d / "part-0.parquet", version="2.6")
+    pq.write_table(
+        t, d / "events.parquet", version="2.6",
+        use_deprecated_int96_timestamps=unit == "int96",
+    )
     return str(d)
 
 
-def test_events_ts_unit_probe_both_generations(spark, tmp_path):
-    """VERDICT r4 item 7: one probe-based decode path covering both a
-    NANOS and a MICROS fixture written locally — batch and stream must
-    read the SAME first timestamp, in the testdata era."""
-    from bigdata_gamedb_etl_spark.sources.catalog import events_ts_unit
+def _ts_encoding(path):
+    import pyarrow.parquet as pq
 
-    for unit in ("ns", "us"):
+    with pq.ParquetFile(path) as pf:
+        return pf.schema.column(pf.schema.names.index("ts")).physical_type
+
+
+def test_decodable_ts_encodings_read_the_same_instant(spark, tmp_path):
+    """MICROS, MILLIS and INT96 all read through the one declared-schema
+    decode: batch and stream see the same first event time,
+    2024-01-01 00:00:00 in the pinned UTC session."""
+    from datetime import datetime
+
+    for unit in ("us", "ms", "int96"):
         d = _write_events_fixture(tmp_path, f"ev_{unit}", unit)
-        assert events_ts_unit(d) == unit
-        batch_first = (
-            streaming.read_events_batch(spark, d)
-            .orderBy("event_id")
-            .first()["ts"]
-        )
-        assert batch_first.year == 2024
+        batch_first = read_events(spark, d).orderBy("event_id").first()["ts"]
+        assert batch_first == datetime(2024, 1, 1), unit
+        assert table(spark, d, "events").orderBy("event_id").first()["ts"] == batch_first
         ev = streaming.read_events_stream(spark, d)
         streaming.run_stream_to_memory(
-            ev.select("event_id", "ts"), f"probe_{unit}_t", "append"
+            ev.select("event_id", "ts"), f"decode_{unit}_t", "append"
         )
         stream_first = (
-            spark.table(f"probe_{unit}_t").orderBy("event_id").first()["ts"]
+            spark.table(f"decode_{unit}_t").orderBy("event_id").first()["ts"]
         )
-        assert stream_first == batch_first
+        assert stream_first == batch_first, unit
+
+
+def test_engine_written_events_stream_back_like_batch(spark, sf_dir, tmp_path):
+    """Round trip of the engine's own sink under default confs: events
+    written by `catalog.write_parquet` store ts as INT96, and both the
+    batch `read_events` and the stream rollup must equal the batch
+    twin `w4_daily_event_rollup` over the same files."""
+    out = tmp_path / "events.parquet"  # a table dir for `table` / w4
+    write_parquet(table(spark, sf_dir, "events"), str(out))
+    part = next(out.glob("part-*.parquet"))
+    assert _ts_encoding(str(part)) == "INT96"
+
+    def rollup(rows):
+        return {
+            (r["day"], r["event_type"]): (r["event_count"], r["total_value"])
+            for r in rows
+        }
+
+    want = rollup(w4_daily_event_rollup(spark, str(tmp_path)).collect())
+    assert want == rollup(w4_daily_event_rollup(spark, sf_dir).collect())
+
+    batch = rollup(
+        read_events(spark, str(out))
+        .groupBy(F.to_date("ts").alias("day"), "event_type")
+        .agg(
+            F.count("*").alias("event_count"),
+            F.round(F.sum("value"), 2).alias("total_value"),
+        )
+        .collect()
+    )
+    assert batch == want
+
+    events = streaming.read_events_stream(spark, str(out))
+    streaming.run_stream_to_memory(
+        streaming.daily_rollup_stream(events), "int96_rollup_t", "complete"
+    )
+    assert rollup(spark.table("int96_rollup_t").collect()) == want
 
 
 def test_stream_and_batch_agree_on_first_event_ts(spark, sf_dir, events_dir):
@@ -333,12 +375,18 @@ def test_stream_and_batch_agree_on_first_event_ts(spark, sf_dir, events_dir):
 
 
 def test_unit_skew_guard_fires_on_unknown_encoding(spark, tmp_path):
-    """VERDICT r4 item 9: corrupting the unit (raw int64 seconds) must
-    trigger an immediate, attributable error at stream construction —
-    not silently-wrong windows."""
-    d = _write_events_fixture(tmp_path, "ev_raw", "raw_s")
-    with pytest.raises(ValueError, match="unit skew"):
-        streaming.read_events_stream(spark, d)
+    """A ts encoding the declared-schema read cannot decode (NANOS, raw
+    int64 seconds) must raise an immediate, attributable error on the
+    driver — from batch `table` and at stream construction alike — not
+    a task failure or silently-wrong windows."""
+    for unit in ("ns", "raw_s"):
+        d = _write_events_fixture(tmp_path, f"ev_{unit}", unit)
+        for read in (
+            lambda: table(spark, d, "events"),
+            lambda: streaming.read_events_stream(spark, d),
+        ):
+            with pytest.raises(ValueError, match="'events'.*unit skew"):
+                read()
 
 
 def _has_protobuf() -> bool:
@@ -552,7 +600,7 @@ def test_streaming_dau_sketch_bounds_exact_batch(spark, sf_dir, events_dir):
     }
     exact = {
         r["day"]: (r["n_events"], r["exact_users"])
-        for r in streaming.read_events_batch(spark, events_dir)
+        for r in read_events(spark, events_dir)
         .groupBy(F.to_date(F.date_trunc("day", "ts")).alias("day"))
         .agg(
             F.count("*").alias("n_events"),
@@ -585,7 +633,7 @@ def test_streaming_heavy_users_exact_below_cardinality(spark, sf_dir, events_dir
     assert got, "stream produced no heavy-hitter rows"
     exact = {
         (r["day"], r["user_id"]): r["n"]
-        for r in streaming.read_events_batch(spark, events_dir)
+        for r in read_events(spark, events_dir)
         .groupBy(
             F.to_date(F.date_trunc("day", "ts")).alias("day"), "user_id"
         )
@@ -634,18 +682,9 @@ def test_streaming_rollup_drops_null_ts_rows_batch_keeps_them(
     d = tmp_path / "null_ts_events"
     d.mkdir()
     staged = tmp_path / "staged"
-    # match the driver-generated testdata's MICROS int64 encoding —
-    # Spark's default INT96 output would misroute the footer unit probe
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
-    try:
-        spark.createDataFrame(rows, TABLE_SCHEMAS["events"]).coalesce(
-            1
-        ).write.mode("overwrite").parquet(str(staged))
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    spark.createDataFrame(rows, TABLE_SCHEMAS["events"]).coalesce(
+        1
+    ).write.mode("overwrite").parquet(str(staged))
     # the catalog expects events.parquet to be a FILE (like the
     # driver-generated testdata), not a directory
     import shutil as _sh
@@ -716,11 +755,6 @@ def test_watermark_drop_split_matches_batch_lateness_histogram(
     ]
     src = tmp_path / "late_src"
     src.mkdir()
-    # MICROS, not Spark's INT96 default: the shared ts-unit probe must
-    # see the same encoding the testdata generation uses
-    spark.conf.set(
-        "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-    )
     for i, (eid, t) in enumerate(rows):
         df = spark.createDataFrame(
             [(eid, t, 1, "click", 1.0, "{}")],
