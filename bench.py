@@ -428,14 +428,17 @@ def _bench_queries() -> dict:
 
 def _prior_queries(live_hash: str) -> dict:
     """Per-query timings of the committed BENCH_DETAIL.json, or {}
-    when it is absent, unparseable, or recorded against different
-    testdata (deltas are only meaningful on byte-identical inputs)."""
+    when it is absent, unparseable, recorded against different testdata
+    or on a different core count (deltas are only meaningful on
+    byte-identical inputs and the same parallelism)."""
     try:
         with open(DETAIL_FILE) as fh:
             prior = json.load(fh)
     except (OSError, ValueError):
         return {}
     if (prior.get("testdata") or {}).get("hash") != live_hash:
+        return {}
+    if ((prior.get("env") or {}).get("before") or {}).get("cpus") != os.cpu_count():
         return {}
     return {n: v for n, v in (prior.get("queries") or {}).items() if v}
 

@@ -8,7 +8,7 @@ no Spark job: Spark would otherwise run a schema-inference job over the
 parquet footers on every read.  The declared schema is also what the
 DuckDB oracles assume, and the scan keeps column pruning and predicate
 pushdown (SURVEY.md §4).  A declared column missing from the files
-would read as all-null, so ``table`` checks the first file's footer on
+would read as all-null, so ``table`` checks every file's footer on
 the driver (pyarrow, no Spark job) and fails with a ``ValueError``; the same
 check rejects a declared TIMESTAMP column the read cannot decode.
 Batch and stream reads share this one path (``read_declared``).
@@ -134,16 +134,16 @@ TABLE_SCHEMAS: dict[str, StructType] = {
 }
 
 
-def _first_parquet_file(path: str) -> str:
+def _parquet_files(path: str) -> list[str]:
     """`path` is either a single parquet file or a directory of them
-    (Spark sinks, streaming staging dirs); return one concrete file so
-    the footer can be probed."""
+    (Spark sinks, streaming staging dirs); return every concrete file
+    present now, so each footer can be checked."""
     if os.path.isfile(path):
-        return path
+        return [path]
     names = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
     if not names:
         raise FileNotFoundError(f"no .parquet files under {path}")
-    return os.path.join(path, names[0])
+    return [os.path.join(path, n) for n in names]
 
 
 #: The two `TimestampType` encodings a declared-schema read decodes
@@ -170,37 +170,39 @@ def _encoding(col) -> str:
 
 
 def _check_declared_columns(name: str, path: str) -> None:
-    """Driver-side footer check of the files at `path` (first file of a
-    directory; pyarrow, no Spark job) against `TABLE_SCHEMAS[name]`.
+    """Driver-side footer check of every parquet file present at `path`
+    (pyarrow, no Spark job; one footer read per file) against
+    `TABLE_SCHEMAS[name]`.
 
     - A missing declared column would read as silent nulls.
     - A declared `TimestampType` column in any encoding outside
       `_DECODABLE_TIMESTAMPS` (TIMESTAMP(NANOS), unannotated int64)
       would fail inside a task, or decode 1000x off.
-    Both raise `ValueError` here instead."""
+    Both raise `ValueError` here, naming the offending file.  Files a
+    stream source receives after the read is built are not checked."""
     import pyarrow.parquet as pq
 
-    file = _first_parquet_file(path)
-    with pq.ParquetFile(file) as pf:
-        present = set(pf.schema_arrow.names)
-        leaves = {c.path: c for c in (pf.schema.column(i) for i in range(len(pf.schema)))}
     declared = TABLE_SCHEMAS[name].fields
-    missing = [f.name for f in declared if f.name not in present]
-    if missing:
-        raise ValueError(
-            f"table {name!r} at {path} lacks declared column(s) {missing} "
-            "(sources.catalog.TABLE_SCHEMAS)"
-        )
-    for f in declared:
-        if isinstance(f.dataType, TimestampType):
-            found = _encoding(leaves[f.name])
-            if found not in _DECODABLE_TIMESTAMPS:
-                raise ValueError(
-                    f"table {name!r} at {file}: column {f.name!r} is {found}; "
-                    f"timestamp unit skew — a declared TIMESTAMP column must be "
-                    f"one of {list(_DECODABLE_TIMESTAMPS)} "
-                    "(sources.catalog.TABLE_SCHEMAS)"
-                )
+    for file in _parquet_files(path):
+        with pq.ParquetFile(file) as pf:
+            present = set(pf.schema_arrow.names)
+            leaves = {c.path: c for c in (pf.schema.column(i) for i in range(len(pf.schema)))}
+        missing = [f.name for f in declared if f.name not in present]
+        if missing:
+            raise ValueError(
+                f"table {name!r} at {file} lacks declared column(s) {missing} "
+                "(sources.catalog.TABLE_SCHEMAS)"
+            )
+        for f in declared:
+            if isinstance(f.dataType, TimestampType):
+                found = _encoding(leaves[f.name])
+                if found not in _DECODABLE_TIMESTAMPS:
+                    raise ValueError(
+                        f"table {name!r} at {file}: column {f.name!r} is {found}; "
+                        f"timestamp unit skew — a declared TIMESTAMP column must be "
+                        f"one of {list(_DECODABLE_TIMESTAMPS)} "
+                        "(sources.catalog.TABLE_SCHEMAS)"
+                    )
 
 
 def read_declared(spark: SparkSession, reader, name: str, path: str) -> DataFrame:
@@ -238,7 +240,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     beyond the declared ones are not read.  A missing path raises
     Spark's `PATH_NOT_FOUND`; a declared column missing from the files,
     or a declared TIMESTAMP column in an encoding the read cannot
-    decode, raises `ValueError` (footer check of the first file, on the
+    decode, raises `ValueError` (footer check of every file, on the
     driver).
 
     Timestamps: the engine (and all driver evidence) is built on

@@ -46,8 +46,9 @@ def read_events_stream(
     Same decode as the batch `sources.catalog.read_events`: the declared
     events schema behind the driver-side footer check
     (`catalog.read_declared`), so an undecodable `ts` encoding or a
-    missing column fails here with `ValueError`, and building the stream
-    runs no Spark job."""
+    missing column in any file present now fails here with `ValueError`,
+    and building the stream runs no Spark job.  Files that arrive after
+    the stream is built are not footer-checked."""
     reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
     return read_declared(spark, reader, "events", source_dir)
 

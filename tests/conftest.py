@@ -1,3 +1,8 @@
+"""Shared fixtures for the one test profile: `pytest tests/` runs every
+test, the degenerate-input, empty-table and property sweeps, the
+curation goldens and the sf0.01 legs included.  Only the opt-in scale
+probe and the protobuf-gated stream test may skip."""
+
 from __future__ import annotations
 
 import os
@@ -15,14 +20,6 @@ from bigdata_gamedb_etl_spark.sources.catalog import TABLE_NAMES  # noqa: E402
 #: tests default to the smallest SF for speed; override to harden.
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-#: The default profile runs every contract guard, every targeted
-#: regression test, every DuckDB parity twin and every registered
-#: query's build contract.  SPARK_GRAFT_FULL_SUITE=1 adds the fullsweep
-#: tier: the sf0.01 legs, the empty-table and degenerate-input sweeps,
-#: the property sweeps and the curation goldens (the pre-commit bar
-#: for operator changes).
-FULL_SUITE = os.environ.get("SPARK_GRAFT_FULL_SUITE") == "1"
-
 #: DuckDB's default memory limit is 80% of the machine's RAM, so a
 #: runaway oracle could get the whole test process killed.  Under this
 #: cap it raises DuckDB's OutOfMemoryException instead.
@@ -35,26 +32,6 @@ def duck_connect():
     con = duckdb.connect()
     con.execute(f"SET memory_limit='{DUCKDB_MEMORY_LIMIT}'")
     return con
-
-
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "fullsweep: sf0.01 legs, empty-table, degenerate-input and "
-        "property sweeps, curation goldens — skipped unless "
-        "SPARK_GRAFT_FULL_SUITE=1",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    if FULL_SUITE:
-        return
-    skip = pytest.mark.skip(
-        reason="fullsweep tier (set SPARK_GRAFT_FULL_SUITE=1)"
-    )
-    for item in items:
-        if item.get_closest_marker("fullsweep"):
-            item.add_marker(skip)
 
 
 @pytest.fixture(scope="session")

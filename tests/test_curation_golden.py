@@ -1,18 +1,13 @@
-"""Golden micro-fixtures for the round-6 curation operators —
-hand-computed expectations on crafted documents/embeddings.  The
-DuckDB oracles prove Spark and DuckDB agree; these prove they agree on
-the RIGHT answer (a shared misreading of the semantics would pass
-parity and fail here).
+"""Golden micro-fixtures for the curation operators — hand-computed
+expectations on crafted documents/embeddings.  The DuckDB oracles
+prove Spark and DuckDB agree; these prove they agree on the RIGHT
+answer (a shared misreading of the semantics would pass parity and
+fail here).
 """
 
 from __future__ import annotations
 
 import pytest
-
-#: The goldens re-pin value-level behavior that the default-tier
-#: oracle parity already checks, so they ride the fullsweep tier
-#: (SPARK_GRAFT_FULL_SUITE=1, the pre-commit bar for operator edits).
-pytestmark = pytest.mark.fullsweep
 
 from bigdata_gamedb_etl_spark.operators.dedup import dq_contamination_scorecard
 from bigdata_gamedb_etl_spark.operators.similarity import (

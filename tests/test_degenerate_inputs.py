@@ -87,7 +87,6 @@ def degenerate_sf_dir(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.fullsweep
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_query_survives_degenerate_corpus(name, spark, degenerate_sf_dir):
     df = all_queries()[name](spark, degenerate_sf_dir)
@@ -133,7 +132,6 @@ def degenerate_events_dir(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.fullsweep
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_query_survives_degenerate_events(
     name, spark, degenerate_events_dir

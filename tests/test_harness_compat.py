@@ -216,6 +216,32 @@ def test_quiet_verdict_labels_loaded_and_quiet_runs():
     assert _quiet_verdict({}, {})["verdict"] is None
 
 
+def test_prior_queries_compare_only_at_the_same_core_count(tmp_path, monkeypatch):
+    """Bench deltas divide by a prior record's timings, so the prior
+    must come from the same testdata AND the same core count: a
+    32-core record read on a smaller box is not a baseline."""
+    import json
+    import os
+
+    import bench
+
+    def detail(name, cpus):
+        path = tmp_path / name
+        path.write_text(json.dumps({
+            "testdata": {"hash": "h"},
+            "env": {"before": {"cpus": cpus}},
+            "queries": {"q": 1.5},
+        }))
+        return str(path)
+
+    live = os.cpu_count()
+    monkeypatch.setattr(bench, "DETAIL_FILE", detail("other.json", 32 if live != 32 else 4))
+    assert bench._prior_queries("h") == {}
+    monkeypatch.setattr(bench, "DETAIL_FILE", detail("live.json", live))
+    assert bench._prior_queries("h") == {"q": 1.5}
+    assert bench._prior_queries("other-hash") == {}
+
+
 def test_bench_tree_cpu_seconds_counts_self_and_children():
     """The CPU-ratio adjudication rule (BENCH_DETAIL.cpu_sec) stands on
     bench._best_of reading utime+stime over this process AND its

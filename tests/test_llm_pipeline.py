@@ -9,18 +9,11 @@ import pytest
 
 from bigdata_gamedb_etl_spark.operators import dedup, similarity
 
-#: The sf0.01 leg of every SF-parametrized invariant rides the
-#: fullsweep tier (the sf0.001 leg keeps each invariant pinned by
-#: default; SPARK_GRAFT_FULL_SUITE=1 restores the scale leg — the
-#: pre-commit bar for operator edits).
+#: Every SF-parametrized invariant runs at both test scales.
 SF_DIR_PATHS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
-SF_DIRS = [
-    SF_DIR_PATHS[0],
-    pytest.param(SF_DIR_PATHS[1], marks=pytest.mark.fullsweep),
-]
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_ann_lsh_recall_vs_exact(spark, sf):
     exact = [r["vec_id"] for r in similarity.sim_cosine_topk(spark, sf).collect()]
     ann = {r["vec_id"] for r in similarity.sim_ann_lsh_topk(spark, sf).collect()}
@@ -28,7 +21,7 @@ def test_ann_lsh_recall_vs_exact(spark, sf):
     assert recall >= 0.9, f"ANN LSH recall {recall} < 0.9 at {sf}"
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf):
     exact = {
         (r["d1"], r["d2"]): r["jaccard"]
@@ -88,7 +81,7 @@ def test_no_driver_collect_in_registered_query_modules():
         assert ".collect()" not in src, f"{mod.__name__} collects to the driver"
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_ivf_multiprobe_recall_dominates_single(spark, sf):
     """Multi-probe IVF shares sim_ivf_topk's deterministic codebook
     and probes a SUPERSET of its cells, so its scanned candidate set
@@ -197,7 +190,7 @@ def test_no_round_on_double_average_policy():
     )
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_sq8_recall_vs_exact(spark, sf):
     exact = [r["vec_id"] for r in similarity.sim_cosine_topk(spark, sf).collect()]
     sq8 = {r["vec_id"] for r in similarity.sim_sq8_topk(spark, sf).collect()}
@@ -205,7 +198,7 @@ def test_sq8_recall_vs_exact(spark, sf):
     assert recall >= 0.9, f"SQ8 recall {recall} < 0.9 at {sf}"
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_cm_sketch_estimates_bound_exact_counts(spark, sf):
     """Count-min guarantees: est >= exact always, and with d=4 rows of
     width w the overcount stays within a few multiples of N/w for
@@ -333,7 +326,7 @@ def test_pagerank_invariants(spark):
             assert rank[e["src"]] == rank[e["dst"]]
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_ivf_pq_composed_recall_and_probe_discipline(spark, sf):
     """The composed IVFPQ tier must stay a usable ANN (recall@20 ≥ 0.3
     vs exact; measured 0.40 / 0.70 at the two SFs, 0.45 at sf0.1) and
@@ -359,7 +352,7 @@ def test_ivf_pq_composed_recall_and_probe_discipline(spark, sf):
             assert r["approx_cosine"] == pq_scores[r["vec_id"]], r
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_ivfpq_residual_recall_and_probe_discipline(spark, sf):
     """Residual IVFADC (r12): recall@20 vs exact must be ≥ the
     composed no-residual tier's at the same SF (r13 32×2 setting:
@@ -388,7 +381,7 @@ def test_ivfpq_residual_recall_and_probe_discipline(spark, sf):
         assert [tuple(r) for r in rows] == [tuple(r) for r in again]
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_pq_recall_vs_exact(spark, sf):
     """PQ-ADC top-k must overlap the exact cosine top-k: PQ_M
     subspaces × 16 codes on quantized-unit 64-dim vectors — recall@20
@@ -1051,7 +1044,7 @@ def test_leakage_safe_split_no_cluster_spans_splits(spark, sf_dir):
     assert report == doc_level
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_lsh_cluster_assign_refines_exact_clusters(spark, sf):
     """Every LSH edge is exact-verified at >= the same Jaccard
     threshold, so LSH clusters must REFINE the exact clusters: each
@@ -1061,7 +1054,7 @@ def test_lsh_cluster_assign_refines_exact_clusters(spark, sf):
     being inactive (the exact tier counts `common` over CAPPED
     postings, LSH verification over full sets) — which
     test_shingle_df_cap_is_inactive_at_test_sf asserts for these
-    SF_DIRS."""
+    SF_DIR_PATHS."""
     lsh = {
         r["doc_id"]: r["cluster_id"]
         for r in dedup.dedup_lsh_cluster_assign(spark, sf).collect()
@@ -1383,7 +1376,7 @@ def test_lsh_recall_by_jaccard_consistent_with_ladder(spark):
         assert seq == sorted(seq), (jb, seq)
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_ivf_int_recall_vs_exact(spark, sf):
     """The integer-Lloyd IVF full-train tier (oracle-checked
     end-to-end, codebook included) must stay a usable ANN: recall@TOP_K
@@ -1402,7 +1395,7 @@ def test_ivf_int_recall_vs_exact(spark, sf):
     assert recall >= 0.5, f"integer-IVF recall {recall} < 0.5 at {sf}"
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_hll_mulmod_accuracy_and_state(spark, sf):
     """The hand-rolled engine-reproducible HLL: estimate within 5% of
     the exact per-type distinct-user count (with m=4096 registers and
@@ -1444,7 +1437,7 @@ def test_hll_mulmod_accuracy_and_state(spark, sf):
         assert base + used <= r["s_scaled"] <= base + used * empty_term // 2
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_substring_spans_invariants(spark, sf):
     """Exact-substring cut spans: per-doc spans are sorted, pairwise
     separated by more than the merge gap (else they'd have merged),
@@ -1495,7 +1488,7 @@ def test_substring_spans_invariants(spark, sf):
         assert (r["doc_id"], r["span_start"]) in dup_seed_positions
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_prefix_filter_equals_inverted_index(spark, sf):
     """Prefix filtering is exact by theorem — its output must equal
     the df-capped inverted-index variant row-for-row at test SFs
@@ -1512,7 +1505,7 @@ def test_prefix_filter_equals_inverted_index(spark, sf):
     assert inv == pref
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_cdc_chunks_partition_the_corpus(spark, sf):
     """CDC chunks must PARTITION every non-empty document: the
     report's total_tokens equals the exact corpus token count, stored
@@ -1538,7 +1531,7 @@ def test_cdc_chunks_partition_the_corpus(spark, sf):
     assert 0.0 <= r["saved_token_share"] < 1.0
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_cut_spans_emit_conserves_tokens(spark, sf):
     """The cut-applied emit must agree with the span listing exactly:
     every document appears once, kept + removed == original, and each
@@ -1569,7 +1562,7 @@ def test_cut_spans_emit_conserves_tokens(spark, sf):
         assert n_text == r["kept_tokens"]
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_kcore_converged_and_nested_in_components(spark, sf):
     """k-core invariants: the fixed peel-round count REACHED the fixed
     point (every survivor keeps ≥ k neighbors inside the core — false
@@ -1598,7 +1591,7 @@ def test_kcore_converged_and_nested_in_components(spark, sf):
         assert r["core_degree"] <= raw_deg[r["doc_id"]]
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_snm_complements_first_word_blocking(spark, sf):
     """SNM invariants: every emitted pair is within EDITDIST_MAX and
     within SNM_W positions of per-shard sort order (gap bound), pairs
@@ -1627,7 +1620,7 @@ def test_snm_complements_first_word_blocking(spark, sf):
             assert (r["name_a"], r["name_b"]) in block
 
 
-@pytest.mark.parametrize("sf", SF_DIRS)
+@pytest.mark.parametrize("sf", SF_DIR_PATHS)
 def test_temperature_mixture_flattens_the_head(spark, sf):
     """α=0.5 temperature invariants: kept ≤ raw per language, the
     target allocation never exceeds the corpus (Σ target ≤ total with

@@ -5,7 +5,6 @@ reimplementation of the documented rules on arbitrary inputs.
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -327,7 +326,6 @@ def test_pmi_lift_decimal_path_survives_int64_overflow(spark):
     assert dlift == lift
 
 
-@pytest.mark.fullsweep
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.text(
@@ -374,7 +372,6 @@ def test_char_entropy_matches_python(spark, text):
     assert row["entropy"] == expected
 
 
-@pytest.mark.fullsweep
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(
@@ -463,7 +460,6 @@ def test_money_columns_are_fixed_point():
             assert err < 1e-6, f"{sf}/{tbl}.{col} not 2dp fixed-point: {err}"
 
 
-@pytest.mark.fullsweep
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     st.lists(

@@ -51,7 +51,6 @@ def empty_sf_dir(spark, tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.fullsweep
 def test_all_queries_survive_empty_tables(spark, empty_sf_dir):
     failures = []
     for name, fn in sorted(all_queries().items()):

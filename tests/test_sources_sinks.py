@@ -66,10 +66,21 @@ def test_table_missing_declared_column_fails_fast(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    keys = pa.array([0, 1], pa.int32())
     path = str(tmp_path / "region.parquet")
-    pq.write_table(pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}), path)
+    pq.write_table(pa.table({"r_regionkey": keys}), path)
     with pytest.raises(ValueError, match=r"'region'.*region\.parquet.*\['r_name'\]"):
         table(spark, str(tmp_path), "region")
+
+    # every file's footer is checked, not just the first one's
+    d = tmp_path / "dir" / "region.parquet"
+    d.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"r_regionkey": keys, "r_name": ["A", "B"]}), str(d / "a.parquet")
+    )
+    pq.write_table(pa.table({"r_regionkey": keys}), str(d / "b.parquet"))
+    with pytest.raises(ValueError, match=r"'region'.*b\.parquet.*\['r_name'\]"):
+        table(spark, str(d.parent), "region")
 
 
 def test_table_rejects_nanos_timestamp_on_the_driver(spark, sf_dir, tmp_path):

@@ -389,6 +389,28 @@ def test_unit_skew_guard_fires_on_unknown_encoding(spark, tmp_path):
                 read()
 
 
+def test_footer_check_reads_every_file_of_a_directory(spark, tmp_path):
+    """A directory whose first file decodes but whose second is NANOS
+    must fail on the driver, naming the second file, from `table`,
+    `read_events` and `read_events_stream` alike — not build cleanly
+    and then fail inside an executor."""
+    import shutil
+
+    good = _write_events_fixture(tmp_path, "ev_us", "us")
+    bad = _write_events_fixture(tmp_path, "ev_ns", "ns")
+    mixed = tmp_path / "mixed" / "events.parquet"
+    mixed.mkdir(parents=True)
+    shutil.copy(os.path.join(good, "events.parquet"), mixed / "a.parquet")
+    shutil.copy(os.path.join(bad, "events.parquet"), mixed / "b.parquet")
+    for read in (
+        lambda: table(spark, str(mixed.parent), "events"),
+        lambda: read_events(spark, str(mixed)),
+        lambda: streaming.read_events_stream(spark, str(mixed)),
+    ):
+        with pytest.raises(ValueError, match=r"'events'.*b\.parquet.*unit skew"):
+            read()
+
+
 def _has_protobuf() -> bool:
     try:
         import google.protobuf  # noqa: F401
