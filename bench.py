@@ -287,10 +287,13 @@ def _best_of(run, n: int) -> tuple[list[float], list[float]]:
     is a rounding error; and the ledger keeps a process that exits
     after it was sampled, so a delta is never negative.  Callers report
     the min of each list independently: the first call carries
-    Catalyst optimization and Janino codegen, which amortize to nothing
-    at scale, and when it happens to win on wall its CPU would still
-    include that JIT work — min-of-runs is the steady-state lower bound
-    on both."""
+    Catalyst optimization, Janino codegen and the JIT warm-up of the
+    fresh classes, and when it happens to win on wall its CPU would
+    still include that work — min-of-runs is the steady-state lower
+    bound on both.  Later calls skip codegen only while the session's
+    codegen cache holds every class the query generates
+    (`session.ENGINE_CONFS` sizes it for the whole registry); they
+    still pay Catalyst planning every call."""
     ledger = TreeMonitor()
     walls: list[float] = []
     cpus: list[float] = []
@@ -644,8 +647,9 @@ def main(argv: list[str]) -> None:
     env_before = _env_capture()
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm the JVM/codegen path once so per-query timings aren't
-    # dominated by first-action startup cost
+    # warm the JVM once so per-query timings aren't dominated by
+    # first-action startup cost; each query's own codegen is warmed by
+    # its first best-of call, whose classes the codegen cache then keeps
     _force(queries["tpch_q1_pricing_summary"](spark, SF_DIR))
     if argv:
         run_probe(spark, queries, env_before)

@@ -1424,9 +1424,10 @@ def _materialize_iter(
     and removes it at interpreter exit; a dir the user set is never
     removed.  On that path the files of `supersedes` (the barrier this
     one replaces, no longer read once this one is written) are deleted
-    here: Spark's cleaner removes checkpoint files only at GC time and
-    only with spark.cleaner.referenceTracking.cleanCheckpoints set, so
-    a loop would otherwise leak one checkpoint per round."""
+    here through `_release_ckpt`: Spark's cleaner removes checkpoint
+    files only at GC time and only with
+    spark.cleaner.referenceTracking.cleanCheckpoints set, so a loop
+    would otherwise leak one checkpoint per round."""
     obs = Observation() if observed else None
     if obs is not None:
         df = df.observe(
@@ -1442,33 +1443,37 @@ def _materialize_iter(
             atexit.register(shutil.rmtree, d, ignore_errors=True)
             sc.setCheckpointDir(d)
         out = df.checkpoint(eager=True)
-        if supersedes is not None and (old := _ckpt_file(supersedes)):
-            shutil.rmtree(old, ignore_errors=True)
+        if supersedes is not None:
+            _release_ckpt(supersedes)
     if obs is None:
         return out
     vals = obs.get
     return out, tuple(vals[f"v{i}"] for i in range(len(observed)))
 
 
-def _ckpt_file(df: DataFrame) -> str | None:
-    """The concrete checkpoint path backing an eagerly `checkpoint()`ed
-    DataFrame: its analyzed plan is a LogicalRDD whose RDD reports
-    `getCheckpointFile`.  Exact ownership, so rotation never deletes
-    the live checkpoint of a concurrent query in the same session.
-    Returns a local-fs path, or None off local fs / not checkpointed."""
+def _release_ckpt(df: DataFrame) -> None:
+    """Delete the checkpoint files behind a barrier's frame, once
+    nothing reads it: the barrier calls this for the frame it
+    supersedes, and a loop for a barrier its result no longer reads.
+    The path comes from the frame itself (its analyzed plan is a
+    LogicalRDD whose RDD reports `getCheckpointFile`): exact ownership,
+    so this never deletes the live checkpoint of a concurrent query in
+    the same session.  A no-op for a local checkpoint and off the
+    local fs."""
     try:
         opt = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
         if not opt.isDefined():
-            return None
+            return
         p = opt.get()
     except Exception:
-        return None
+        return
     if p.startswith("file:"):
         p = p[len("file:") :]
         while p.startswith("//"):
             p = p[1:]
-        return p
-    return None if "://" in p else p
+    elif "://" in p:
+        return
+    shutil.rmtree(p, ignore_errors=True)
 
 
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1553,6 +1558,9 @@ def _min_label_components(
         )
     if stats is not None:
         stats["rounds"] = rounds
+    # the result reads only the final labels, so the edge list's files
+    # can go now; the labels' own files stay for as long as it is read.
+    _release_ckpt(edges)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     ).orderBy("doc_id")

@@ -14,6 +14,13 @@ worked around (SURVEY.md §0).  The new engine flips all of that:
 - Shuffle partitions fixed at ``DEFAULT_SHUFFLE_PARTITIONS`` unless the
   caller passes ``shuffle_partitions`` (the tests and perfbench pass 8);
   AQE coalesces either way.
+- Generated-code cache sized to the registry's working set: a sweep of
+  all registered queries at sf0.001 runs about 2,400 Janino compiles
+  and one `perfbench` `query` pass about 230, so Spark's 100-entry
+  default evicted and recompiled them on every rerun.  Generated class
+  names omit the codegen stage id, which AQE assigns in a
+  timing-dependent order, so a stage planned under a new id still hits
+  the cache.
 """
 
 from __future__ import annotations
@@ -45,6 +52,16 @@ ENGINE_CONFS: dict[str, str] = {
     # here so the plan contract (tests/test_plan_quality.py) doesn't
     # depend on upstream defaults.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # Static conf, read once at the JVM's first codegen: a sweep of the
+    # whole registry at sf0.001 runs about 2,400 compiles, so the
+    # 100-entry default made every rerun recompile its queries.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # AQE numbers a query's codegen stages in the order its stages get
+    # planned, which varies with task timing; with the stage id in the
+    # generated class name an identical stage compiled again under each
+    # new id (82 → 26 compiles on a second registry sweep).  The id
+    # stays in the plan's `*(n)` markers and the generated source.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

@@ -999,3 +999,41 @@ def test_single_row_totals_are_broadcast_not_cartesian(spark, sf_dir):
         assert "BroadcastNestedLoopJoin" in plan, (
             f"{q.__name__} single-row attach is not broadcast"
         )
+
+
+#: The benchmark's `query` workload: one query per operator module plus
+#: the figure sink's query, listed here so the test does not depend on
+#: the benchmark package.
+QUERY_WORKLOAD = [
+    "tpch_q1_pricing_summary", "tpch_q18_large_volume", "a1_word_revenue",
+    "j1_region_revenue", "w4_daily_event_rollup", "sql_word_price_stats",
+    "mart_supplier_summary", "ga2_cube_segment_priority", "asof_purchase_click",
+    "dedup_cluster_assign", "sim_cosine_topk", "text_stats",
+    "pipeline_train_val_test", "mm_feature_extract", "a3_year_trend",
+]
+
+
+def test_warm_rerun_compiles_no_code(spark, sf_dir):
+    """A rerun of warm queries must find every generated class in the
+    codegen cache.  A pass over these queries runs about 230 Janino
+    compiles; with Spark's 100-entry default cache each rerun evicted
+    and recompiled most of them.  The check is on the compile count
+    (CodegenMetrics), not on a timing."""
+    from bigdata_gamedb_etl_spark.registry import all_queries
+    from bigdata_gamedb_etl_spark.session import ENGINE_CONFS
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == ENGINE_CONFS[key]
+    queries = all_queries()
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run_all():
+        for name in QUERY_WORKLOAD:
+            queries[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+
+    run_all()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run_all()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0

@@ -219,14 +219,52 @@ def test_cluster_assign_reliable_checkpoint_path(spark, sf_dir):
     assert reliable == baseline
     # superseded per-iteration label checkpoints must be deleted as the
     # loop advances (Spark's own cleaner is GC-driven and off by
-    # default) — only the edge list, the final labels, and at most the
-    # in-flight iteration's files may remain, not one per iteration.
+    # default) — not one per iteration may remain; the exact count is
+    # pinned by test_cluster_assign_reliable_checkpoint_keeps_only_final_labels.
     local = _ckpt_local_dir(spark)
     assert local is not None
     remaining = [e for e in os.listdir(local) if e.startswith("rdd-")]
     assert len(remaining) <= 3, (
         f"checkpoint dir leaks superseded iterations: {sorted(remaining)}"
     )
+
+
+def test_cluster_assign_reliable_checkpoint_keeps_only_final_labels(
+    spark, sf_dir, duck
+):
+    """On the reliable path each min-label run leaves only its final
+    labels' checkpoint behind: the loop deletes its edge list's files
+    once the labels stop reading it.  Three runs in one session add
+    exactly three `rdd-*` dirs and return the oracle's components."""
+    from bigdata_gamedb_etl_spark.operators.dedup import (
+        RELIABLE_CKPT_CONF,
+        dedup_cluster_assign,
+    )
+    from bigdata_gamedb_etl_spark.registry import all_oracle
+
+    def rdd_dirs() -> set[str]:
+        local = _ckpt_local_dir(spark)
+        if local is None:
+            return set()
+        return {e for e in os.listdir(local) if e.startswith("rdd-")}
+
+    expected = sorted(
+        tuple(int(v) for v in r)
+        for r in duck.execute(all_oracle()["dedup_cluster_assign"]).fetchall()
+    )
+    before = rdd_dirs()
+    spark.conf.set(RELIABLE_CKPT_CONF, "true")
+    try:
+        runs = [
+            sorted(tuple(r) for r in dedup_cluster_assign(spark, sf_dir).collect())
+            for _ in range(3)
+        ]
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
+    assert expected
+    assert runs == [expected] * 3
+    added = rdd_dirs() - before
+    assert len(added) == 3, f"checkpoint dirs left behind: {sorted(added)}"
 
 
 def test_graph_queries_reliable_checkpoint_path(spark, sf_dir):
